@@ -14,4 +14,11 @@ per-tile raster math runs inside grouped pandas UDFs as single-batch numpy,
 sharing one kernel library (`lidartree_spark.kernels`) with the test oracle.
 """
 
+import os as _os
+
 __version__ = "0.1.0"
+
+# Only PySpark's Python workers carry this variable; the driver stays as is.
+if "PYTHON_WORKER_FACTORY_SECRET" in _os.environ:
+    from lidartree_spark import pyworker as _pyworker
+    _pyworker.install()

@@ -1,4 +1,4 @@
-"""Minimal ESRI Shapefile (.shp + .dbf) codec — the vector twin of the
+"""Minimal ESRI Shapefile (.shp + .shx + .dbf) codec — the vector twin of the
 GeoTIFF raster source.
 
 The reference's field-inventory inputs (tree positions for
@@ -12,9 +12,9 @@ scripts. Written from the public "ESRI Shapefile Technical Description"
 Supported surface (loud-fail beyond it): shape types Point (1),
 PointZ (11), PointM (21) and Polygon (5); attributes via the .dbf
 sidecar (C character, N/F numeric, L logical, D date-as-string columns).
-Polylines, multipatch and the rarely-used .shx-dependent access paths
-raise NotImplementedError (records are walked sequentially; .shx is not
-required).
+Polylines and multipatch raise NotImplementedError. The reader walks
+records sequentially and needs no .shx; the writer emits one, because GDAL,
+sf and QGIS refuse a .shp without its index.
 
 Inventories are dimension-sized (thousands of trees, not billions), so
 the parse is driver-side and the result enters Spark via
@@ -46,12 +46,14 @@ _NAMES = {0: "Null", 1: "Point", 3: "PolyLine", 5: "Polygon",
 def _ring_to_wkt(points: np.ndarray, parts: list[int]) -> str:
     # repr = shortest round-trip decimal: %g's 6 significant digits
     # collapse UTM northings (4500000.75 -> 4.5e+06), degenerating every
-    # real-world plot boundary
+    # real-world plot boundary. float() first: NumPy >= 2 scalars repr as
+    # 'np.float64(...)'
     rings = []
     bounds = parts + [len(points)]
     for a, b in zip(bounds[:-1], bounds[1:]):
         ring = points[a:b]
-        rings.append("(" + ", ".join(f"{x!r} {y!r}" for x, y in ring)
+        rings.append("(" + ", ".join(f"{float(x)!r} {float(y)!r}"
+                                     for x, y in ring)
                      + ")")
     return "POLYGON (" + ", ".join(rings) + ")"
 
@@ -236,7 +238,11 @@ def _dbf_bytes(attrs: pd.DataFrame) -> bytes:
                     txt = str(int(v))
                 else:
                     txt = f"{float(v):.{fdec}f}"
-                out += txt.rjust(flen)[:flen].encode("ascii")
+                if len(txt) > flen:
+                    raise ValueError(
+                        f"dbf field {orig!r}: {txt} is wider than its "
+                        f"{flen}-char numeric field")
+                out += txt.rjust(flen).encode("ascii")
             elif ftype == "L":
                 out += (b"T" if v else b"F")
             else:
@@ -247,9 +253,10 @@ def _dbf_bytes(attrs: pd.DataFrame) -> bytes:
 
 
 def write_shapefile(df: pd.DataFrame, path: str):
-    """DataFrame -> .shp (+ .dbf when attribute columns exist). Points
-    when (x, y [, z]) columns are present (PointZ if z), polygons when a
-    `wkt` column is (POLYGON strings, outer ring only)."""
+    """DataFrame -> .shp + .shx (+ .dbf when attribute columns exist).
+    Points when (x, y [, z]) columns are present (PointZ if z), polygons
+    when a `wkt` column is (POLYGON strings, outer ring only). Non-finite
+    x/y coordinates are rejected, naming the offending rows."""
     from lidartree_spark.kernels.geometry import parse_wkt_polygon
 
     if len(df) == 0:
@@ -271,12 +278,16 @@ def write_shapefile(df: pd.DataFrame, path: str):
             content += np.ascontiguousarray(ring,
                                             dtype="<f8").tobytes()
             records.append(content)
+        bad = [not np.isfinite(r).all() for r in rings]
         xs = np.concatenate([r[:, 0] for r in rings])
         ys = np.concatenate([r[:, 1] for r in rings])
     else:
         has_z = "z" in df.columns and df["z"].notna().any()
         stype = _SHAPE_POINTZ if has_z else _SHAPE_POINT
         attr_cols = [c for c in df.columns if c not in ("x", "y", "z")]
+        xs = df["x"].to_numpy(dtype=np.float64)
+        ys = df["y"].to_numpy(dtype=np.float64)
+        bad = ~(np.isfinite(xs) & np.isfinite(ys))
         for _, row in df.iterrows():
             content = struct.pack("<i3d" if has_z else "<i2d", stype,
                                   *( (row["x"], row["y"],
@@ -285,19 +296,29 @@ def write_shapefile(df: pd.DataFrame, path: str):
             if has_z:
                 content += struct.pack("<d", 0.0)  # measure
             records.append(content)
-        xs, ys = df["x"].to_numpy(), df["y"].to_numpy()
+    if np.any(bad):
+        rows = list(df.index[np.asarray(bad)])
+        raise ValueError(
+            f"write_shapefile: NaN or infinite x/y in {len(rows)} row(s), "
+            f"index {rows[:10]}{' ...' if len(rows) > 10 else ''}")
 
-    body = b""
+    # .shx: one (offset, content length) pair per record, in 16-bit words
+    body, index = bytearray(), bytearray()
     for i, content in enumerate(records):
+        index += struct.pack(">2i", (100 + len(body)) // 2, len(content) // 2)
         body += struct.pack(">2i", i + 1, len(content) // 2) + content
-    flen = (100 + len(body)) // 2
-    hdr = struct.pack(">i5i i", 9994, 0, 0, 0, 0, 0, flen)
-    hdr += struct.pack("<2i", 1000, stype)
-    hdr += struct.pack("<4d", float(xs.min()), float(ys.min()),
-                       float(xs.max()), float(ys.max()))
-    hdr += struct.pack("<4d", 0.0, 0.0, 0.0, 0.0)  # z/m ranges
+    tail = struct.pack("<2i4d4d", 1000, stype, float(xs.min()),
+                       float(ys.min()), float(xs.max()), float(ys.max()),
+                       0.0, 0.0, 0.0, 0.0)  # z/m ranges
+
+    def header(nbytes: int) -> bytes:
+        return struct.pack(">7i", 9994, 0, 0, 0, 0, 0, nbytes // 2) + tail
+
+    stem = os.path.splitext(path)[0]
     with open(path, "wb") as f:
-        f.write(hdr + body)
+        f.write(header(100 + len(body)) + body)
+    with open(stem + ".shx", "wb") as f:
+        f.write(header(100 + len(index)) + index)
     if attr_cols:
-        with open(os.path.splitext(path)[0] + ".dbf", "wb") as f:
+        with open(stem + ".dbf", "wb") as f:
             f.write(_dbf_bytes(df[attr_cols].reset_index(drop=True)))

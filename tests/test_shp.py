@@ -113,6 +113,77 @@ def test_empty_dataframe_raises_clearly(tmp_path):
                         str(tmp_path / "e.shp"))
 
 
+def _shx_pairs(stem):
+    with open(stem + ".shp", "rb") as f:
+        shp = f.read()
+    with open(stem + ".shx", "rb") as f:
+        shx = f.read()
+    return shp, shx
+
+
+@pytest.mark.parametrize("layer", ["pointz", "polygon"])
+def test_shx_index_points_at_every_shp_record(tmp_path, layer):
+    if layer == "pointz":
+        df = pd.DataFrame({"x": [10.25, 11.5, 40.75], "y": [5.0, 6.25, 9.5],
+                           "z": [18.5, 22.0, 7.25]})
+    else:
+        df = pd.DataFrame({"wkt": [
+            "POLYGON ((0 0, 32 0, 32 32, 0 32, 0 0))",
+            "POLYGON ((64 10, 118 64, 64 118, 10 64, 64 10))",
+            "POLYGON ((1 1, 2 1, 2 2, 1 1))"]})
+    stem = str(tmp_path / layer)
+    write_shapefile(df, stem + ".shp")
+    shp, shx = _shx_pairs(stem)
+    # same header as the .shp except the file length (16-bit words)
+    assert shx[:24] == shp[:24]
+    assert struct.unpack_from(">i", shx, 24)[0] * 2 == len(shx)
+    assert shx[28:100] == shp[28:100]
+    pairs = [struct.unpack_from(">2i", shx, off)
+             for off in range(100, len(shx), 8)]
+    assert len(pairs) == len(df)
+    pos = 100
+    for recno, (offset_words, content_words) in enumerate(pairs, 1):
+        assert offset_words * 2 == pos
+        assert struct.unpack_from(">2i", shp, pos) == (recno, content_words)
+        pos += 8 + 2 * content_words
+    assert pos == len(shp)
+
+
+def test_ring_to_wkt_writes_plain_floats():
+    """NumPy >= 2 scalars repr as 'np.float64(1.5)'; the WKT must not."""
+    from lidartree_spark.shp import _ring_to_wkt
+
+    class Scalar(float):
+        def __repr__(self):
+            return f"np.float64({float(self)!r})"
+
+    pts = np.array([[Scalar(0.5), Scalar(4500000.75)],
+                    [Scalar(1.5), Scalar(4500001.0)],
+                    [Scalar(0.5), Scalar(4500000.75)]], dtype=object)
+    assert _ring_to_wkt(pts, [0]) == (
+        "POLYGON ((0.5 4500000.75, 1.5 4500001.0, 0.5 4500000.75))")
+
+
+@pytest.mark.parametrize("col", [
+    pd.Series([1.0, 1e13], name="area"),              # 21 chars at .6f
+    pd.Series([0, -2**63], dtype=np.int64, name="n"),  # 20 chars
+])
+def test_dbf_numeric_overflow_raises_instead_of_truncating(tmp_path, col):
+    df = pd.DataFrame({"x": [1.0, 2.0], "y": [3.0, 4.0], col.name: col})
+    with pytest.raises(ValueError, match=f"{col.name}.*19-char"):
+        write_shapefile(df, str(tmp_path / "wide.shp"))
+
+
+def test_nan_coordinates_rejected_naming_rows(tmp_path):
+    df = pd.DataFrame({"x": [1.0, np.nan, 3.0, 4.0],
+                       "y": [1.0, 2.0, 3.0, np.inf]},
+                      index=[10, 11, 12, 13])
+    p = tmp_path / "nan.shp"
+    with pytest.raises(ValueError, match=r"2 row\(s\), index \[11, 13\]"):
+        write_shapefile(df, str(p))
+    assert not p.exists()
+
+
 def test_unsupported_shape_type_fails_loudly(tmp_path):
     hdr = struct.pack(">i5ii", 9994, 0, 0, 0, 0, 0, 50)
     hdr += struct.pack("<2i", 1000, 3)  # PolyLine
