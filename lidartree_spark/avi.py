@@ -4,9 +4,8 @@ Real spec-compliant AVI files — RIFF('AVI ') with LIST(hdrl){avih,
 LIST(strl){strh,strf}} + LIST(movi){00dc...} — where every frame payload is
 a baseline JPEG from lidartree_spark.jpeg. Grayscale frames; stdlib struct
 + numpy only (no ffmpeg/pyav in this environment; same motivation as the
-WAV and PNG codecs). This replaces the FakeDecoder video stand-in for
-fmt == "avi" (operators/multimodal.py); mp4 (H.264) remains the one
-documented stub, since a from-scratch H.264 decoder is out of scope.
+WAV and PNG codecs). It is the decoder behind fmt == "avi"
+(operators/multimodal.video_frame_sample).
 
 The writer emits the fields players actually read (dwMicroSecPerFrame,
 frame count, dimensions, 'MJPG' fourcc); the reader only trusts the movi

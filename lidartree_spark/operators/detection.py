@@ -34,6 +34,18 @@ DEFAULT_PARAMS = dict(
 )
 
 
+def _segment_batch(pdf: pd.DataFrame, p: dict):
+    """Decode and segment every tile of one Arrow batch, yielding
+    (row, tree_segmentation output): the per-tile step detect_trees and
+    segment_layers share."""
+    from lidartree_spark.codecs import decode_tile
+    from lidartree_spark.kernels.segmentation import tree_segmentation
+    kw = {k: p[k] for k in DEFAULT_PARAMS}
+    for rec in pdf.itertuples(index=False):
+        yield rec, tree_segmentation(
+            decode_tile(rec.bytes, rec.fmt, rec.w, rec.h), **kw)
+
+
 def detect_trees(tiles: DataFrame, params: dict | None = None,
                  crown: bool = False) -> DataFrame:
     """tiles -> tree rows (tree_detection LAS/SpatRaster branch semantics,
@@ -45,21 +57,12 @@ def detect_trees(tiles: DataFrame, params: dict | None = None,
     cols = ["image_id", "bytes", "w", "h", "fmt"] + (["pad"] if padded else [])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        from lidartree_spark.codecs import decode_tile
         from lidartree_spark.generator import parse_tile_id, tile_origin
         from lidartree_spark.kernels.extraction import tree_extraction
-        from lidartree_spark.kernels.segmentation import tree_segmentation
         res = p["res"]
         for pdf in batches:
             out = []
-            for rec in pdf.itertuples(index=False):
-                chm = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
-                seg = tree_segmentation(
-                    chm, res=res, nl_filter=p["nl_filter"],
-                    nl_size=p["nl_size"], sigma=p["sigma"],
-                    max_width=p["max_width"], hmin=p["hmin"], dmin=p["dmin"],
-                    dprop=p["dprop"], prop=p["prop"], min_value=p["min_value"])
+            for rec, seg in _segment_batch(pdf, p):
                 row, col = parse_tile_id(rec.image_id)
                 pad = int(getattr(rec, "pad", 0))
                 w_core, h_core = rec.w - 2 * pad, rec.h - 2 * pad
@@ -94,18 +97,10 @@ def segment_layers(tiles: DataFrame, params: dict | None = None) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
-        from lidartree_spark.codecs import decode_tile, encode_tile
-        from lidartree_spark.kernels.segmentation import tree_segmentation
+        from lidartree_spark.codecs import encode_tile
         for pdf in batches:
             out = []
-            for rec in pdf.itertuples(index=False):
-                chm = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
-                seg = tree_segmentation(
-                    chm, res=p["res"], nl_filter=p["nl_filter"],
-                    nl_size=p["nl_size"], sigma=p["sigma"],
-                    max_width=p["max_width"], hmin=p["hmin"], dmin=p["dmin"],
-                    dprop=p["dprop"], prop=p["prop"],
-                    min_value=p["min_value"])
+            for rec, seg in _segment_batch(pdf, p):
                 for name in ("local_maxima", "segments_id", "filled_dem",
                              "smoothed_dem"):
                     arr = np.asarray(seg[name], dtype=np.float32)

@@ -10,20 +10,11 @@ signatures) is real and tested. Format decoders:
 - fmt == "wav"     -> REAL RIFF/WAVE PCM16 parsing (decode_wav_pcm16 below)
 - fmt == "avi"     -> REAL RIFF/AVI Motion-JPEG (lidartree_spark.avi; each
   frame is a baseline JPEG)
-- fmt == "mp4"     -> REAL ISO-BMFF / MP4 (lidartree_spark.mp4: full box
-  tree + stsd/stts/stsc/stsz/stco|co64 sample table). Sample codecs that
-  decode: 'jpeg' (Motion-JPEG) and 'avc1' H.264 in three Baseline subsets
-  (lidartree_spark.h264 — real NAL/EBSP/Exp-Golomb/slice syntax): lossless
-  all-I_PCM, entropy-coded CAVLC Intra_16x16, and entropy-coded CAVLC
-  I_NxN (per-4x4 intra, all nine prediction modes; h264_cavlc.py holds
-  the shared residual engine). CABAC and inter slices raise a specific
-  NotImplementedError.
 
-No stub decoders remain (STUB_FORMATS is empty); `FakeDecoder` survives
-only as the deterministic pixel/sample SOURCE for synthetic_media — i.e. a
-data generator, never a decode path. Downstream ops (resize, feature
-extraction, frame sampling, RMS energy) are REAL numpy implementations
-over whatever the decode stage yields.
+Any other fmt raises. `FakeDecoder` is only the deterministic pixel/sample
+SOURCE for synthetic_media — i.e. a data generator, never a decode path.
+Downstream ops (resize, feature extraction, frame sampling, RMS energy) are
+REAL numpy implementations over whatever the decode stage yields.
 """
 
 from __future__ import annotations
@@ -39,9 +30,6 @@ from pyspark.sql import DataFrame
 MEDIA_SCHEMA = ("media_id string, kind string, bytes binary, fmt string, "
                 "width int, height int, channels int, sample_rate int, "
                 "n_frames int")
-
-STUB_FORMATS: set[str] = set()  # every recognized format decodes for real
-
 
 def encode_wav_pcm16(samples: np.ndarray, sample_rate: int) -> bytes:
     """Real RIFF/WAVE, PCM16 mono: float [-1, 1] -> standard .wav bytes."""
@@ -105,7 +93,7 @@ class FakeDecoder:
             .astype(np.float32)
 
 
-def decode_image_array(rec, strict: bool = False) -> np.ndarray:
+def decode_image_array(rec) -> np.ndarray:
     if rec.fmt == "raw_f32":
         from lidartree_spark.codecs import decode_tile
         return decode_tile(rec.bytes, "raw_f32", rec.width, rec.height)[..., None]
@@ -116,11 +104,9 @@ def decode_image_array(rec, strict: bool = False) -> np.ndarray:
         from lidartree_spark.jpeg import decode_jpeg_gray
         return (decode_jpeg_gray(rec.bytes).astype(np.float32)
                 / 255.0)[..., None]
-    if rec.fmt in ("avi", "mp4"):
-        raise ValueError(f"{rec.fmt!r} is a video container — use "
+    if rec.fmt == "avi":
+        raise ValueError("'avi' is a video container — use "
                          "video_frame_sample")
-    if strict:
-        raise NotImplementedError(f"no decoder for media fmt {rec.fmt!r}")
     raise ValueError(f"unknown media fmt {rec.fmt!r}")
 
 
@@ -241,10 +227,6 @@ def video_frame_sample(media: DataFrame, every: int = 4,
                     from lidartree_spark.avi import decode_avi_mjpeg
                     frames = (decode_avi_mjpeg(rec.bytes)
                               .astype(np.float32) / 255.0)
-                elif rec.fmt == "mp4":
-                    from lidartree_spark.mp4 import decode_mp4
-                    frames = (decode_mp4(rec.bytes)
-                              .astype(np.float32) / 255.0)
                 else:
                     raise ValueError(f"unknown video fmt {rec.fmt!r}")
                 for i in range(0, frames.shape[0], every):
@@ -263,13 +245,10 @@ def video_frame_sample(media: DataFrame, every: int = 4,
 def synthetic_media(spark, n: int = 24) -> DataFrame:
     """Small deterministic media table exercising all three kinds. Images
     alternate REAL baseline JPEG and REAL PNG payloads; audio carries REAL
-    RIFF/WAVE PCM16 bytes; video rotates REAL RIFF/AVI Motion-JPEG,
-    ISO-BMFF/MP4 Motion-JPEG, MP4 'avc1' H.264 I_PCM (lossless), and MP4
-    'avc1' H.264 CAVLC Intra_16x16 (entropy-coded) containers."""
+    RIFF/WAVE PCM16 bytes; video carries REAL RIFF/AVI Motion-JPEG."""
     from lidartree_spark.avi import encode_avi_mjpeg
     from lidartree_spark.codecs import encode_png_gray16
     from lidartree_spark.jpeg import encode_jpeg_gray
-    from lidartree_spark.mp4 import encode_mp4_h264, encode_mp4_mjpeg
     rows = []
     for i in range(n):
         kind = ("image", "audio", "video")[i % 3]
@@ -299,21 +278,9 @@ def synthetic_media(spark, n: int = 24) -> DataFrame:
         else:
             nf = 8 + (i % 5)
             frames = FakeDecoder.video(mid, 16, 12, nf)
-            variant = (i // 3) % 5
-            if variant == 0:
-                blob, fmt = encode_avi_mjpeg(frames, quality=95), "avi"
-            elif variant == 1:
-                blob, fmt = encode_mp4_mjpeg(frames, quality=95), "mp4"
-            elif variant == 2:  # lossless-PCM H.264 track, same 'mp4' tag
-                blob, fmt = encode_mp4_h264(frames), "mp4"
-            elif variant == 3:  # entropy-coded CAVLC Intra_16x16
-                blob, fmt = encode_mp4_h264(frames, qp=8), "mp4"
-            else:  # entropy-coded CAVLC I_NxN (per-4x4 intra)
-                blob, fmt = encode_mp4_h264(frames, qp=8,
-                                            mb_mode="i4x4"), "mp4"
             rows.append({"media_id": mid, "kind": kind,
-                         "bytes": blob,
-                         "fmt": fmt, "width": 16, "height": 12,
+                         "bytes": encode_avi_mjpeg(frames, quality=95),
+                         "fmt": "avi", "width": 16, "height": 12,
                          "channels": 1, "sample_rate": 0, "n_frames": nf})
     return spark.createDataFrame(pd.DataFrame(rows), schema=MEDIA_SCHEMA)
 

@@ -4683,33 +4683,24 @@ _DIALECT["points_lifecycle_stats"] = _EXTENDED.pop("points_lifecycle_stats")
 
 
 # --- multimodal VIDEO gate (extended set; the 50-row budget is full) -------
-# Ten analytic videos, frame[t, y, x] = 40 + 3t + 4y + 5x (planar, <=255,
-# no zeros so I_PCM's 0->1 clamp never fires), round-robin through the FIVE
-# REAL container/codec paths (AVI/MJPEG, MP4/MJPEG, MP4/H.264-I_PCM,
-# MP4/H.264-CAVLC-Intra_16x16, MP4/H.264-CAVLC-I_NxN). Distributed
-# mapInPandas does encode -> decode -> stats. The I_PCM rows decode EXACTLY
-# to the formula, so DuckDB re-derives their sum/min/max in closed form;
-# the lossy rows (Motion-JPEG q95, both CAVLC subsets at qp8 — planar
-# content every codec reproduces well) contribute exact shape counts plus a
-# psnr_ge_40 boolean computed against the in-UDF ground truth (the whole
-# codec stack is integer-deterministic, so the boolean is stable), with -1
-# sentinels for the non-derivable sums.
+# Ten analytic videos, frame[t, y, x] = 40 + 3t + 4y + 5x (planar, <=255),
+# each round-tripped through the REAL AVI/Motion-JPEG container at q95 by a
+# distributed mapInPandas (encode -> decode -> stats). Motion-JPEG is lossy,
+# so each row carries the exact decoded shape plus a psnr_ge_40 boolean
+# computed against the in-UDF ground truth (the codec is
+# integer-deterministic, so the boolean is stable); DuckDB re-derives the
+# shapes from the same formulas.
 
 def _video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video round-trips, distributed: AVI/MJPEG, MP4/MJPEG,
-    MP4/H.264-I_PCM (pinned exactly) and MP4/H.264-CAVLC in both intra
-    subsets — Intra_16x16 and I_NxN (real entropy coding;
-    quality-bounded). Oracle: _VIDEO_STATS_DUCK."""
+    """REAL AVI/Motion-JPEG video round-trips, distributed
+    (quality-bounded). Oracle: _VIDEO_STATS_DUCK."""
     import pandas as pd
 
     def run(batches):
         import numpy as np
 
         from lidartree_spark.avi import decode_avi_mjpeg, encode_avi_mjpeg
-        from lidartree_spark.mp4 import (decode_mp4, encode_mp4_h264,
-                                         encode_mp4_mjpeg)
-        cols = ["video_id", "codec", "n_frames", "h", "w", "sum_px",
-                "min_px", "max_px", "psnr_ge_40"]
+        cols = ["video_id", "n_frames", "h", "w", "psnr_ge_40"]
         for pdf in batches:
             out = []
             for vid in pdf["id"]:
@@ -4719,69 +4710,28 @@ def _video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 nf = 6 + vid % 4
                 t, y, x = np.mgrid[0:nf, 0:h, 0:w]
                 truth = (40 + 3 * t + 4 * y + 5 * x).astype(np.uint8)
-                codec = ("avi_mjpeg", "mp4_mjpeg", "mp4_ipcm",
-                         "mp4_cavlc", "mp4_i4x4")[vid % 5]
-                if codec == "avi_mjpeg":
-                    dec = decode_avi_mjpeg(encode_avi_mjpeg(truth,
-                                                            quality=95))
-                elif codec == "mp4_mjpeg":
-                    dec = decode_mp4(encode_mp4_mjpeg(truth, quality=95))
-                elif codec == "mp4_ipcm":
-                    dec = decode_mp4(encode_mp4_h264(truth))
-                elif codec == "mp4_cavlc":
-                    dec = decode_mp4(encode_mp4_h264(truth, qp=8))
-                else:  # entropy-coded I_NxN (per-4x4 intra, 9 modes)
-                    dec = decode_mp4(encode_mp4_h264(truth, qp=8,
-                                                     mb_mode="i4x4"))
+                dec = decode_avi_mjpeg(encode_avi_mjpeg(truth, quality=95))
                 err = dec.astype(np.float64) - truth.astype(np.float64)
                 mse = float((err ** 2).mean())
                 psnr_ok = mse == 0.0 or \
                     10.0 * np.log10(255.0 ** 2 / mse) >= 40.0
-                exact = codec == "mp4_ipcm"
                 out.append({
-                    "video_id": vid, "codec": codec,
-                    "n_frames": int(dec.shape[0]),
+                    "video_id": vid, "n_frames": int(dec.shape[0]),
                     "h": int(dec.shape[1]), "w": int(dec.shape[2]),
-                    "sum_px": int(dec.astype(np.int64).sum())
-                    if exact else -1,
-                    "min_px": int(dec.min()) if exact else -1,
-                    "max_px": int(dec.max()) if exact else -1,
                     "psnr_ge_40": bool(psnr_ok),
                 })
             yield pd.DataFrame(out, columns=cols)
 
     return spark.range(10).repartition(4).mapInPandas(
-        run, schema=("video_id bigint, codec string, n_frames bigint, "
-                     "h bigint, w bigint, sum_px bigint, min_px bigint, "
-                     "max_px bigint, psnr_ge_40 boolean"))
+        run, schema=("video_id bigint, n_frames bigint, h bigint, w bigint, "
+                     "psnr_ge_40 boolean"))
 
 
 _VIDEO_STATS_DUCK = """
-WITH dims AS (
-  SELECT v, 16 + 4 * (v % 3) AS w, 12 + 4 * (v % 2) AS h, 6 + v % 4 AS nf,
-         CASE v % 5 WHEN 0 THEN 'avi_mjpeg' WHEN 1 THEN 'mp4_mjpeg'
-                    WHEN 2 THEN 'mp4_ipcm' WHEN 3 THEN 'mp4_cavlc'
-                    ELSE 'mp4_i4x4' END AS codec
-  FROM UNNEST(generate_series(0, 9)) g(v)
-),
-px AS (
-  SELECT d.v, 40 + 3 * tt.t + 4 * yy.y + 5 * xx.x AS val
-  FROM dims d,
-       UNNEST(generate_series(0, d.nf - 1)) tt(t),
-       UNNEST(generate_series(0, d.h - 1)) yy(y),
-       UNNEST(generate_series(0, d.w - 1)) xx(x)
-  WHERE d.codec = 'mp4_ipcm'
-),
-exact AS (SELECT v, SUM(val) AS s, MIN(val) AS mn, MAX(val) AS mx
-          FROM px GROUP BY v)
-SELECT CAST(d.v AS BIGINT) AS video_id, d.codec,
-       CAST(d.nf AS BIGINT) AS n_frames,
-       CAST(d.h AS BIGINT) AS h, CAST(d.w AS BIGINT) AS w,
-       CAST(COALESCE(e.s, -1) AS BIGINT) AS sum_px,
-       CAST(COALESCE(e.mn, -1) AS BIGINT) AS min_px,
-       CAST(COALESCE(e.mx, -1) AS BIGINT) AS max_px,
-       TRUE AS psnr_ge_40
-FROM dims d LEFT JOIN exact e ON e.v = d.v
+SELECT CAST(v AS BIGINT) AS video_id, CAST(6 + v % 4 AS BIGINT) AS n_frames,
+       CAST(12 + 4 * (v % 2) AS BIGINT) AS h,
+       CAST(16 + 4 * (v % 3) AS BIGINT) AS w, TRUE AS psnr_ge_40
+FROM UNNEST(generate_series(0, 9)) g(v)
 """
 
 _EXTENDED["multimodal_video_stats"] = (_video_stats, _VIDEO_STATS_DUCK)

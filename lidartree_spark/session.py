@@ -2,7 +2,10 @@
 
 Tuned for the tile workload: wide binary rows (~16 KB payloads), grouped-map
 pandas UDFs over Arrow, shuffle-heavy spatial joins. On a real cluster the
-same config applies per-executor; here master defaults to local[N].
+same config applies per-executor. The master defaults to local[N], except
+under spark-submit, where --master decides. This is the single source of
+the engine's Spark config: tools/submit.sh passes only --master and
+--py-files, and its jobs call get_spark.
 """
 
 from __future__ import annotations
@@ -23,12 +26,10 @@ def get_spark(app: str = "lidartree_spark", master: str | None = None,
               "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(v, "1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(os.environ.get(
         "SPARK_GRAFT_SHUFFLE", str(max(32, int(cpus) if cpus.isdigit() else 32))))
     b = (
         SparkSession.builder.appName(app)
-        .master(master)
         # AQE: runtime coalescing + skew-join splitting — the safety net for
         # skewed (cell_id, tile_id) shuffles at 100 TB (SURVEY.md §4).
         .config("spark.sql.adaptive.enabled", "true")
@@ -54,4 +55,9 @@ def get_spark(app: str = "lidartree_spark", master: str | None = None,
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
     )
+    # Under spark-submit (the only launcher that sets PYSPARK_GATEWAY_PORT
+    # for the driver) a builder .master() would override --master, so the
+    # default is left to the launcher there.
+    if master or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        b = b.master(master or f"local[{cpus}]")
     return b.getOrCreate()

@@ -109,21 +109,3 @@ def test_gini_and_quantile_bounds(vals):
     assert q[0] == x.min() and q[-1] == x.max()
     assert (np.diff(q) >= -1e-12).all()
 
-
-@settings(max_examples=25, deadline=None)
-@given(st.integers(1, 6), st.integers(8, 40), st.integers(8, 40),
-       st.integers(0, 2**32 - 1))
-def test_mp4_mux_demux_roundtrip(n, h, w, seed):
-    """ISO-BMFF mux/demux is lossless at the CONTAINER level: the demuxer's
-    sample bytes equal the muxer's inputs, so decode(encode(frames)) equals
-    per-frame JPEG roundtrips exactly — for any frame count and geometry."""
-    from lidartree_spark.jpeg import decode_jpeg_gray, encode_jpeg_gray
-    from lidartree_spark.mp4 import decode_mp4_mjpeg, encode_mp4_mjpeg
-
-    rng = np.random.default_rng(seed)
-    frames = rng.integers(0, 256, (n, h, w), dtype=np.uint8)
-    got = decode_mp4_mjpeg(encode_mp4_mjpeg(frames, quality=90))
-    assert got.shape == frames.shape
-    want = np.stack([decode_jpeg_gray(encode_jpeg_gray(frames[i], quality=90))
-                     for i in range(n)])
-    assert np.array_equal(got, want)

@@ -1,5 +1,7 @@
 """ANN similarity, multimodal plumbing, checkpoint-resume tests."""
 
+from types import SimpleNamespace
+
 import numpy as np
 import pytest
 
@@ -149,48 +151,17 @@ def test_image_features_plumbing(spark):
 
 
 def test_decode_has_no_fake_fallback():
-    # no stub formats remain: video containers are routed to the video op,
-    # genuinely unknown formats raise instead of yielding fabricated pixels
-    class Rec:
-        media_id, fmt, width, height, channels = "m1", "mp4", 8, 8, 3
-        bytes = b""
+    # video containers are routed to the video op; unknown formats raise
+    # instead of yielding fabricated pixels
+    rec = SimpleNamespace(media_id="m1", fmt="avi", width=8, height=8,
+                          channels=1, bytes=b"")
     with pytest.raises(ValueError, match="video container"):
-        decode_image_array(Rec)
-
-    class Unknown:
-        media_id, fmt, width, height, channels = "m2", "h264", 8, 8, 1
-        bytes = b""
-    with pytest.raises(NotImplementedError):
-        decode_image_array(Unknown, strict=True)
-    with pytest.raises(ValueError):
-        decode_image_array(Unknown)
-
-
-def test_mp4_mjpeg_roundtrip_and_codec_guard():
-    """Real ISO-BMFF mux/demux round-trip (PSNR >= 40 per frame through the
-    lossy JPEG samples), and the honest H.264 rejection path."""
-    from lidartree_spark.codecs import psnr
-    from lidartree_spark.mp4 import decode_mp4_mjpeg, encode_mp4_mjpeg
-
-    src = FakeDecoder.video("mp4-rt", 24, 16, 5)
-    buf = encode_mp4_mjpeg(src, fps=10, quality=95)
-    assert buf[4:8] == b"ftyp"
-    got = decode_mp4_mjpeg(buf)
-    assert got.shape == (5, 16, 24) and got.dtype == np.uint8
-    u8 = np.clip(np.round(src * 255.0), 0, 255)
-    for k in range(5):
-        assert psnr(u8[k], got[k].astype(np.float64)) >= 40.0
-
-    # rewrite the stsd sample-entry fourcc (tag + ver/flags + count + size):
-    # hvc1 (HEVC) stays honestly unsupported; avc1 now has its own decoder
-    # (tests/test_h264.py) and instead fails on the missing avcC record.
-    i = buf.index(b"stsd") + 4 + 4 + 4 + 4
-    hvc = buf[:i] + b"hvc1" + buf[i + 4:]
-    with pytest.raises(NotImplementedError, match="hvc1"):
-        decode_mp4_mjpeg(hvc)
-    avc = buf[:i] + b"avc1" + buf[i + 4:]
-    with pytest.raises(ValueError, match="avcC"):
-        decode_mp4_mjpeg(avc)
+        decode_image_array(rec)
+    for fmt in ("mp4", "h264"):
+        rec = SimpleNamespace(media_id="m2", fmt=fmt, width=8, height=8,
+                              channels=1, bytes=b"")
+        with pytest.raises(ValueError, match="unknown media fmt"):
+            decode_image_array(rec)
 
 
 def test_decode_jpeg_is_real():
@@ -207,7 +178,7 @@ def test_decode_jpeg_is_real():
         media_id, fmt, width, height, channels = "other-id", "jpeg", 40, 24, 1
         bytes = encode_jpeg_gray(u8, quality=95)
 
-    arr = decode_image_array(Rec, strict=True)  # strict: no fake fallback
+    arr = decode_image_array(Rec)
     assert arr.shape == (24, 40, 1)
     assert psnr(u8.astype(float), arr[:, :, 0] * 255.0) >= 40.0
 
@@ -349,112 +320,6 @@ def test_real_wav_codec_roundtrip():
     out, rate = decode_wav_pcm16(buf)
     assert rate == 16000
     assert np.allclose(out, samples, atol=1.0 / 32767 + 1e-6)
-
-
-def test_mp4_multi_chunk_sample_table():
-    """Third-party MJPEG MP4s spread samples over several chunks; the
-    demuxer must expand stsc runs against absolute stco offsets. Build a
-    two-chunk file by hand (chunk 1 holds 2 samples, chunk 2 holds 1,
-    separated by a gap the sample table must skip) and check frame parity
-    with the single-chunk encoding."""
-    import struct
-
-    from lidartree_spark import mp4 as m
-
-    src = FakeDecoder.video("mp4-chunks", 16, 12, 3)
-    ref = m.decode_mp4_mjpeg(m.encode_mp4_mjpeg(src, quality=95))
-
-    from lidartree_spark.jpeg import encode_jpeg_gray
-    u8 = np.clip(np.round(src * 255.0), 0, 255).astype(np.uint8)
-    samples = [encode_jpeg_gray(u8[i], quality=95) for i in range(3)]
-
-    ftyp = m._box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isom")
-    gap = b"\xde\xad\xbe\xef" * 4  # inter-chunk junk the offsets skip
-    mdat_payload = samples[0] + samples[1] + gap + samples[2]
-    mdat = m._box(b"mdat", mdat_payload)
-    off1 = len(ftyp) + 8
-    off2 = off1 + len(samples[0]) + len(samples[1]) + len(gap)
-
-    stsd_entry = (struct.pack(">I", 86) + b"jpeg"
-                  + struct.pack(">6xH", 1) + struct.pack(">HH12x", 0, 0)
-                  + struct.pack(">HH", 16, 12)
-                  + struct.pack(">IIIH", 0x480000, 0x480000, 0, 1)
-                  + b"\x00" * 32 + struct.pack(">Hh", 24, -1))
-    stbl = m._box(b"stbl",
-                  m._full(b"stsd", 0, 0, struct.pack(">I", 1) + stsd_entry)
-                  + m._full(b"stts", 0, 0, struct.pack(">III", 1, 3, 1))
-                  + m._full(b"stsc", 0, 0, struct.pack(">I", 2)
-                            + struct.pack(">III", 1, 2, 1)
-                            + struct.pack(">III", 2, 1, 1))
-                  + m._full(b"stsz", 0, 0, struct.pack(">II", 0, 3)
-                            + b"".join(struct.pack(">I", len(s))
-                                       for s in samples))
-                  + m._full(b"stco", 0, 0,
-                            struct.pack(">III", 2, off1, off2)))
-    moov = m._box(b"moov", m._box(b"trak", m._box(b"mdia", m._box(
-        b"minf", stbl))))
-    got = m.decode_mp4_mjpeg(ftyp + mdat + moov)
-    assert np.array_equal(got, ref)
-
-
-def test_mp4_audio_trak_first_and_co64():
-    """A file whose first trak is audio ('soun' hdlr) must still decode the
-    video track, and 64-bit co64 chunk offsets must be honored. Rebuild the
-    encoder's output with (a) a dummy audio trak prepended and (b) stco
-    replaced by an equivalent co64."""
-    import struct
-
-    from lidartree_spark import mp4 as m
-
-    src = FakeDecoder.video("mp4-soun", 16, 12, 2)
-    buf = m.encode_mp4_mjpeg(src, quality=95)
-    ref = m.decode_mp4_mjpeg(buf)
-
-    # split the encoder's file into (pre-moov bytes, moov payload)
-    moov_b, moov_e = m._find(buf, 0, len(buf), [b"moov"])
-    pre = buf[:moov_b - 8]
-    moov_payload = buf[moov_b:moov_e]
-
-    # minimal audio trak: hdlr says 'soun'; no stbl needed for the test
-    soun_hdlr = m._full(b"hdlr", 0, 0, struct.pack(">4x") + b"soun"
-                        + struct.pack(">12x") + b"aud\x00")
-    audio_trak = m._box(b"trak", m._box(b"mdia", soun_hdlr))
-    moov2 = m._box(b"moov", audio_trak + moov_payload)
-    got = m.decode_mp4_mjpeg(pre + moov2)
-    assert np.array_equal(got, ref)
-
-    # co64 variant: same offsets, 64-bit entries. stco payload layout is
-    # version/flags(4) count(4) offsets(4*n); co64 widens offsets to 8.
-    stbl_b, stbl_e = m._video_stbl(buf)
-    boxes = {t: (b, e) for t, b, e in m._walk(buf, stbl_b, stbl_e)}
-    sb, se = boxes[b"stco"]
-    n = struct.unpack_from(">I", buf, sb + 4)[0]
-    offs = struct.unpack_from(f">{n}I", buf, sb + 8)
-    co64 = m._full(b"co64", 0, 0, struct.pack(">I", n)
-                   + b"".join(struct.pack(">Q", o) for o in offs))
-    old_stco = buf[sb - 8:se]
-    assert buf.count(old_stco) == 1
-    buf64 = buf.replace(old_stco, co64)
-    # co64 is 4*n bytes longer, so every enclosing box size must grow too —
-    # easiest correct rebuild: decode with offsets unchanged requires mdat
-    # before moov (it is), and the moov subtree sizes fixed up. Rebuild the
-    # moov tree instead of patching sizes by hand.
-    grow = len(co64) - len(old_stco)
-    fixed = bytearray(buf64)
-    # walk from the top: every box that CONTAINS the stco position grows
-    pos = buf.find(old_stco)
-    off = 0
-    while off + 8 <= len(buf):
-        size = struct.unpack_from(">I", buf, off)[0]
-        if off < pos < off + size:  # encloses the swapped box
-            # same box starts at the same offset in buf64 (everything
-            # before stco is unchanged)
-            struct.pack_into(">I", fixed, off, size + grow)
-            off += 8  # descend
-        else:
-            off += size
-    got64 = m.decode_mp4_mjpeg(bytes(fixed))
-    assert np.array_equal(got64, ref)
 
 
 def test_semdedup_drops_same_cell_companions(spark, emb):

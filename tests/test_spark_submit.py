@@ -26,7 +26,9 @@ def test_submit_runs_and_resumes(tmp_path):
     env = {**os.environ,
            "LIDARTREE_CKPT_DIR": str(tmp_path / "ckpt"),
            "LIDARTREE_GRID": "4",
-           "SPARK_GRAFT_CPUS": "8",
+           # --master must win over get_spark's local[SPARK_GRAFT_CPUS]
+           "SPARK_MASTER": "local[8]",
+           "SPARK_GRAFT_CPUS": "4",
            "SPARK_GRAFT_SHUFFLE": "8"}
 
     def run():
@@ -36,13 +38,17 @@ def test_submit_runs_and_resumes(tmp_path):
         assert proc.returncode == 0, proc.stderr[-2000:]
         out = {}
         for line in proc.stdout.splitlines():
-            if line.startswith(("STATUS ", "MATCHED ")):
+            if line.startswith(("STATUS ", "MATCHED ", "MASTER ",
+                                "ARROW_BATCH ")):
                 k, _, v = line.partition(" ")
                 out[k] = v
         return out
 
     first = run()
     assert "MATCHED" in first and int(first["MATCHED"]) > 0
+    # the job's config comes from get_spark, its master from spark-submit
+    assert first["MASTER"] == "local[8]"
+    assert first["ARROW_BATCH"] == "1024"
     assert first["STATUS"].count("computed") == 4
 
     second = run()  # fresh JVM, same checkpoint dir -> everything resumes

@@ -11,15 +11,15 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import SparkSession
-
 WORKDIR = os.environ.get("LIDARTREE_CKPT_DIR", "/tmp/lidartree_flagship_ckpt")
 GRID = int(os.environ.get("LIDARTREE_GRID", "16"))
 
 
 def main() -> None:
-    spark = SparkSession.builder.appName("lidartree-flagship").getOrCreate()
     from lidartree_spark.plans.checkpoint import Pipeline, Stage
+    from lidartree_spark.session import get_spark
+
+    spark = get_spark("lidartree-flagship")
 
     def s_tiles(s):
         from lidartree_spark.operators.tiles import synthetic_tiles
@@ -46,6 +46,9 @@ def main() -> None:
         Stage("match", s_match, inputs=["detect", "ref"]),
     ])
     n = p.read_output("match").count()
+    print(f"MASTER {spark.sparkContext.master}")
+    print("ARROW_BATCH "
+          + spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     print(f"STATUS {status}")
     print(f"MATCHED {n}")
     spark.stop()

@@ -12,12 +12,9 @@ ZIP="$BUILD/lidartree_spark.zip"
 
 JOB="${1:-$REPO/tools/job_flagship.py}"
 shift || true
+# Only the master and the zip are set here; the job's get_spark() supplies
+# every other config (lidartree_spark/session.py).
 exec spark-submit \
   --master "${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}" \
   --py-files "$ZIP" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.adaptive.coalescePartitions.minPartitionSize=64k \
-  --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_SHUFFLE:-64}" \
-  --conf spark.executorEnv.OMP_NUM_THREADS=1 \
-  --conf spark.executorEnv.OPENBLAS_NUM_THREADS=1 \
   "$JOB" "$@"
