@@ -129,11 +129,11 @@ def ellipses4crown(x, y, n, s, e, w, angles=None) -> list[np.ndarray]:
         # quarter NE (x: +e, y: +n), NW (-w, +n), SW (-w, -s), SE (+e, -s)
         for ax, ay, rev in ((ei, ni, False), (-wi, ni, True),
                             (-wi, -si, False), (ei, -si, True)):
+            # NW and SE run t from pi/2 down to 0 so the ring is
+            # continuous counterclockwise
             t = angles[::-1] if rev else angles
-            qs = np.column_stack([xi + ax * np.cos(t) * (1 if not rev else 1),
-                                  yi + ay * np.sin(t)])
-            # order so the ring is continuous counterclockwise
-            pts.append(qs if not rev else qs[::-1])
+            pts.append(np.column_stack([xi + ax * np.cos(t),
+                                        yi + ay * np.sin(t)]))
         ring = np.vstack(pts)
         ring = np.vstack([ring, ring[:1]])
         rings.append(ring)

@@ -1,9 +1,9 @@
 """Grid / cell-id encoding and tile georeferencing — pure Catalyst column
 expressions (no UDFs), so predicate pushdown and partition pruning work.
 
-The hierarchical cell id is an interleaved-block key (S2/H3-style locality in
-pure arithmetic, SURVEY.md §2.12): cell = (floor(x / cell) , floor(y / cell))
-packed into one long. Snapping rules follow the reference exactly:
+The hierarchical cell id is the bit-interleaved Morton (or Hilbert) code of
+(floor(x / res), floor(y / res)) — S2/H3-style locality in pure arithmetic,
+SURVEY.md §2.12. Snapping rules follow the reference exactly:
 - extent snap: floor/ceil(x / res) * res   (/root/reference/R/common.R:61-64)
 - re-grid snap: round((x - start - res/2)/res)*res + start + res/2
   (/root/reference/R/raster_metrics.R:83-84)
@@ -14,9 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# image_id convention from the generator: t{row:04d}_{col:04d}
-TILE_W = 64
-TILE_H = 64
 RES = 0.5
 
 
@@ -61,28 +58,6 @@ def tile_bbox(image_id: Column, w: Column, h: Column, res: float = RES):
         (xmin + w.cast("double") * F.lit(res)).alias("xmax"),
         (ymin + h.cast("double") * F.lit(res)).alias("ymax"),
     )
-
-
-def cell_id(x: Column, y: Column, cell: float) -> Column:
-    """Pack (floor(x/cell), floor(y/cell)) into one long: locality-preserving
-    join/shuffle key for points. Pure arithmetic -> whole-stage codegen."""
-    cx = F.floor(x / F.lit(cell)).cast("long")
-    cy = F.floor(y / F.lit(cell)).cast("long")
-    return (cx + F.lit(1 << 20)) * F.lit(1 << 21) + (cy + F.lit(1 << 20))
-
-
-def neighbor_cell_ids(x: Column, y: Column, cell: float) -> Column:
-    """Array of the 9 cell ids covering a point's cell and its 8 neighbors —
-    the candidate-generation key for grid-bucketed kNN (explode on the build
-    side, single key on the probe side; SURVEY.md §4)."""
-    cx = F.floor(x / F.lit(cell)).cast("long")
-    cy = F.floor(y / F.lit(cell)).cast("long")
-    cells = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            cells.append((cx + F.lit(dx) + F.lit(1 << 20)) * F.lit(1 << 21)
-                         + (cy + F.lit(dy) + F.lit(1 << 20)))
-    return F.array(*cells)
 
 
 def snap_to_grid(x: Column, start: float, res: float) -> Column:

@@ -1,4 +1,4 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Multimodal columns: images as opaque binary + typed metadata.
 
 The Spark-side plumbing (schema, partitioning, Arrow batch shapes, UDF
 signatures) is real and tested. Format decoders:
@@ -7,20 +7,16 @@ signatures) is real and tested. Format decoders:
 - fmt == "png"     -> REAL ISO 15948 16-bit-gray PNG (codecs.decode_png_gray16)
 - fmt == "jpeg"    -> REAL baseline JFIF (lidartree_spark.jpeg, pure-python
   T.81 sequential DCT — no libjpeg in this environment)
-- fmt == "wav"     -> REAL RIFF/WAVE PCM16 parsing (decode_wav_pcm16 below)
-- fmt == "avi"     -> REAL RIFF/AVI Motion-JPEG (lidartree_spark.avi; each
-  frame is a baseline JPEG)
 
-Any other fmt raises. `FakeDecoder` is only the deterministic pixel/sample
+Any other fmt raises. `FakeDecoder` is only the deterministic pixel
 SOURCE for synthetic_media — i.e. a data generator, never a decode path.
-Downstream ops (resize, feature extraction, frame sampling, RMS energy) are
+Downstream ops (resize, feature extraction, hashing, augmentation) are
 REAL numpy implementations over whatever the decode stage yields.
 """
 
 from __future__ import annotations
 
 import hashlib
-import struct
 from typing import Iterator
 
 import numpy as np
@@ -28,48 +24,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 MEDIA_SCHEMA = ("media_id string, kind string, bytes binary, fmt string, "
-                "width int, height int, channels int, sample_rate int, "
-                "n_frames int")
-
-def encode_wav_pcm16(samples: np.ndarray, sample_rate: int) -> bytes:
-    """Real RIFF/WAVE, PCM16 mono: float [-1, 1] -> standard .wav bytes."""
-    pcm = np.clip(np.asarray(samples, np.float64), -1.0, 1.0)
-    data = (pcm * 32767.0).round().astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
-    body = (b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def decode_wav_pcm16(buf: bytes):
-    """Parse RIFF/WAVE PCM16 mono -> (float32 samples in [-1, 1], rate)."""
-    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    pos = 12
-    rate = None
-    data = None
-    while pos + 8 <= len(buf):
-        tag = buf[pos:pos + 4]
-        (size,) = struct.unpack_from("<I", buf, pos + 4)
-        payload = buf[pos + 8:pos + 8 + size]
-        if tag == b"fmt ":
-            audio_fmt, channels, rate, _, _, bits = struct.unpack_from(
-                "<HHIIHH", payload)
-            if (audio_fmt, channels, bits) != (1, 1, 16):
-                raise ValueError("only PCM16 mono supported")
-        elif tag == b"data":
-            data = payload
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if rate is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    samples = np.frombuffer(data, dtype="<i2").astype(np.float32) / 32767.0
-    return samples, rate
+                "width int, height int, channels int")
 
 
 class FakeDecoder:
     """Deterministic media-id-seeded array SOURCE used by synthetic_media
-    to fabricate pixels/samples BEFORE they are encoded with the real
+    to fabricate pixels BEFORE they are encoded with the real
     codecs (and by tests as the independent ground truth for what a decode
     should approximately return). Not a decode path — no fmt routes here."""
 
@@ -83,15 +43,6 @@ class FakeDecoder:
     def image(cls, media_id: str, w: int, h: int, c: int) -> np.ndarray:
         return cls._rng(media_id).uniform(0, 1, (h, w, c)).astype(np.float32)
 
-    @classmethod
-    def audio(cls, media_id: str, sr: int, n: int) -> np.ndarray:
-        return cls._rng(media_id).uniform(-1, 1, n).astype(np.float32)
-
-    @classmethod
-    def video(cls, media_id: str, w: int, h: int, n_frames: int) -> np.ndarray:
-        return cls._rng(media_id).uniform(0, 1, (n_frames, h, w)) \
-            .astype(np.float32)
-
 
 def decode_image_array(rec) -> np.ndarray:
     if rec.fmt == "raw_f32":
@@ -104,9 +55,6 @@ def decode_image_array(rec) -> np.ndarray:
         from lidartree_spark.jpeg import decode_jpeg_gray
         return (decode_jpeg_gray(rec.bytes).astype(np.float32)
                 / 255.0)[..., None]
-    if rec.fmt == "avi":
-        raise ValueError("'avi' is a video container — use "
-                         "video_frame_sample")
     raise ValueError(f"unknown media fmt {rec.fmt!r}")
 
 
@@ -189,99 +137,23 @@ def image_pixel_stats(media: DataFrame) -> DataFrame:
     return media.select(*cols).mapInPandas(run, schema=schema)
 
 
-def audio_frame_energy(media: DataFrame, frame: int = 1024,
-                       hop: int = 512) -> DataFrame:
-    """decode -> windowed RMS energy rows (one row per frame) — the UDTF
-    shape (variable rows out per row in)."""
-    schema = "media_id string, frame_idx int, rms double"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                if rec.fmt == "wav":
-                    samples, _ = decode_wav_pcm16(rec.bytes)
-                else:
-                    samples = np.frombuffer(rec.bytes, dtype=np.float32)
-                n = (len(samples) - frame) // hop + 1 if len(samples) >= frame else 0
-                for i in range(n):
-                    seg = samples[i * hop:i * hop + frame]
-                    out.append({"media_id": rec.media_id, "frame_idx": i,
-                                "rms": float(np.sqrt(np.mean(seg * seg)))})
-            yield pd.DataFrame(out, columns=["media_id", "frame_idx", "rms"])
-
-    cols = ["media_id", "bytes", "fmt", "sample_rate", "n_frames"]
-    return media.select(*cols).mapInPandas(run, schema=schema)
-
-
-def video_frame_sample(media: DataFrame, every: int = 4,
-                       resize_to: int = 8) -> DataFrame:
-    """decode -> sample every k-th frame -> thumbnail rows."""
-    schema = "media_id string, frame_idx int, thumb array<float>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                if rec.fmt == "avi":
-                    from lidartree_spark.avi import decode_avi_mjpeg
-                    frames = (decode_avi_mjpeg(rec.bytes)
-                              .astype(np.float32) / 255.0)
-                else:
-                    raise ValueError(f"unknown video fmt {rec.fmt!r}")
-                for i in range(0, frames.shape[0], every):
-                    th = resize_bilinear(frames[i][..., None], resize_to,
-                                         resize_to)
-                    out.append({"media_id": rec.media_id, "frame_idx": i,
-                                "thumb": th.ravel().astype(np.float32)
-                                .tolist()})
-            yield pd.DataFrame(out, columns=["media_id", "frame_idx",
-                                             "thumb"])
-
-    cols = ["media_id", "bytes", "fmt", "width", "height", "n_frames"]
-    return media.select(*cols).mapInPandas(run, schema=schema)
-
-
 def synthetic_media(spark, n: int = 24) -> DataFrame:
-    """Small deterministic media table exercising all three kinds. Images
-    alternate REAL baseline JPEG and REAL PNG payloads; audio carries REAL
-    RIFF/WAVE PCM16 bytes; video carries REAL RIFF/AVI Motion-JPEG."""
-    from lidartree_spark.avi import encode_avi_mjpeg
+    """Small deterministic image table: one row per i in range(n) with
+    i % 3 == 0, alternating REAL PNG and REAL baseline JPEG payloads."""
     from lidartree_spark.codecs import encode_png_gray16
     from lidartree_spark.jpeg import encode_jpeg_gray
     rows = []
-    for i in range(n):
-        kind = ("image", "audio", "video")[i % 3]
+    for i in range(0, n, 3):
         mid = f"m{i:04d}"
-        if kind == "image":
-            w, h = 32 + 8 * (i % 3), 24 + 8 * (i % 2)
-            img = FakeDecoder.image(mid, w, h, 1)[:, :, 0]
-            if i % 2 == 0:
-                rows.append({"media_id": mid, "kind": kind,
-                             "bytes": encode_png_gray16(img), "fmt": "png",
-                             "width": w, "height": h, "channels": 1,
-                             "sample_rate": 0, "n_frames": 0})
-            else:
-                u8 = np.clip(np.round(img * 255.0), 0, 255).astype(np.uint8)
-                rows.append({"media_id": mid, "kind": kind,
-                             "bytes": encode_jpeg_gray(u8, quality=95),
-                             "fmt": "jpeg", "width": w, "height": h,
-                             "channels": 1, "sample_rate": 0, "n_frames": 0})
-        elif kind == "audio":
-            nf = 4096 + 512 * (i % 4)
-            samples = FakeDecoder.audio(mid, 16000, nf)
-            rows.append({"media_id": mid, "kind": kind,
-                         "bytes": encode_wav_pcm16(samples, 16000),
-                         "fmt": "wav", "width": 0, "height": 0,
-                         "channels": 1, "sample_rate": 16000,
-                         "n_frames": nf})
+        w, h = 32, 24 + 8 * (i % 2)
+        img = FakeDecoder.image(mid, w, h, 1)[:, :, 0]
+        if i % 2 == 0:
+            data, fmt = encode_png_gray16(img), "png"
         else:
-            nf = 8 + (i % 5)
-            frames = FakeDecoder.video(mid, 16, 12, nf)
-            rows.append({"media_id": mid, "kind": kind,
-                         "bytes": encode_avi_mjpeg(frames, quality=95),
-                         "fmt": "avi", "width": 16, "height": 12,
-                         "channels": 1, "sample_rate": 0, "n_frames": nf})
+            u8 = np.clip(np.round(img * 255.0), 0, 255).astype(np.uint8)
+            data, fmt = encode_jpeg_gray(u8, quality=95), "jpeg"
+        rows.append({"media_id": mid, "kind": "image", "bytes": data,
+                     "fmt": fmt, "width": w, "height": h, "channels": 1})
     return spark.createDataFrame(pd.DataFrame(rows), schema=MEDIA_SCHEMA)
 
 
@@ -357,42 +229,6 @@ def phash_neardup_pairs(hashes: DataFrame, max_hamming: int = 7,
                         .cast("long"))
             .where(F.col("hamming") <= max_hamming)
             .select("media_a", "media_b", "hamming"))
-
-
-def audio_frame_stats(media: DataFrame, frame: int = 256,
-                      hop: int = 128) -> DataFrame:
-    """decode -> per-frame INTEGER-domain stats: the PCM16 sample count and
-    the exact int64 sum of squares per window (rms = sqrt(sum_sq/n)/32767
-    — audio_frame_energy's float path, refactored into an oracle-able
-    integer core). PCM16 round-trips integers exactly (|s| <= 32767 is
-    well inside float32's 24-bit mantissa), so a DuckDB oracle re-derives
-    every value from the sample formula (extended gate
-    multimodal_audio_stats). Same UDTF shape as audio_frame_energy:
-    variable rows out per row in, zero shuffle."""
-    schema = "media_id string, frame_idx int, n int, sum_sq long"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                if rec.fmt == "wav":
-                    samples, _ = decode_wav_pcm16(rec.bytes)
-                else:
-                    samples = np.frombuffer(rec.bytes, dtype=np.float32)
-                ints = np.round(samples.astype(np.float64)
-                                * 32767.0).astype(np.int64)
-                n = ((len(ints) - frame) // hop + 1
-                     if len(ints) >= frame else 0)
-                for i in range(n):
-                    seg = ints[i * hop:i * hop + frame]
-                    out.append({"media_id": rec.media_id, "frame_idx": i,
-                                "n": int(seg.size),
-                                "sum_sq": int((seg * seg).sum())})
-            yield pd.DataFrame(out, columns=["media_id", "frame_idx",
-                                             "n", "sum_sq"])
-
-    cols = ["media_id", "bytes", "fmt", "sample_rate", "n_frames"]
-    return media.select(*cols).mapInPandas(run, schema=schema)
 
 
 AUGMENT_OPS = ("identity", "flip_h", "flip_v", "rot90", "rot180", "rot270",

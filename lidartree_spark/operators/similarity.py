@@ -503,74 +503,3 @@ def pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
             .where(F.col("rk") <= k)
             .select("qid", "vec_id", "rk", "adc", "d2"))
 
-
-def semdedup(embeddings: DataFrame, n_centroids: int = 8,
-             threshold: float = 0.95, iters: int = 0,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             seed: int = 131,
-             centroids: np.ndarray | None = None) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
-    web-scale through semantic deduplication"): drop semantic near-
-    duplicates from an embedding corpus by (1) coarse k-means cells,
-    (2) WITHIN-CELL pairwise cosine, (3) connected components over
-    >= threshold pairs, (4) keep the min-id canonical per component.
-
-    Scale shape: the cell assignment is one broadcast-centroid map pass
-    (no join); the pairwise stage is a cell-keyed self-join, so the
-    quadratic cost is bounded per cell — at 10^12 vectors you grow
-    n_centroids proportionally (K ~ N/cell_budget, the paper's design)
-    and the plan is unchanged. Components use the same distributed
-    min-label + pointer-jumping engine that merges cross-tile gaps
-    (operators/gaps.connected_components, O(log diameter) rounds).
-
-    iters=0 pins the codebook to the deterministic md5-ranked init rows
-    (the oracle-re-derivable mode, same rule as train_centroids init);
-    iters>0 runs Lloyd passes for better cells. Returns one row per input
-    vector: (id, cell, canonical, cluster_size, keep).
-    """
-    from lidartree_spark.operators.gaps import cc_min_labels
-
-    if centroids is None:
-        centroids = (train_centroids(embeddings, n_centroids, iters,
-                                     id_col, vec_col, seed)
-                     if iters > 0 else
-                     _md5_init_rows(embeddings, n_centroids, id_col,
-                                    vec_col, seed))
-    cells = _assign_cells(embeddings, centroids, 1, id_col, vec_col, "id")
-    vecs = embeddings.select(F.col(id_col).alias("id"),
-                             F.col(vec_col).alias("v"))
-    withv = cells.join(vecs, "id")
-    # hoist ||v||^2 out of the pairwise stage: the interpreted higher-order
-    # lambdas are the per-pair cost, and computing the norm once per VECTOR
-    # instead of once per PAIR removes 2 of the 3 aggregates from the
-    # quadratic stage (same doubles — sqrt(na)*sqrt(nb) is unchanged)
-    nv = F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0),
-                     lambda acc, t: acc + t)
-    withn = withv.withColumn("nv", nv)
-    a = withn.select(F.col("id").alias("ida"), "cid",
-                     F.col("v").alias("va"), F.col("nv").alias("na"))
-    b = withn.select(F.col("id").alias("idb"), "cid",
-                     F.col("v").alias("vb"), F.col("nv").alias("nb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, t: acc + t)
-    pairs = (a.join(b, "cid").where(F.col("ida") < F.col("idb"))
-             .withColumn("cosine",
-                         dot / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))))
-             .where(F.col("cosine") >= F.lit(threshold)))
-    # hybrid CC: near-dup edge sets are usually tiny relative to the corpus
-    # (the >= threshold filter is sharp), so the driver union-find resolves
-    # them in one job; past 2M symmetrized edge rows (~1M undirected pairs)
-    # the distributed pointer-jumping loop takes over with the identical
-    # min-label result
-    comps = cc_min_labels(pairs, "ida", "idb",
-                          driver_threshold=2_000_000).selectExpr(
-        "node AS id", "comp AS canonical")
-    out = (withv.select("id", F.col("cid").cast("long").alias("cell"))
-           .join(comps, "id", "left")
-           .withColumn("canonical",
-                       F.coalesce("canonical", F.col("id").cast("long"))))
-    w = Window.partitionBy("canonical")
-    return out.select(
-        F.col("id").cast("long").alias("id"), "cell", "canonical",
-        F.count("*").over(w).cast("long").alias("cluster_size"),
-        (F.col("id") == F.col("canonical")).alias("keep"))

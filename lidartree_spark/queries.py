@@ -186,8 +186,7 @@ GROUP BY plot_id
 # 20-unit cell key — the ref side expands to its 3x3 neighbor cells
 # (lateral sequence, no join operator), the det side carries one cell —
 # instead of a range-predicate nested loop. Complete by construction:
-# |dx|,|dy| <= 20 implies cell deltas in {-1,0,1}. This is the same shuffle
-# shape grid.neighbor_cell_ids produces for the DataFrame operators.
+# |dx|,|dy| <= 20 implies cell deltas in {-1,0,1}.
 def _mutual_nn_sql(d: str) -> str:
     cxs = _lat_seq(d, "cx0 - 1", "cx0 + 1", "cxs", "cx")
     cys = _lat_seq(d, "cy0 - 1", "cy0 + 1", "cys", "cy")
@@ -4682,61 +4681,6 @@ _DIALECT["coreg_kernel_stats"] = (_coreg_kernel_stats, _coreg_kernel_duck())
 _DIALECT["points_lifecycle_stats"] = _EXTENDED.pop("points_lifecycle_stats")
 
 
-# --- multimodal VIDEO gate (extended set; the 50-row budget is full) -------
-# Ten analytic videos, frame[t, y, x] = 40 + 3t + 4y + 5x (planar, <=255),
-# each round-tripped through the REAL AVI/Motion-JPEG container at q95 by a
-# distributed mapInPandas (encode -> decode -> stats). Motion-JPEG is lossy,
-# so each row carries the exact decoded shape plus a psnr_ge_40 boolean
-# computed against the in-UDF ground truth (the codec is
-# integer-deterministic, so the boolean is stable); DuckDB re-derives the
-# shapes from the same formulas.
-
-def _video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL AVI/Motion-JPEG video round-trips, distributed
-    (quality-bounded). Oracle: _VIDEO_STATS_DUCK."""
-    import pandas as pd
-
-    def run(batches):
-        import numpy as np
-
-        from lidartree_spark.avi import decode_avi_mjpeg, encode_avi_mjpeg
-        cols = ["video_id", "n_frames", "h", "w", "psnr_ge_40"]
-        for pdf in batches:
-            out = []
-            for vid in pdf["id"]:
-                vid = int(vid)
-                w = 16 + 4 * (vid % 3)
-                h = 12 + 4 * (vid % 2)
-                nf = 6 + vid % 4
-                t, y, x = np.mgrid[0:nf, 0:h, 0:w]
-                truth = (40 + 3 * t + 4 * y + 5 * x).astype(np.uint8)
-                dec = decode_avi_mjpeg(encode_avi_mjpeg(truth, quality=95))
-                err = dec.astype(np.float64) - truth.astype(np.float64)
-                mse = float((err ** 2).mean())
-                psnr_ok = mse == 0.0 or \
-                    10.0 * np.log10(255.0 ** 2 / mse) >= 40.0
-                out.append({
-                    "video_id": vid, "n_frames": int(dec.shape[0]),
-                    "h": int(dec.shape[1]), "w": int(dec.shape[2]),
-                    "psnr_ge_40": bool(psnr_ok),
-                })
-            yield pd.DataFrame(out, columns=cols)
-
-    return spark.range(10).repartition(4).mapInPandas(
-        run, schema=("video_id bigint, n_frames bigint, h bigint, w bigint, "
-                     "psnr_ge_40 boolean"))
-
-
-_VIDEO_STATS_DUCK = """
-SELECT CAST(v AS BIGINT) AS video_id, CAST(6 + v % 4 AS BIGINT) AS n_frames,
-       CAST(12 + 4 * (v % 2) AS BIGINT) AS h,
-       CAST(16 + 4 * (v % 3) AS BIGINT) AS w, TRUE AS psnr_ge_40
-FROM UNNEST(generate_series(0, 9)) g(v)
-"""
-
-_EXTENDED["multimodal_video_stats"] = (_video_stats, _VIDEO_STATS_DUCK)
-
-
 # --- perceptual-hash image near-dup (integer-DCT pHash + banded LSH) -------
 # The image-side twin of simhash_neardup: 48 real 16-bit-gray PNGs (24
 # base/perturbed pairs — the odd image bumps ONE pixel of its even twin by
@@ -4875,8 +4819,8 @@ _DIALECT["phash_neardup"] = (_phash_neardup, _PHASH_ND_DUCK)
 # --- image near-dup clustering + canonical selection (extended set) ---------
 # The image-side twin of dedup_clusters: pHash banded-LSH pairs feed the
 # REAL distributed connected-components operator, then keep-one-per-cluster.
-# Singletons survive with themselves as canonical (left join, like
-# semdedup). Oracle = the phash_neardup CTE chain extended with a
+# Singletons survive with themselves as canonical (left join).
+# Oracle = the phash_neardup CTE chain extended with a
 # recursive-CTE transitive closure.
 
 def _image_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4931,91 +4875,6 @@ _EXTENDED["minhash_lsh"] = (_minhash_sql(_SHINGLES_SPARK, "spark"),
                             .replace("AS STRING", "AS VARCHAR"))
 _EXTENDED["ngram_jaccard"] = (_ngram_jaccard_salted,
                               _jaccard_sql(_SHINGLES_DUCK))
-# --- document chunking (context-window preparation, extended set) ----------
-# The training-data op that turns documents into fixed-size context
-# windows: token windows of W=64 with stride S=48 (25% overlap), the
-# standard packing-precursor shape. Pure projection + bounded explode
-# (~len/S rows per doc, no shuffle, no cross-doc dependency — map-side at
-# any corpus size). The chunk text itself is pinned by md5 so the gate
-# proves byte-exact window extraction, not just counts.
-
-def _chunk_sql(d: str) -> str:
-    w, s = 64, 48
-    if d == "spark":
-        return f"""
-WITH toks AS (
-  SELECT doc_id, split(text, ' ') AS l FROM documents
-)
-SELECT doc_id, c AS chunk_idx,
-       CAST(size(slice(l, c * {s} + 1, {w})) AS BIGINT) AS n_tokens,
-       md5(array_join(slice(l, c * {s} + 1, {w}), ' ')) AS chunk_md5
-FROM toks
-LATERAL VIEW explode(sequence(0,
-    CAST(FLOOR((size(l) - 1) / {s}) AS INT))) t AS c
-"""
-    return f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS l FROM documents
-)
-SELECT doc_id, c AS chunk_idx,
-       CAST(LEAST(c * {s} + {w}, len(l)) - c * {s} AS BIGINT) AS n_tokens,
-       md5(array_to_string(
-           list_slice(l, c * {s} + 1, LEAST(c * {s} + {w}, len(l))), ' '))
-           AS chunk_md5
-FROM toks,
-     UNNEST(generate_series(0, CAST(FLOOR((len(l) - 1) / {s}) AS BIGINT)))
-         g(c)
-"""
-
-
-_EXTENDED["doc_chunking"] = (_chunk_sql("spark"), _chunk_sql("duck"))
-
-
-# --- domain-mixture sampling gate (extended set) ----------------------------
-# Data mixing (the Pile/Dolma-style step): sample so the OUTPUT follows
-# fixed target proportions per domain, not the corpus's own mix (that is
-# stratified_sample's job). Waterfilling with one feasibility scan:
-# T = MIN_s floor(n_s * 100 / w_s) is the largest output size whose
-# quotas k_s = floor(w_s * T / 100) never oversample a domain; rows are
-# then the top-k_s per domain by md5 rank (rerun-stable, RNG-free). Two
-# grouped passes + one window — no cross-domain join of row data.
-# Integer weights and FLOOR keep every quota exact in both engines.
-
-def _mixture_sql(dialect: str) -> str:
-    cast_t = "STRING" if dialect == "spark" else "VARCHAR"
-    return f"""
-WITH wts AS (
-  SELECT * FROM (VALUES ('en', 40), ('de', 20), ('fr', 15), ('es', 15),
-                        ('zh', 10)) AS t(lang, w)
-), counts AS (
-  SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang
-), scale AS (
-  SELECT CAST(MIN(FLOOR(c.n * 100.0 / t.w)) AS BIGINT) AS tmax
-  FROM counts c JOIN wts t ON t.lang = c.lang
-), quota AS (
-  -- scalar subquery, not a join: the 1-row scale CTE would otherwise
-  -- plan as a nested-loop cross join
-  SELECT t.lang,
-         CAST(FLOOR(t.w * (SELECT tmax FROM scale) / 100.0) AS BIGINT)
-             AS k
-  FROM wts t
-), ranked AS (
-  SELECT doc_id, lang,
-         ROW_NUMBER() OVER (
-           PARTITION BY lang
-           ORDER BY md5(CAST(doc_id AS {cast_t})), doc_id) AS rk
-  FROM documents
-)
-SELECT r.lang, CAST(r.doc_id AS BIGINT) AS doc_id,
-       CAST(r.rk AS BIGINT) AS rk, q.k AS quota
-FROM ranked r JOIN quota q ON q.lang = r.lang
-WHERE r.rk <= q.k
-"""
-
-
-_EXTENDED["mixture_sample"] = (_mixture_sql("spark"), _mixture_sql("duck"))
-
-
 # --- BPE tokenizer training gate (extended set) -----------------------------
 # The REAL distributed trainer (operators/tokenize.train_bpe_merges: one
 # vocab shuffle + per-merge map-side pair-count partials, driver keeps only
@@ -5072,224 +4931,6 @@ SELECT * FROM (VALUES
 """
 
 _EXTENDED["bpe_train"] = (_bpe_train, _BPE_TRAIN_DUCK)
-
-
-# --- PII scan / redaction gate (extended set) ------------------------------
-# Training-data scrubbing: count and redact emails / URLs / IPv4s. The
-# corpus is PLANTED in-query (doc i carries i%4 emails, i%3 URLs, i%2
-# IPs whose byte lengths are closed-form in i), so the DuckDB oracle
-# re-derives every count AND the post-redaction length without needing
-# regex-engine agreement — the gate pins Spark's actual regexp_count /
-# regexp_replace behavior against ground truth, which is STRONGER than
-# comparing two regex engines to each other. Map-side only.
-
-_PII_SPARK = """
-WITH ids AS (SELECT id AS i FROM range(0, 256)),
-doc AS (
-  SELECT i,
-         concat('lorem ipsum dolor sit amet',
-                repeat(concat(' user', CAST(i AS STRING), '@example.com'),
-                       CAST(i % 4 AS INT)),
-                repeat(concat(' https://site', CAST(i AS STRING),
-                              '.example/path'),
-                       CAST(i % 3 AS INT)),
-                repeat(concat(' 10.0.', CAST(i % 256 AS STRING), '.',
-                              CAST(i % 200 AS STRING)),
-                       CAST(i % 2 AS INT))) AS text
-  FROM ids
-)
-SELECT CAST(i AS BIGINT) AS did,
-       CAST(regexp_count(text, '[a-z0-9]+@[a-z0-9.]+') AS BIGINT)
-           AS n_email,
-       CAST(regexp_count(text, 'https://[a-z0-9./]+') AS BIGINT) AS n_url,
-       CAST(regexp_count(text, '[0-9]+\\\\.[0-9]+\\\\.[0-9]+\\\\.[0-9]+')
-            AS BIGINT) AS n_ip,
-       CAST(LENGTH(regexp_replace(regexp_replace(regexp_replace(text,
-            '[a-z0-9]+@[a-z0-9.]+', '<EMAIL>'),
-            'https://[a-z0-9./]+', '<URL>'),
-            '[0-9]+\\\\.[0-9]+\\\\.[0-9]+\\\\.[0-9]+', '<IP>')) AS BIGINT)
-           AS red_len
-FROM doc
-"""
-
-# closed-form ground truth: filler is 26 bytes; each planted item adds
-# 1 (space) + its length; redaction swaps item bytes for the 7/5/4-byte
-# placeholders. len(email) = 4+dig+12, len(url) = 12+dig+13,
-# len(ip) = 5+dig+1+dig200 with dig = digits(i) (i < 256 so i%256 = i).
-_PII_DUCK = """
-WITH ids AS (SELECT i FROM UNNEST(generate_series(0, 255)) g(i)),
-f AS (
-  SELECT i, i % 4 AS ne, i % 3 AS nu, i % 2 AS ni,
-         LENGTH(CAST(i AS VARCHAR)) AS dig,
-         LENGTH(CAST(i % 200 AS VARCHAR)) AS d200
-  FROM ids
-)
-SELECT CAST(i AS BIGINT) AS did,
-       CAST(ne AS BIGINT) AS n_email,
-       CAST(nu AS BIGINT) AS n_url,
-       CAST(ni AS BIGINT) AS n_ip,
-       CAST(26 + ne * (1 + 16 + dig) + nu * (1 + 25 + dig)
-               + ni * (1 + 6 + dig + d200)
-               - ne * (16 + dig - 7) - nu * (25 + dig - 5)
-               - ni * (6 + dig + d200 - 4) AS BIGINT) AS red_len
-FROM f
-"""
-
-_EXTENDED["pii_scan"] = (_PII_SPARK, _PII_DUCK)
-
-
-# --- multimodal AUDIO gate (extended set) ----------------------------------
-# Driver-grade evidence for the WAV decode path (previously pytest-only):
-# 8 real RIFF/PCM16 files whose samples follow an integer formula that
-# PCM16 round-trips exactly, decoded distributed and reduced to per-frame
-# integer sums of squares (operators/multimodal.audio_frame_stats). DuckDB
-# re-derives every frame from generate_series — count AND exact sum_sq.
-
-def _audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WAV encode -> decode -> windowed integer frame stats, one
-    mapInPandas pass; oracle _AUDIO_STATS_DUCK."""
-    import pandas as pd
-
-    from lidartree_spark.operators.multimodal import audio_frame_stats
-
-    def gen(batches):
-        import numpy as np
-
-        from lidartree_spark.operators.multimodal import encode_wav_pcm16
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                n = 600 + i * 50
-                k = np.arange(n, dtype=np.int64)
-                s = (i * 7919 + k * 104729) % 2001 - 1000
-                out.append({"media_id": f"{i:02d}",
-                            "bytes": encode_wav_pcm16(s / 32767.0, 16000),
-                            "fmt": "wav", "sample_rate": 16000,
-                            "n_frames": n})
-            yield pd.DataFrame(out, columns=["media_id", "bytes", "fmt",
-                                             "sample_rate", "n_frames"])
-
-    media = spark.range(8).repartition(4).mapInPandas(
-        gen, schema=("media_id string, bytes binary, fmt string, "
-                     "sample_rate int, n_frames int"))
-    out = audio_frame_stats(media, frame=256, hop=128)
-    return out.select(F.col("media_id").cast("long").alias("aid"),
-                      F.col("frame_idx").cast("long").alias("frame_idx"),
-                      F.col("n").cast("long").alias("n"), "sum_sq")
-
-
-_AUDIO_STATS_DUCK = """
-WITH dims AS (
-  SELECT i, 600 + i * 50 AS len,
-         (600 + i * 50 - 256) // 128 + 1 AS nf
-  FROM UNNEST(generate_series(0, 7)) g(i)
-), frames AS (
-  SELECT d.i, f FROM dims d, UNNEST(generate_series(0, 30)) ff(f)
-  WHERE f < d.nf
-), samples AS (
-  SELECT fr.i, fr.f,
-         (fr.i * 7919 + (fr.f * 128 + j) * 104729) % 2001 - 1000 AS s
-  FROM frames fr, UNNEST(generate_series(0, 255)) jj(j)
-)
-SELECT CAST(i AS BIGINT) AS aid, CAST(f AS BIGINT) AS frame_idx,
-       CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(s * s) AS BIGINT) AS sum_sq
-FROM samples GROUP BY i, f
-"""
-
-_EXTENDED["multimodal_audio_stats"] = (_audio_stats, _AUDIO_STATS_DUCK)
-
-
-# --- Gopher repetition-quality filter (extended set) -----------------------
-# The MassiveText repetition rules (Rae et al. 2021, "Scaling Language
-# Models: ... Gopher", table A1): drop a document when the characters in
-# its most common word 2-gram exceed 20% of the text, its most common
-# 3-gram 18%, or its duplicated 5-grams 15% (occurrence-weighted character
-# fractions). One grouped aggregation per n — no joins between documents,
-# so at 100 TB this is a pure map-side scan family. At sf0.01 the corpus
-# exercises both sides: 8 docs fail the 2-gram rule, 20 the 3-gram rule,
-# 475/500 keep.
-
-def _gopher_sql(d: str) -> str:
-    # Spark dialect builds every gram order from ONE posexplode + ONE
-    # LEAD window: a lambda-based transform(sequence(...), i ->
-    # element_at(l, i + j)) shape re-evaluates split(text) inside each
-    # lambda call (no common-subexpression elimination across lambda
-    # bodies), which measured 13 s for the 5-gram leg alone at sf0.1;
-    # the posexplode+LEAD plan does the whole gate in ~1 s.
-    if d == "spark":
-        words = """
-  SELECT doc_id, tc, w,
-         LEAD(w, 1) OVER win AS w1, LEAD(w, 2) OVER win AS w2,
-         LEAD(w, 4) OVER win AS w4,
-         concat(LEAD(w, 2) OVER win, ' ', LEAD(w, 3) OVER win) AS w23
-  FROM (
-    SELECT doc_id, LENGTH(text) AS tc, pos, w
-    FROM documents
-    LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w) x
-  WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-"""
-        grams_sql = {
-            2: ("SELECT doc_id, tc, concat(w, ' ', w1) AS g FROM leads "
-                "WHERE w1 IS NOT NULL"),
-            3: ("SELECT doc_id, tc, concat(w, ' ', w1, ' ', w2) AS g "
-                "FROM leads WHERE w2 IS NOT NULL"),
-            5: ("SELECT doc_id, tc, concat(w, ' ', w1, ' ', w23, ' ', w4)"
-                " AS g FROM leads WHERE w4 IS NOT NULL"),
-        }
-
-        def grams(n: int) -> str:
-            return grams_sql[n]
-    else:
-        words = ("SELECT doc_id, string_split(text, ' ') AS l, "
-                 "LENGTH(text) AS tc FROM documents")
-
-        def grams(n: int) -> str:
-            cat = " || ' ' || ".join(f"l[i + {j}]" for j in range(n))
-            return f"""
-  SELECT doc_id, tc, {cat} AS g
-  FROM words,
-       UNNEST(generate_series(1, GREATEST(len(l) - {n - 1}, 0))) s(i)
-"""
-
-    def topfrac(n: int) -> str:
-        return f"""
-  SELECT doc_id, f FROM (
-    SELECT doc_id, CAST(c * LENGTH(g) AS DOUBLE) / tc AS f,
-           ROW_NUMBER() OVER (PARTITION BY doc_id
-                              ORDER BY c DESC, g) AS rn
-    FROM c{n}) x{n} WHERE rn = 1
-"""
-
-    lead_cte = ("leads AS (" + words + "), " if d == "spark" else "")
-    base_cte = ("words AS (" + words + "), " if d != "spark" else "")
-    return f"""
-WITH {lead_cte}{base_cte}g2 AS ({grams(2)}),
-c2 AS (SELECT doc_id, tc, g, COUNT(*) AS c FROM g2 GROUP BY doc_id, tc, g),
-t2 AS ({topfrac(2)}),
-g3 AS ({grams(3)}),
-c3 AS (SELECT doc_id, tc, g, COUNT(*) AS c FROM g3 GROUP BY doc_id, tc, g),
-t3 AS ({topfrac(3)}),
-g5 AS ({grams(5)}),
-c5 AS (SELECT doc_id, tc, g, COUNT(*) AS c FROM g5 GROUP BY doc_id, tc, g),
-d5 AS (
-  SELECT doc_id,
-         CAST(COALESCE(SUM(CASE WHEN c > 1 THEN c * LENGTH(g) END), 0)
-              AS DOUBLE) / MAX(tc) AS f
-  FROM c5 GROUP BY doc_id
-)
-SELECT t2.doc_id AS doc_id,
-       ROUND(t2.f, 6) AS top2_frac,
-       ROUND(t3.f, 6) AS top3_frac,
-       ROUND(d5.f, 6) AS dup5_frac,
-       (t2.f <= 0.20 AND t3.f <= 0.18 AND d5.f <= 0.15) AS keep
-FROM t2
-JOIN t3 ON t3.doc_id = t2.doc_id
-JOIN d5 ON d5.doc_id = t2.doc_id
-"""
-
-
-_EXTENDED["gopher_repetition"] = (_gopher_sql("spark"), _gopher_sql("duck"))
 
 
 # --- IVF-PQ ANN gate (extended set; the 50-row budget is full) -------------
@@ -5521,345 +5162,11 @@ _EXTENDED["height_regression"] = (_height_regression_sql("spark"),
                                   _height_regression_sql("duck"))
 
 
-# --- exact substring-span dedup (extended set) ------------------------------
-# Inter-document duplicated-SPAN detection (the Lee et al. 2021
-# "Deduplicating Training Data" exact-substring operator) re-expressed
-# relationally: hash every W=4-token window, a window is duplicated when
-# its hash occurs in >= 2 distinct documents, and a token position is
-# contaminated when any duplicated window covers it. At 100 TB this is
-# one map-side window generation (narrow (doc, pos, md5) rows — the
-# inherent O(tokens) unit of work of substring dedup, NOT avoidable
-# row inflation) + one hash shuffle on the window hash; the coverage
-# explode fans out only the duplicated windows, x W. W=4 on the sf word
-# soup leaves 132/500 docs untouched, so the filter provably acts both
-# ways; real corpora use W~50 with the same plan.
-
-def _substr_dedup_sql(d: str) -> str:
-    w = 4
-    if d == "spark":
-        win = f"""
-  SELECT doc_id, n_tok, s, md5(array_join(slice(l, s, {w}), ' ')) AS h
-  FROM toks LATERAL VIEW explode(sequence(1, n_tok - {w} + 1)) t AS s"""
-        toks = f"""
-  SELECT doc_id, split(text, ' ') AS l, size(split(text, ' ')) AS n_tok
-  FROM documents WHERE size(split(text, ' ')) >= {w}"""
-        cov = f"""
-  SELECT doc_id, COUNT(DISTINCT p) AS n_cov
-  FROM dw LATERAL VIEW explode(sequence(s, s + {w} - 1)) t AS p
-  GROUP BY doc_id"""
-    else:
-        win = f"""
-  SELECT doc_id, n_tok, s,
-         md5(array_to_string(list_slice(l, s, s + {w} - 1), ' ')) AS h
-  FROM toks, UNNEST(generate_series(1, n_tok - {w} + 1)) g(s)"""
-        toks = f"""
-  SELECT doc_id, string_split(text, ' ') AS l,
-         len(string_split(text, ' ')) AS n_tok
-  FROM documents WHERE len(string_split(text, ' ')) >= {w}"""
-        cov = f"""
-  SELECT doc_id, COUNT(DISTINCT p) AS n_cov
-  FROM dw, UNNEST(generate_series(s, s + {w} - 1)) g(p)
-  GROUP BY doc_id"""
-    return f"""
-WITH toks AS ({toks}),
-win AS ({win}),
-dup AS (
-  SELECT h FROM win GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
-),
-dw AS (SELECT w.doc_id, w.s FROM win w JOIN dup d ON d.h = w.h),
-cov AS ({cov}),
-agg AS (
-  SELECT w.doc_id, MAX(w.n_tok) AS n_tok, COUNT(*) AS n_windows,
-         COUNT(d.h) AS n_dup
-  FROM win w LEFT JOIN dup d ON d.h = w.h
-  GROUP BY w.doc_id
-)
-SELECT CAST(a.doc_id AS BIGINT) AS doc_id,
-       CAST(a.n_windows AS BIGINT) AS n_windows,
-       CAST(a.n_dup AS BIGINT) AS n_dup_windows,
-       CAST(COALESCE(c.n_cov, 0) AS BIGINT) AS n_dup_tokens,
-       ROUND(COALESCE(c.n_cov, 0) / CAST(a.n_tok AS DOUBLE), 6) AS dup_frac
-FROM agg a LEFT JOIN cov c ON c.doc_id = a.doc_id
-"""
-
-
-_EXTENDED["substring_dedup"] = (_substr_dedup_sql("spark"),
-                                _substr_dedup_sql("duck"))
-
-
-# --- benchmark decontamination (extended set) -------------------------------
-# Eval-set contamination scan: the benchmark is 20 8-gram probes drawn
-# deterministically FROM the corpus itself (docs 0..19, offset
-# 1 + doc_id % (n_tok - 7)), so both engines derive identical ground
-# truth and every probe provably hits >= 1 document while most documents
-# stay clean — the flag acts both ways. The probe subset is a pushed-down
-# doc_id filter, NOT a global rank (an eval set is a designated small
-# input; ranking the whole corpus to pick 20 rows would be a global
-# sort). Plan shape at 100 TB: the probe set is tiny (broadcast), the
-# document side is one map-side window-hash projection, and the match is
-# a broadcast hash join — no shuffle of document data at all.
-
-def _decontaminate_sql(d: str) -> str:
-    w = 8
-    if d == "spark":
-        toks = f"""
-  SELECT doc_id, split(text, ' ') AS l, size(split(text, ' ')) AS n_tok
-  FROM documents WHERE size(split(text, ' ')) >= {w}"""
-        win = f"""
-  SELECT doc_id, md5(array_join(slice(l, s, {w}), ' ')) AS h
-  FROM toks LATERAL VIEW explode(sequence(1, n_tok - {w} + 1)) t AS s"""
-        probe = f"""
-  SELECT doc_id AS bench_id,
-         md5(array_join(slice(l,
-             CAST(1 + doc_id % (n_tok - {w} + 1) AS INT), {w}), ' ')) AS h
-  FROM toks WHERE doc_id < 20"""
-        hint = "/*+ BROADCAST(b) */ "
-    else:
-        toks = f"""
-  SELECT doc_id, string_split(text, ' ') AS l,
-         len(string_split(text, ' ')) AS n_tok
-  FROM documents WHERE len(string_split(text, ' ')) >= {w}"""
-        win = f"""
-  SELECT doc_id, md5(array_to_string(list_slice(l, s, s + {w} - 1), ' '))
-         AS h
-  FROM toks, UNNEST(generate_series(1, n_tok - {w} + 1)) g(s)"""
-        probe = f"""
-  SELECT doc_id AS bench_id,
-         md5(array_to_string(
-             list_slice(l, 1 + doc_id % (n_tok - {w} + 1),
-                        doc_id % (n_tok - {w} + 1) + {w}), ' ')) AS h
-  FROM toks WHERE doc_id < 20"""
-        hint = ""
-    return f"""
-WITH toks AS ({toks}),
-bench AS ({probe}),
-win AS ({win}),
-hits AS (
-  SELECT {hint}w.doc_id, COUNT(DISTINCT b.bench_id) AS n_hits
-  FROM win w JOIN bench b ON b.h = w.h
-  GROUP BY w.doc_id
-)
-SELECT CAST(t.doc_id AS BIGINT) AS doc_id,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_bench_hits,
-       CAST(CASE WHEN COALESCE(h.n_hits, 0) > 0 THEN 1 ELSE 0 END
-            AS BIGINT) AS contaminated
-FROM toks t LEFT JOIN hits h ON h.doc_id = t.doc_id
-"""
-
-
-_EXTENDED["decontaminate"] = (_decontaminate_sql("spark"),
-                              _decontaminate_sql("duck"))
-
-
-# --- sequence packing (extended set) ----------------------------------------
-# Context-window packing (the GPT-style concatenate-and-split step):
-# documents are laid head-to-tail in a deterministic md5-ranked stream
-# per language and cut into fixed B=128-token training sequences; each
-# doc reports the sequence it starts in and its offset there. One window
-# over (lang)-partitioned cumulative sums — per-stratum streams keep the
-# sort partition-local at 100 TB (no global total order), which is how
-# production packers shard the job.
-
-def _sequence_pack_sql(d: str) -> str:
-    b = 128
-    if d == "spark":
-        ntok, cast_t = "size(split(text, ' '))", "STRING"
-    else:
-        ntok, cast_t = "len(string_split(text, ' '))", "VARCHAR"
-    return f"""
-WITH toks AS (
-  SELECT doc_id, lang, {ntok} AS n_tok FROM documents
-),
-ord AS (
-  SELECT doc_id, lang, n_tok,
-         SUM(n_tok) OVER (
-           PARTITION BY lang
-           ORDER BY md5(CAST(doc_id AS {cast_t})), doc_id
-           ROWS UNBOUNDED PRECEDING) AS cum
-  FROM toks
-)
-SELECT lang, CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(n_tok AS BIGINT) AS n_tok,
-       CAST(FLOOR((cum - n_tok) / {b}.0) AS BIGINT) AS seq_id,
-       CAST((cum - n_tok) % {b} AS BIGINT) AS seq_offset
-FROM ord
-"""
-
-
-_EXTENDED["sequence_pack"] = (_sequence_pack_sql("spark"),
-                              _sequence_pack_sql("duck"))
-
-
-# --- hashed-feature linear quality classifier (extended set) ----------------
-# Model-based quality filtering (the fastText-classifier step of CCNet/
-# LLaMA-style pipelines) with a 64-bucket hashing-trick linear model
-# whose weights are a closed-form function of the bucket index
-# (w_j = (j * 2654435761) % 1024 - 512), so both engines own identical
-# coefficients and every sum is integer-exact in any order. The Spark
-# side scores each document in ONE per-row aggregate() higher-order
-# expression over the token array — a map-only plan, zero shuffle, the
-# shape a broadcast-coefficients classifier has at 100 TB; the DuckDB
-# oracle re-derives it by explode + GROUP BY.
-
-_HEX = "instr('0123456789abcdef', {c}) - 1"
-
-
-def _qc_weight(md5_expr: str, sub: str) -> str:
-    h1 = _HEX.format(c=f"{sub}({md5_expr}, 1, 1)")
-    h2 = _HEX.format(c=f"{sub}({md5_expr}, 2, 1)")
-    return (f"(((({h1}) * 16 + ({h2})) % 64) * 2654435761) % 1024 - 512")
-
-
-_QC_SPARK = f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(size(split(text, ' ')) AS BIGINT) AS n_words,
-       score_int,
-       ROUND(score_int / CAST(size(split(text, ' ')) AS DOUBLE), 6)
-           AS quality,
-       CAST(CASE WHEN score_int > 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
-FROM (
-  SELECT doc_id, text,
-         aggregate(split(text, ' '), 0L,
-                   (acc, x) -> acc + ({_qc_weight('md5(x)', 'substring')}))
-             AS score_int
-  FROM documents) t
-"""
-
-_QC_DUCK = f"""
-WITH wd AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS x,
-         len(string_split(text, ' ')) AS n_words
-  FROM documents
-),
-sc AS (
-  SELECT doc_id, MAX(n_words) AS n_words,
-         SUM({_qc_weight('md5(x)', 'substr')}) AS score_int
-  FROM wd GROUP BY doc_id
-)
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(n_words AS BIGINT) AS n_words,
-       CAST(score_int AS BIGINT) AS score_int,
-       ROUND(score_int / CAST(n_words AS DOUBLE), 6) AS quality,
-       CAST(CASE WHEN score_int > 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
-FROM sc
-"""
-
-_EXTENDED["quality_classifier"] = (_QC_SPARK, _QC_DUCK)
-
-
-# --- SemDeDup semantic dedup (extended set) ---------------------------------
-# The embedding-side near-dup DROP operator (Abbas et al. 2023): coarse
-# k-means cells bound the pairwise-cosine stage (the quadratic never
-# leaves a cell — at 10^12 vectors n_centroids grows with N and the plan
-# is unchanged), >= 0.95 pairs feed the REAL distributed
-# connected-components engine, min-id canonicals keep one copy. The gate
-# runs operators/similarity.semdedup in its oracle mode (iters=0 pins the
-# codebook to the md5-ranked init rows) over an integer-quantized corpus
-# of all 500 embeddings + 100 planted perturbed companions, so clusters
-# provably exist and most vectors stay singletons; every sum is a sum of
-# integer-valued doubles (exact in any order), so assignment distances,
-# cosines, and the 0.95 cut are bit-identical in both engines. DuckDB
-# re-derives init ranking, argmin cells, within-cell cosine pairs, and a
-# recursive-CTE transitive closure.
-
-_SEM_CORPUS_SPARK = """
-WITH orig AS (
-  SELECT vec_id AS id,
-         transform(sequence(1, 64),
-                   i -> CAST(ROUND(element_at(embedding, i) * 10000, 0)
-                             AS BIGINT)) AS v
-  FROM embeddings
-), pert AS (
-  SELECT id + 100000 AS id,
-         transform(sequence(1, 64),
-                   i -> element_at(v, i)
-                        + CAST(FLOOR(CAST(element_at(v, i % 64 + 1)
-                                          AS DOUBLE) / 10.0) AS BIGINT))
-             AS v
-  FROM orig WHERE orig.id < 100
-), corpus AS (SELECT * FROM orig UNION ALL SELECT * FROM pert)
-SELECT id, transform(v, x -> CAST(x AS DOUBLE)) AS embedding FROM corpus
-"""
-
-
-def _semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lidartree_spark.operators.similarity import semdedup
-
-    load_views(spark, sf_dir)
-    corpus = spark.sql(_SEM_CORPUS_SPARK)
-    return semdedup(corpus, n_centroids=8, threshold=0.95, iters=0,
-                    id_col="id", vec_col="embedding")
-
-
-_SEMDEDUP_DUCK = """
-WITH RECURSIVE orig AS (
-  SELECT vec_id AS id,
-         list_transform(range(1, 65),
-                        i -> CAST(CAST(ROUND(embedding[i] * 10000)
-                                       AS BIGINT) AS DOUBLE)) AS v
-  FROM embeddings
-), pert AS (
-  SELECT id + 100000 AS id,
-         list_transform(range(1, 65),
-                        i -> v[i] + CAST(FLOOR(v[i % 64 + 1] / 10.0)
-                                         AS BIGINT)) AS v
-  FROM orig WHERE orig.id < 100
-), corpus AS (SELECT * FROM orig UNION ALL SELECT * FROM pert),
-centh AS (
-  SELECT v, md5('131|' || CAST(id AS VARCHAR)) AS h
-  FROM corpus ORDER BY h LIMIT 8
-), cent AS (
-  SELECT v AS cv, ROW_NUMBER() OVER (ORDER BY h) - 1 AS cid FROM centh
-), assign AS (
-  SELECT c.id, t.cid,
-         list_sum(list_transform(range(1, 65),
-                  i -> (c.v[i] - t.cv[i]) * (c.v[i] - t.cv[i]))) AS d2
-  FROM corpus c, cent t
-), best AS (
-  SELECT id, cid FROM (
-    SELECT id, cid,
-           ROW_NUMBER() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-    FROM assign) r
-  WHERE rn = 1
-), pairs AS (
-  SELECT a.id AS ida, b.id AS idb
-  FROM best a JOIN best b ON a.cid = b.cid AND a.id < b.id
-  JOIN corpus x ON x.id = a.id
-  JOIN corpus y ON y.id = b.id
-  WHERE list_sum(list_transform(range(1, 65), i -> x.v[i] * y.v[i]))
-        / (SQRT(list_sum(list_transform(x.v, e -> e * e)))
-           * SQRT(list_sum(list_transform(y.v, e -> e * e)))) >= 0.95
-), sym AS (
-  SELECT ida AS u, idb AS w FROM pairs UNION SELECT idb, ida FROM pairs
-  UNION SELECT ida, ida FROM pairs UNION SELECT idb, idb FROM pairs
-), cc AS (
-  SELECT u, w FROM sym
-  UNION
-  SELECT c.u, s.w FROM cc c JOIN sym s ON s.u = c.w
-), lab AS (
-  SELECT u AS id, MIN(w) AS canonical FROM cc GROUP BY u
-), allv AS (
-  SELECT b.id, CAST(b.cid AS BIGINT) AS cell,
-         COALESCE(l.canonical, b.id) AS canonical
-  FROM best b LEFT JOIN lab l ON l.id = b.id
-)
-SELECT CAST(id AS BIGINT) AS id, cell,
-       CAST(canonical AS BIGINT) AS canonical,
-       CAST(COUNT(*) OVER (PARTITION BY canonical) AS BIGINT)
-           AS cluster_size,
-       id = canonical AS keep
-FROM allv
-"""
-
-_EXTENDED["semdedup"] = (_semdedup_gate, _SEMDEDUP_DUCK)
-
-
 # --- aspect-ratio bucketed image batch packing (extended set) ---------------
-# The image-side twin of sequence_pack: vision-training batch prep
-# (NaViT / SDXL-style aspect bucketing) packs images into fixed
-# pixel-budget batches WITHIN an aspect class, so a batch never mixes
-# orientations. Buckets come from integer cross-multiplication (4w<=3h
-# tall, 4h<=3w wide — no float ratios), order within a bucket is the
+# Vision-training batch prep (NaViT / SDXL-style aspect bucketing) packs
+# images into fixed pixel-budget batches WITHIN an aspect class, so a batch
+# never mixes orientations. Buckets come from integer cross-multiplication
+# (4w<=3h tall, 4h<=3w wide — no float ratios), order within a bucket is the
 # md5-ranked rerun-stable stream, and the pack is ONE partitioned
 # cumulative-sum window — no global total order at any corpus size.
 # Dimensions derive deterministically from doc_id so both engines own
@@ -6019,97 +5326,6 @@ FROM l ASOF LEFT JOIN r ON l.user_id = r.r_user AND l.ts >= r.view_ts
 _EXTENDED["asof_join"] = (_asof_gate, _ASOF_DUCK)
 
 
-# --- bucketed interval join (extended set) ----------------------------------
-# The temporal range join: views falling inside each purchase's trailing
-# 1-hour window, per user. The Spark side is the 100 TB plan shape — the
-# interval explodes into its covered HOUR buckets (<= 2 rows for a 1-hour
-# window, bounded fan-out) and the probe side buckets by hour, turning the
-# range predicate into an EQUI-join on (user, hour) + exact residual
-# filter: the same bucketed-candidates pattern raster_xy_mask uses on
-# space, applied to time. The DuckDB oracle is the plain unbucketed range
-# join, so the gate proves the rewrite exact. COUNT/MAX keep every output
-# engine-exact (no double summation).
-
-def _interval_join_sql(d: str) -> str:
-    if d == "spark":
-        div = "unix_micros(CAST({c} AS TIMESTAMP)) DIV 3600000000"
-        seq = ("LATERAL VIEW explode(sequence({lo}, {hi})) t AS hb"
-               .format(lo=div.format(c="lo"), hi=div.format(c="ts")))
-        return f"""
-WITH pur AS (
-  SELECT event_id AS purchase_id, user_id, ts,
-         ts - INTERVAL 1 HOUR AS lo
-  FROM events WHERE event_type = 'purchase'),
-pb AS (
-  SELECT event_id AS view_id, user_id, ts AS vts,
-         {div.format(c="ts")} AS hb
-  FROM events WHERE event_type = 'view'),
-ib AS (SELECT purchase_id, user_id, ts, lo, hb FROM pur {seq})
-SELECT i.purchase_id, CAST(i.user_id AS BIGINT) AS user_id,
-       CAST(COUNT(v.view_id) AS BIGINT) AS n_views,
-       MAX(v.view_id) AS max_view_id
-FROM ib i LEFT JOIN pb v
-  ON v.user_id = i.user_id AND v.hb = i.hb
-     AND v.vts > i.lo AND v.vts <= i.ts
-GROUP BY i.purchase_id, i.user_id
-"""
-    return """
-WITH pur AS (
-  SELECT event_id AS purchase_id, user_id, ts,
-         ts - INTERVAL 1 HOUR AS lo
-  FROM events WHERE event_type = 'purchase'),
-v AS (
-  SELECT event_id AS view_id, user_id AS vu, ts AS vts
-  FROM events WHERE event_type = 'view')
-SELECT p.purchase_id, CAST(p.user_id AS BIGINT) AS user_id,
-       CAST(COUNT(x.view_id) AS BIGINT) AS n_views,
-       MAX(x.view_id) AS max_view_id
-FROM pur p LEFT JOIN v x
-  ON x.vu = p.user_id AND x.vts > p.lo AND x.vts <= p.ts
-GROUP BY 1, 2
-"""
-
-
-_EXTENDED["interval_join"] = (_interval_join_sql("spark"),
-                              _interval_join_sql("duck"))
-
-
-# --- gap-based sessionization (extended set) --------------------------------
-# The batch twin of the streaming session window: a new session starts
-# when a user's inter-event gap exceeds 6 hours. LAG marks boundaries, a
-# running SUM numbers sessions, one grouped rollup per (user, session) —
-# two windows + one aggregation, all partitioned by user (one shuffle at
-# any scale). Microsecond epochs keep every value BIGINT-exact.
-
-def _sessionize_sql(d: str) -> str:
-    us = ("unix_micros(CAST(ts AS TIMESTAMP))" if d == "spark"
-          else "epoch_us(ts)")
-    return f"""
-WITH e AS (
-  SELECT user_id, event_id, {us} AS us FROM events),
-g AS (
-  SELECT user_id, event_id, us,
-         CASE WHEN LAG(us) OVER w IS NULL
-                   OR us - LAG(us) OVER w > 21600000000 THEN 1
-              ELSE 0 END AS new_s
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-s AS (
-  SELECT user_id, event_id, us,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                          ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM g)
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       CAST(session_id AS BIGINT) AS session_id,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(MIN(event_id) AS BIGINT) AS first_event,
-       CAST(MAX(us) - MIN(us) AS BIGINT) AS dur_us
-FROM s GROUP BY 1, 2
-"""
-
-
-_EXTENDED["sessionize"] = (_sessionize_sql("spark"), _sessionize_sql("duck"))
-
-
 # --- multi-level rollup aggregation (extended set) --------------------------
 # OLAP cube semantics over the corpus dimensions: one ROLLUP pass emits
 # (lang, source), (lang), and grand-total rows with GROUPING markers —
@@ -6202,368 +5418,6 @@ FROM pix GROUP BY pr, pc
 _EXTENDED["overview_pyramid"] = (_overview_gate, _OVERVIEW_DUCK)
 
 
-# --- streaming session windows (extended set) -------------------------------
-# The streaming twin of the batch sessionize gate: F.session_window merges
-# per-user events arriving strictly within the 6-hour gap, across TWO
-# forced micro-batches (state carries open sessions over the batch
-# boundary). Oracle = the batch LAG + running-SUM derivation with the
-# matching STRICT gap rule (>= gap starts a new session — Spark session
-# ranges are half-open).
-
-def _streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lidartree_spark.streaming.ops import (
-        session_event_stats,
-        stream_events,
-    )
-    src = _stage_events(spark, sf_dir, n_files=2)
-    return _run_stream(
-        spark,
-        session_event_stats(stream_events(spark, src,
-                                          max_files_per_trigger=1)),
-        "sess_", "complete")
-
-
-_STREAM_SESSIONS_DUCK = """
-WITH e AS (
-  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-g AS (
-  SELECT user_id, event_id, us,
-         CASE WHEN LAG(us) OVER w IS NULL
-                   OR us - LAG(us) OVER w >= 21600000000 THEN 1
-              ELSE 0 END AS new_s
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-s AS (
-  SELECT user_id, event_id, us,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM g)
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       CAST(MIN(us) AS BIGINT) AS session_start_us,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(MIN(event_id) AS BIGINT) AS first_event,
-       CAST(MAX(us) - MIN(us) AS BIGINT) AS dur_us
-FROM s GROUP BY user_id, sid
-"""
-
-_EXTENDED["streaming_sessions"] = (_streaming_sessions,
-                                   _STREAM_SESSIONS_DUCK)
-
-
-# --- stream-stream join (extended set) --------------------------------------
-# The last named Structured Streaming capability: a watermarked
-# stream-stream inner join (clicks x same-user views in the trailing
-# 1-hour window) across two forced micro-batches — Spark buffers unmatched
-# rows as STATE bounded by the watermark + time-range condition. Oracle =
-# the plain batch range join, so the pairs must come out exactly right
-# even when click and view arrive in different micro-batches.
-
-def _streaming_pair_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lidartree_spark.streaming.ops import stream_events, stream_pair_join
-    src = _stage_events(spark, sf_dir, n_files=2)
-    ev = stream_events(spark, src, max_files_per_trigger=1)
-    return _run_stream(
-        spark,
-        stream_pair_join(ev.where("event_type = 'click'"),
-                         ev.where("event_type = 'view'")),
-        "spj_", "append")
-
-
-_STREAM_PAIR_DUCK = """
-WITH c AS (
-  SELECT event_id AS click_id, user_id, ts AS cts
-  FROM events WHERE event_type = 'click'),
-v AS (
-  SELECT event_id AS view_id, user_id AS vu, ts AS vts
-  FROM events WHERE event_type = 'view')
-SELECT c.click_id, v.view_id, CAST(c.user_id AS BIGINT) AS user_id,
-       epoch_us(c.cts) - epoch_us(v.vts) AS gap_us
-FROM c JOIN v
-  ON v.vu = c.user_id AND v.vts > c.cts - INTERVAL 1 HOUR
-     AND v.vts <= c.cts
-"""
-
-_EXTENDED["streaming_pair_join"] = (_streaming_pair_join,
-                                    _STREAM_PAIR_DUCK)
-
-
-# --- integer-exact PageRank (extended set) ----------------------------------
-# The iterative-graph-analytics family: _PR_ITERS power iterations of
-# PageRank (d = 0.85) over the symmetrized bipartite customer<->supplier
-# graph from lineitem+orders. ALL arithmetic is scaled-integer (ranks
-# in 1e-12 units, damping via *85 DIV 100), so both engines produce
-# bit-identical BIGINTs with no float summation anywhere. Spark expresses
-# each iteration as one join + one keyed aggregation (the Pregel shape:
-# L iterations = L shuffles, each combinable map-side); the oracle unrolls
-# the same recurrence as 10 chained CTEs. Symmetrization guarantees
-# outdeg >= 1 (no dangling-mass term needed).
-
-_PR_ITERS = 6
-_PR_SCALE = 10 ** 12
-
-
-def _pagerank_edges_sql() -> str:
-    return """
-SELECT DISTINCT l_suppkey AS src, o_custkey + 1000000 AS dst
-FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-"""
-
-
-def _pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_views(spark, sf_dir)
-    e = spark.sql(_pagerank_edges_sql())
-    edges = (e.unionByName(e.selectExpr("dst AS src", "src AS dst"))
-             .distinct())
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    # DIV everywhere (never `/` + cast: double division rounds to nearest
-    # before truncation and can cross an integer boundary — DIV is the
-    # exact integer floor both engines share). n is a tiny driver-side
-    # count embedded as a literal, like train_centroids' K.
-    edges = edges.persist()
-    deg = deg.persist()
-    nodes = nodes.persist()
-    n = nodes.count()
-    ranks = nodes.selectExpr("node", f"{_PR_SCALE} DIV {n}L AS r")
-    for i in range(_PR_ITERS):
-        # per-node share first (node-sized join), THEN the edge join: the
-        # r DIV outdeg division happens once per node, not once per edge,
-        # and each iteration is one node join + one edge join + one agg
-        shares = (ranks.join(deg, ranks.node == deg.src)
-                  .selectExpr("node AS src", "r DIV outdeg AS c"))
-        contrib = edges.join(shares, "src").selectExpr("dst AS node", "c")
-        gathered = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (nodes.join(gathered, "node", "left")
-                 .selectExpr(
-                     "node",
-                     f"(15 * ({_PR_SCALE} DIV {n}L)) DIV 100"
-                     " + (85 * COALESCE(s, 0L)) DIV 100 AS r"))
-        # cut lineage every second iteration (the connected_components
-        # pattern): unchecked, the plan nests 10 joins deep and Catalyst
-        # re-analysis dominates; checkpointing EVERY iteration pays one
-        # materialization job per round, the worst of both — every 2 is
-        # the measured sweet spot
-        if i % 2 == 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    for df in (edges, deg, nodes):
-        df.unpersist()
-    return ranks.selectExpr("CAST(node AS BIGINT) AS node",
-                            "CAST(r AS BIGINT) AS rank")
-
-
-def _pagerank_duck() -> str:
-    cte = [f"""
-e0 AS ({_pagerank_edges_sql()}),
-edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-nn AS (SELECT COUNT(*) AS n FROM nodes),
-r0 AS (SELECT node, {_PR_SCALE} // (SELECT n FROM nn) AS r FROM nodes)"""]
-    for i in range(_PR_ITERS):
-        cte.append(f"""
-g{i} AS (
-  SELECT e.dst AS node, SUM(r.r // d.outdeg) AS s
-  FROM edges e JOIN r{i} r ON r.node = e.src JOIN deg d ON d.src = e.src
-  GROUP BY e.dst),
-r{i + 1} AS (
-  SELECT n.node,
-         (15 * ({_PR_SCALE} // (SELECT n FROM nn))) // 100
-         + (85 * COALESCE(g.s, 0)) // 100 AS r
-  FROM nodes n LEFT JOIN g{i} g ON g.node = n.node)""")
-    return ("WITH " + ",".join(cte) + f"""
-SELECT CAST(node AS BIGINT) AS node, CAST(r AS BIGINT) AS rank
-FROM r{_PR_ITERS}""")
-
-
-_EXTENDED["pagerank"] = (_pagerank, _pagerank_duck())
-
-
-# --- C4 cleaning heuristics (extended set) ----------------------------------
-# The named C4 pipeline rules (Raffel et al. 2019, "Exploring the Limits
-# of Transfer Learning..." §2.2): keep lines with >= 5 words ending in
-# terminal punctuation; drop pages containing '{' or 'lorem ipsum'; drop
-# pages with < 3 retained sentences. Same design as pii_scan: the corpus
-# is PLANTED in-query with residue-coded line composition, the Spark side
-# runs the REAL line split/explode/filter, and the DuckDB oracle derives
-# every count closed-form from i's residues — pinning Spark's actual
-# string behavior against ground truth. Map-side scan family at 100 TB
-# (per-doc explode + grouped count, no cross-document joins); 32/120
-# planted docs keep, so every rule provably acts both ways.
-
-_C4_SPARK = """
-WITH ids AS (SELECT id AS i FROM range(0, 120)),
-doc AS (
-  SELECT i, concat(
-    'the quick brown fox jumps over the lazy dog.', '\\n',
-    'no terminal punctuation on this line', '\\n',
-    'too short.', '\\n',
-    'another perfectly reasonable sentence appears right here.',
-    CASE WHEN i % 2 = 0
-         THEN concat('\\n', 'a third good sentence with plenty of words.')
-         ELSE '' END,
-    CASE WHEN i % 3 = 0
-         THEN concat('\\n', 'var x = { broken: code };') ELSE '' END,
-    CASE WHEN i % 5 = 0
-         THEN concat('\\n', 'this page contains lorem ipsum text sadly.')
-         ELSE '' END) AS text
-  FROM ids),
-lr AS (
-  SELECT i,
-         CASE WHEN size(split(line, ' ')) >= 5
-                   AND right(line, 1) IN ('.', '!', '?') THEN 1
-              ELSE 0 END AS kept
-  FROM doc LATERAL VIEW explode(split(text, '\\n')) t AS line),
-agg AS (
-  SELECT i, COUNT(*) AS n_lines, SUM(kept) AS n_kept FROM lr GROUP BY i),
-flags AS (
-  SELECT i, instr(text, '{') > 0 AS has_brace,
-         instr(text, 'lorem ipsum') > 0 AS has_lorem
-  FROM doc)
-SELECT CAST(a.i AS BIGINT) AS did,
-       CAST(a.n_lines AS BIGINT) AS n_lines,
-       CAST(a.n_kept AS BIGINT) AS n_kept_lines,
-       f.has_brace, f.has_lorem,
-       (NOT f.has_brace AND NOT f.has_lorem AND a.n_kept >= 3) AS keep
-FROM agg a JOIN flags f ON f.i = a.i
-"""
-
-_C4_DUCK = """
-WITH ids AS (SELECT i FROM UNNEST(generate_series(0, 119)) g(i))
-SELECT CAST(i AS BIGINT) AS did,
-       CAST(4 + CASE WHEN i % 2 = 0 THEN 1 ELSE 0 END
-              + CASE WHEN i % 3 = 0 THEN 1 ELSE 0 END
-              + CASE WHEN i % 5 = 0 THEN 1 ELSE 0 END AS BIGINT) AS n_lines,
-       CAST(2 + CASE WHEN i % 2 = 0 THEN 1 ELSE 0 END
-              + CASE WHEN i % 5 = 0 THEN 1 ELSE 0 END AS BIGINT)
-           AS n_kept_lines,
-       i % 3 = 0 AS has_brace,
-       i % 5 = 0 AS has_lorem,
-       (i % 2 = 0 AND i % 3 <> 0 AND i % 5 <> 0) AS keep
-FROM ids
-"""
-
-_EXTENDED["c4_heuristics"] = (_C4_SPARK, _C4_DUCK)
-
-
-# --- distributed sketches: HyperLogLog + Count-Min (extended set) -----------
-# The mergeable-sketch family on deterministic md5 hashing, so BOTH
-# engines derive identical sketches from first principles (no RNG, no
-# engine-private hash). Scale story: both sketches are algebraic
-# aggregates — register-max / cell-count partials combine map-side, the
-# final merge is O(registers), and the sketch for a 10^12-token corpus is
-# the same 64 numbers.
-#
-# 'reg'/'est' — HyperLogLog (Flajolet et al. 2007), m = 64 registers:
-#     bucket = first-2-hex-chars md5 trick (the quality_classifier idiom),
-#     rho = 1 + leading zero BITS of the next 12 nibbles (nibble-wise
-#     relational derivation), register = MAX(rho). The harmonic-mean
-#     estimate is computed from the EXACT BIGINT S = sum 2^(50-reg) with a
-#     fixed IEEE op order, so the double is engine-identical; the exact
-#     COUNT(DISTINCT) rides along as the accuracy reference.
-# 'cms'/'hh' — Count-Min (Cormode & Muthukrishnan 2005), depth 2 x width
-#     64 on salted md5 rows; 'hh' queries the top-5 true heavy hitters and
-#     reports estimate = min over rows (the CM upper bound, integer-exact).
-
-def _sketches_sql(d: str) -> str:
-    if d == "spark":
-        tok_src = """
-  SELECT lang, explode(split(text, ' ')) AS tok FROM documents"""
-        jpos = "LATERAL VIEW explode(sequence(1, 12)) jp AS j"
-        dpos = "LATERAL VIEW explode(array('0', '1')) dp AS d"
-        # lateral explode, NOT a comma cross join: the registry-wide plan
-        # hygiene gate forbids CartesianProduct even for a 5x64 spine
-        bpos = "LATERAL VIEW explode(sequence(0, 63)) bp AS b"
-        sub = "substring"
-    else:
-        tok_src = """
-  SELECT lang, u.tok AS tok
-  FROM documents, UNNEST(string_split(text, ' ')) u(tok)"""
-        jpos = ", UNNEST(generate_series(1, 12)) jp(j)"
-        dpos = ", UNNEST(['0', '1']) dp(d)"
-        bpos = ", UNNEST(generate_series(0, 63)) bp(b)"
-        sub = "substr"
-
-    h1 = _HEX.format(c=f"{sub}(hx, 1, 1)")
-    h2 = _HEX.format(c=f"{sub}(hx, 2, 1)")
-    ch1 = _HEX.format(c=f"{sub}(chx, 1, 1)")
-    ch2 = _HEX.format(c=f"{sub}(chx, 2, 1)")
-    nz = (f"CASE WHEN {sub}(hx, j + 2, 1) <> '0' THEN j END")
-    lzc = f"""CASE {sub}(hx, j1 + 2, 1)
-          WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
-          WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1 WHEN '7' THEN 1
-          ELSE 0 END"""
-    return f"""
-WITH toks AS ({tok_src}),
-hx AS (SELECT lang, tok, md5(tok) AS hx FROM toks),
-hb AS (
-  SELECT lang, tok, hx, (({h1}) * 16 + ({h2})) % 64 AS b,
-         MIN({nz}) AS j1
-  FROM hx {jpos}
-  GROUP BY lang, tok, hx),
-rho AS (
-  SELECT lang, b, COALESCE(4 * (j1 - 1) + ({lzc}) + 1, 49) AS rho
-  FROM hb),
-regs AS (
-  SELECT lang, b, MAX(rho) AS reg FROM rho GROUP BY lang, b),
-langs AS (SELECT DISTINCT lang FROM documents),
-spine AS (SELECT lang, b FROM langs {bpos}),
-full_regs AS (
-  SELECT s.lang, s.b, COALESCE(r.reg, 0) AS reg
-  FROM spine s LEFT JOIN regs r ON r.lang = s.lang AND r.b = s.b),
-hsum AS (
-  SELECT lang,
-         CAST(SUM(CAST(POW(2, 50 - reg) AS BIGINT)) AS BIGINT) AS s,
-         CAST(SUM(CASE WHEN reg = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v
-  FROM full_regs GROUP BY lang),
-exact AS (
-  SELECT lang, CAST(COUNT(DISTINCT tok) AS BIGINT) AS n FROM toks
-  GROUP BY lang),
-cms_cells AS (
-  SELECT CAST(d AS INT) AS dd,
-         (({ch1}) * 16 + ({ch2})) % 64 AS cb,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM (SELECT tok, d, md5(d || '|' || tok) AS chx FROM toks {dpos}) x
-  GROUP BY 1, 2),
-truec AS (
-  SELECT tok, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY tok),
-top5 AS (
-  SELECT tok, n FROM (
-    SELECT tok, n, ROW_NUMBER() OVER (ORDER BY n DESC, tok) AS rk
-    FROM truec) r
-  WHERE rk <= 5),
-hhq AS (
-  SELECT t.tok, t.n, MIN(c.c) AS est
-  FROM (SELECT tok, n, d, md5(d || '|' || tok) AS chx
-        FROM top5 {dpos}) t
-  JOIN cms_cells c
-    ON c.dd = CAST(t.d AS INT)
-   AND c.cb = (({ch1.replace("chx", "t.chx")}) * 16
-               + ({ch2.replace("chx", "t.chx")})) % 64
-  GROUP BY t.tok, t.n)
-SELECT 'reg' AS section, lang AS key, CAST(b AS BIGINT) AS k,
-       CAST(reg AS DOUBLE) AS val
-FROM full_regs
-UNION ALL
-SELECT 'est', e.lang, e.n,
-       -- full HLL: raw harmonic estimate, switched to linear counting in
-       -- the small range (E <= 2.5m and empty registers remain) exactly
-       -- as Flajolet et al. specify
-       CASE WHEN CAST(709 AS DOUBLE) * 4096 * POW(2, 50) / 1000 / h.s
-                 <= 160 AND h.v > 0
-            THEN 64 * LN(CAST(64 AS DOUBLE) / h.v)
-            ELSE CAST(709 AS DOUBLE) * 4096 * POW(2, 50) / 1000 / h.s
-       END
-FROM exact e JOIN hsum h ON h.lang = e.lang
-UNION ALL
-SELECT 'cms', 'all', CAST(dd * 64 + cb AS BIGINT), CAST(c AS DOUBLE)
-FROM cms_cells
-UNION ALL
-SELECT 'hh', tok, n, CAST(est AS DOUBLE) FROM hhq
-"""
-
-
-_EXTENDED["sketches"] = (_sketches_sql("spark"), _sketches_sql("duck"))
-
-
 # --- statistical text-selection filters: CCNet ppl + DSIR + tf-idf ----------
 # Three model-based data-selection operators over the documents corpus,
 # merged into one section-tagged driver gate (stat_filters); the standalone
@@ -6588,8 +5442,8 @@ _EXTENDED["sketches"] = (_sketches_sql("spark"), _sketches_sql("duck"))
 #           comes from percentile_approx on a sample with the same
 #           downstream CASE, the standard CCNet deployment.
 # 'dsir'  — Data Selection with Importance Resampling (Xie et al. 2023):
-#           hashed unigram features (the quality_classifier's 64 md5
-#           buckets), bucket weight = log p_target − log q_raw with add-one
+#           hashed unigram features (64 buckets from the first two hex
+#           digits of md5(word)), bucket weight = log p_target − log q_raw with add-one
 #           smoothing, per-document importance weight = integer sum of
 #           quantized bucket weights, top-25 selection via ORDER BY + LIMIT
 #           (TakeOrderedAndProject at scale — never a one-partition global
@@ -6602,6 +5456,9 @@ _EXTENDED["sketches"] = (_sketches_sql("spark"), _sketches_sql("duck"))
 # idf tables are all bounded (vocab, 64, vocab) -> broadcast joins; the only
 # corpus-sized shuffles are the per-doc aggregations on doc_id and one
 # bigram LEAD window per doc (Spark side), both keyed and combinable.
+
+_HEX = "instr('0123456789abcdef', {c}) - 1"
+
 
 def _stat_filters_sql(d: str, section: str | None = None) -> str:
     if d == "spark":
@@ -6628,7 +5485,7 @@ big AS (
   FROM words, UNNEST(generate_series(1, len(l) - 1)) s(i))"""
         sub = "substr"
 
-    # same 64-bucket md5 hashing trick as quality_classifier's features
+    # 64-bucket md5 hashing trick: the first two hex digits, mod 64
     h1 = _HEX.format(c=f"{sub}(md5(w), 1, 1)")
     h2 = _HEX.format(c=f"{sub}(md5(w), 2, 1)")
     bucket = f"((({h1}) * 16 + ({h2})) % 64)"

@@ -75,54 +75,6 @@ def windowed_event_stats(events: DataFrame, window: str = "6 hours",
                     "event_type", "n", "sum_value"))
 
 
-def session_event_stats(events: DataFrame, gap: str = "6 hours",
-                        watermark: str = "1 hour") -> DataFrame:
-    """Event-time SESSION windows (F.session_window): per-user sessions
-    merge while consecutive events arrive strictly within `gap`; state for
-    an open session closes once the watermark passes its end. The
-    batch-relational twin is the sessionize gate's LAG + running-SUM
-    numbering — identical semantics (Spark's session ranges are half-open,
-    so a gap of exactly `gap` starts a NEW session), which is what the
-    DuckDB oracle pins. Outputs are all BIGINT-exact microsecond epochs."""
-    qty, unit = gap.split()
-    gap_us = int(qty) * {"second": 10 ** 6, "minute": 60 * 10 ** 6,
-                         "hour": 3600 * 10 ** 6}[unit.rstrip("s")]
-    w = F.session_window("ts", gap).alias("w")
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy(w, "user_id")
-            .agg(F.count("*").cast("long").alias("n_events"),
-                 F.min("event_id").cast("long").alias("first_event"))
-            .select(F.col("user_id").cast("long").alias("user_id"),
-                    F.unix_micros(F.col("w.start").cast("timestamp"))
-                     .alias("session_start_us"),
-                    "n_events", "first_event",
-                    (F.unix_micros(F.col("w.end").cast("timestamp"))
-                     - F.unix_micros(F.col("w.start").cast("timestamp"))
-                     - F.lit(gap_us)).alias("dur_us")))
-
-
-def stream_pair_join(clicks: DataFrame, views: DataFrame) -> DataFrame:
-    """Stream-stream inner join: each click pairs with the same user's
-    views from its trailing 1-hour window. Both sides carry watermarks and
-    the join condition bounds event time on both ends — the two constraints
-    that let Spark size the join STATE (buffered unmatched rows) to the
-    late-data horizon instead of the whole stream; without them a
-    stream-stream join cannot run at all. Append-mode output."""
-    c = (clicks.withWatermark("ts", "1 hour")
-         .selectExpr("event_id AS click_id", "user_id AS cu", "ts AS cts"))
-    v = (views.withWatermark("ts", "1 hour")
-         .selectExpr("event_id AS view_id", "user_id AS vu", "ts AS vts"))
-    j = c.join(v, F.expr(
-        "cu = vu AND vts > cts - INTERVAL 1 HOUR AND vts <= cts"))
-    return j.select(
-        F.col("click_id").cast("long").alias("click_id"),
-        F.col("view_id").cast("long").alias("view_id"),
-        F.col("cu").cast("long").alias("user_id"),
-        (F.unix_micros(F.col("cts").cast("timestamp"))
-         - F.unix_micros(F.col("vts").cast("timestamp"))).alias("gap_us"))
-
-
 def dedup_stream(events: DataFrame, keys: tuple[str, ...] = ("event_id",),
                  watermark: str | None = None,
                  time_col: str = "ts") -> DataFrame:

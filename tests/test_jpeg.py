@@ -110,29 +110,6 @@ def test_truncated_stream_raises():
         decode_jpeg_gray(b"\x00\x01" + buf[2:])
 
 
-def test_avi_mjpeg_roundtrip():
-    from lidartree_spark.avi import decode_avi_mjpeg, encode_avi_mjpeg
-    rng = np.random.default_rng(11)
-    y = np.linspace(0, 3, 24)[:, None]
-    x = np.linspace(0, 3, 32)[None, :]
-    frames = np.stack([
-        np.clip(np.round(127 + 90 * np.sin(y + x + t)
-                         + rng.normal(0, 2, (24, 32))), 0, 255)
-        for t in range(6)]).astype(np.uint8)
-    buf = encode_avi_mjpeg(frames, fps=5, quality=95)
-    assert buf[:4] == b"RIFF" and buf[8:12] == b"AVI "
-    dec = decode_avi_mjpeg(buf)
-    assert dec.shape == frames.shape
-    for i in range(6):
-        assert psnr(frames[i].astype(float), dec[i].astype(float)) >= 40.0
-
-
-def test_avi_rejects_garbage():
-    from lidartree_spark.avi import decode_avi_mjpeg
-    with pytest.raises(ValueError):
-        decode_avi_mjpeg(b"not an avi at all")
-
-
 def test_decode_check_gate_accepts_jpeg_tiles():
     """Every generator tile encodes/decodes through fmt=jpeg within the
     PSNR >= 40 dB input contract (the decode-invariant gate's lossy path)."""

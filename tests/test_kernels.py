@@ -371,3 +371,42 @@ def test_label_components_vectorized_equals_twopass():
     s[0, :] = True; s[:, -1] = True; s[-1, :] = True
     s[2:, 0] = True; s[2, 2:-2] = True
     assert (label_components(s) == _label_components_twopass(s)).all()
+
+
+def test_ellipses4crown_ring():
+    """lidaRtRee's ellipses4Crown: one closed counter-clockwise ring made of
+    four quarter ellipses (NE, NW, SW, SE), each quarter traversed in ring
+    order so the outline never doubles back or self-intersects."""
+    from lidartree_spark.kernels.geometry import ellipses4crown, ring_to_wkt
+    x, y, n, s, e, w = 10.0, 20.0, 4.0, 1.0, 3.0, 2.0
+    (ring,) = ellipses4crown(x, y, n, s, e, w)
+    assert (ring[0] == ring[-1]).all()
+    px, py = ring[:, 0], ring[:, 1]
+    area = 0.5 * float(np.sum(px[:-1] * py[1:] - px[1:] * py[:-1]))
+    expect = np.pi / 4 * (e * n + w * n + w * s + e * s)
+    assert area > 0 and abs(area / expect - 1) < 0.005
+    assert np.hypot(*np.diff(ring, axis=0).T).max() < 0.5
+    for p in ((x + e, y), (x, y + n), (x - w, y), (x, y - s)):
+        assert np.isclose(ring, p).all(axis=1).any(), p
+    wkt = ring_to_wkt(ring)
+    assert wkt.startswith("POLYGON ((") and wkt.endswith("))")
+    verts = wkt[len("POLYGON (("):-2].split(", ")
+    assert len(verts) == len(ring) and verts[0] == verts[-1]
+
+
+def test_polar2projected_hand_cases():
+    """Azimuth and slope in gradians, clockwise from north; half the
+    diameter is added to the distance (lidaRtRee's polar2Projected)."""
+    from lidartree_spark.kernels.geometry import polar2projected
+    x, y, z = polar2projected(
+        [1.0, 1.0, 1.0, 1.0], [2.0, 2.0, 2.0, 2.0], [3.0, 3.0, 3.0, 3.0],
+        azimut_gr=[0.0, 100.0, 200.0, 300.0],
+        dist=[10.0, 10.0, 2.0 * np.sqrt(2.0), 10.0],
+        slope_gr=[0.0, 0.0, 50.0, 0.0], diameter=[0.0, 0.4, 0.0, 0.0])
+    np.testing.assert_allclose(x, [1.0, 11.2, 1.0, -9.0], atol=1e-12)
+    np.testing.assert_allclose(y, [12.0, 2.0, 0.0, 2.0], atol=1e-12)
+    np.testing.assert_allclose(z, [3.0, 3.0, 5.0, 3.0], atol=1e-12)
+    # declination and convergence rotate the azimuth
+    x, y, _ = polar2projected(0.0, 0.0, 0.0, 0.0, 10.0,
+                              declination_gr=60.0, convergence_gr=40.0)
+    np.testing.assert_allclose([x, y], [10.0, 0.0], atol=1e-12)
