@@ -56,8 +56,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from lidartree_spark.session import spark_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = spark_cpus()
 # bench tile grid: 48x48 = 2304 tiles of 64x64 px (~9.4M px).
 GRID = int(os.environ.get("SPARK_GRAFT_BENCH_GRID", "48"))
 # scaling-pair grid: LARGE on purpose. Efficiency N->4N under a fixed
@@ -432,7 +434,7 @@ def main() -> None:
         }
 
     # --- SQL operator suite at the bench SF
-    from lidartree_spark.queries import queries
+    from lidartree_spark.queries import oracle_sql_extended, queries
     from lidartree_spark.session import get_spark
 
     spark = get_spark("bench-sql", master=f"local[{CPUS}]")
@@ -455,18 +457,12 @@ def main() -> None:
             skew = run_skew_bench(spark)
         if os.environ.get("SPARK_GRAFT_LAYOUT", "1") == "1":
             layout = run_layout_bench(spark)
-        qs = queries()
-        for name, fn in qs.items():
-            if name in ("tree_detect_tiles", "tree_match_greedy",
-                        "tiles_decode_invariants", "tree_detect_halo",
-                        "gap_detection", "coregistration",
-                        "checkpointed_detect",
-                        "points_to_tiles_detect", "clouds_tree_metrics",
-                        "edge_detection_stats", "raster_chull_mask"):
-                continue  # tile-pipeline ops, covered by the headline number
-            # one failing query must not discard the whole artifact
-            # (e.g. laz_chablais_detect needs the reference checkout on
-            # disk) — degrade to an error note and keep timing the rest
+        oracled = oracle_sql_extended()
+        for name, fn in queries().items():
+            if name not in oracled:
+                continue  # rows-only tile-pipeline ops: the headline number
+            # one failing query must not discard the whole artifact —
+            # degrade to an error note and keep timing the rest
             try:
                 best = None
                 for _ in range(2):  # min-of-2: first run pays codegen

@@ -1,5 +1,20 @@
-"""Query registry: every implemented operator from SURVEY.md §2 exposed as a
-(spark_fn, oracle_sql) pair for the driver's DuckDB cross-check.
+"""Query registry: every implemented operator from SURVEY.md §2, declared
+once as a `Query` for the driver's DuckDB cross-check.
+
+`Query(name, spark, duck=None, driver=False)` pairs a Spark side (a SQL
+string, run over the `TABLES` views, or a `(spark, sf_dir) -> DataFrame`
+builder) with the DuckDB SQL that must reproduce its rows. The tier follows
+from the declaration:
+- rows-only (`duck is None`): the tile-pipeline operators (detection,
+  segmentation, matching, coreg, gaps) that are not ANSI-SQL-expressible;
+  the driver records a rows-only check and tests/ validates them against
+  the numpy oracle;
+- driver (`driver=True`): the 50 rows of `oracle_sql()`, the most the
+  driver's correctness harness records, so each one pins as much of §2 as
+  possible (section-tagged composites);
+- extended (every other oracle): verified by the same comparison in
+  tools/check_oracle.py and tests/test_extended_oracles.py, via
+  `oracle_sql_extended()`.
 
 Conventions for byte-stable Spark<->DuckDB parity:
 - prefer integer-exact arithmetic (counts, integer-valued doubles like
@@ -9,16 +24,14 @@ Conventions for byte-stable Spark<->DuckDB parity:
   expression shape;
 - alias every computed column identically on both sides;
 - cast floor()/count() results so Spark and DuckDB types agree.
-
-The tile-pipeline operators (detection, segmentation, matching, coreg, gaps)
-are not ANSI-SQL-expressible; they are exposed without an oracle (driver
-records a rows-only check) and are instead validated against the numpy oracle
-in tests/.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
+from dataclasses import dataclass
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,11 +45,31 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 
-def _sql(sql: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        load_views(spark, sf_dir)
-        return spark.sql(sql)
-    return run
+@dataclass(frozen=True)
+class Query:
+    """One registry entry; see the module docstring for the tiers. `needs`
+    names an input file outside the sf dir that the Spark side reads."""
+    name: str
+    spark: str | Callable[[SparkSession, str], DataFrame]
+    duck: str | None = None
+    driver: bool = False
+    needs: str | None = None
+
+    def __post_init__(self):
+        if self.driver and self.duck is None:
+            raise ValueError(f"driver query {self.name!r} has no oracle")
+
+    def run(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        if isinstance(self.spark, str):
+            load_views(spark, sf_dir)
+            return spark.sql(self.spark)
+        return self.spark(spark, sf_dir)
+
+    def missing_input(self) -> str | None:
+        """`needs` if that file is absent, else None."""
+        if self.needs and not os.path.exists(self.needs):
+            return self.needs
+        return None
 
 
 # ---------------------------------------------------------------------------
@@ -123,9 +156,8 @@ GROUP BY l_suppkey
 """
 
 # merged driver gate: aba_metrics + the exact type-7 quantile vector in ONE
-# row per plot (same GROUP BY — the standalone quantile variant lives on in
-# the _EXTENDED local gate set; the driver's correctness harness caps at 50
-# rows, so redundant variants yield their slot to composite gates).
+# row per plot (same GROUP BY — the standalone quantile variant is the
+# extended aba_quantiles gate).
 def _aba_metrics_sql(qfn: str) -> str:
     cols = ",\n       ".join(
         f"ROUND({qfn}(l_quantity, {p}), 6) AS zq{int(p * 100)}"
@@ -261,15 +293,12 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
 FROM hs
 """
 
-# Driver-budget repack (round 3b): hist_detection + height_regression are
-# single-row gates over the SAME mutual-NN matching CTE — one section-tagged
-# row pins both, and the freed slot pins streaming_dedup. Standalone twins
-# stay verified in the extended set.
+# hist_detection + height_regression are single-row gates over the SAME
+# mutual-NN matching CTE — one section-tagged driver row pins both, and
+# its 'stack' section folds in hist_stack's full fact set (every
+# (bucket, category) count) as long-format rows. The standalone twins are
+# extended gates.
 def _matching_scores_sql(d: str) -> str:
-    # 'stack' section (round-5 repack): hist_stack's full fact set —
-    # every (bucket, category) count — folded in as long-format rows so
-    # the standalone gate could vacate its driver slot (it remains
-    # individually verified in _EXTENDED).
     s = "STRING" if d == "spark" else "VARCHAR"
     return f"""
 WITH h AS ({_hist_detection_sql(d)}),
@@ -428,7 +457,7 @@ FROM documents
 # fingerprinting (rolling hash)"): fp(doc) = sum_i ascii(c_i) * B^(n-i)
 # mod M with B=131, M=2^31-1 — the polynomial form whose windowed variant
 # is the rolling shingle hash. Merged with the md5 token-bag fingerprint
-# (the old standalone doc_fingerprint, now in _EXTENDED) into one per-doc
+# (the standalone doc_fingerprint, an extended gate) into one per-doc
 # row.
 #
 # Spark computes the polynomial by Horner's rule in a SINGLE per-row
@@ -556,8 +585,8 @@ FROM documents
 """
 
 # Merged per-doc text-analysis gate (language-ID + quality scoring + BPE-ish
-# token counting in one row — the three standalone queries live on in
-# _EXTENDED). One scan, all columns integer-/string-exact.
+# token counting in one row — the three standalone queries are extended
+# gates). One scan, all columns integer-/string-exact.
 _TEXT_ANALYSIS_SPARK = r"""
 SELECT doc_id,
        n_chars,
@@ -913,8 +942,8 @@ def _ngram_jaccard_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged text near-dup pair gate (driver-budget repack: one row pins
-    BOTH shingle-based pair finders). section='minhash' = MinHash+LSH band
+    """Merged text near-dup pair gate (one driver row pins BOTH
+    shingle-based pair finders). section='minhash' = MinHash+LSH band
     collisions; section='jaccard' = exact n-gram Jaccard >= 0.12 with the
     shingle self-join salted through grid.salted_join (the oracle stays
     the plain join — the physical rewrite must change nothing)."""
@@ -1487,7 +1516,6 @@ FROM agg a JOIN counts c ON c.image_id = a.image_id
 """.replace("%%MORTON_TERMS%%", _MORTON_TERMS)
 
 
-
 def _flagship_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tiles -> detected trees, grid size seeded from the testdata scale."""
     from lidartree_spark.operators.detection import detect_trees
@@ -1696,9 +1724,6 @@ def _coregistration(spark: SparkSession, sf_dir: str) -> DataFrame:
     return coregister(tiles, ref, buffer=3.0, step=0.5)
 
 
-# ---------------------------------------------------------------------------
-# registry
-
 # Deterministic proportional stratified sampling — the training-data
 # pipeline's "sample X% per (lang, source) stratum, reproducibly"
 # primitive. Hash-ordered ROW_NUMBER per stratum makes the sample a pure
@@ -1721,45 +1746,6 @@ FROM ranked
 WHERE rk <= CEIL(0.2 * stratum_n)
 """
 
-_SHARED = {
-    # name: (shared_sql_for_both,)
-    "points2dsm": _POINTS2DSM,
-    "raster_metrics_regrid": _RASTER_METRICS,
-    "vegetation_indices": _VEG_INDICES,
-    "boxcox_transforms": _BOXCOX,
-    "std_tree_metrics": _STD_TREE_METRICS,
-    "exact_dedup": _EXACT_DEDUP,
-    "terrain_plane_fit": _TERRAIN_PLANE,
-    "polar2projected": _POLAR2PROJ,
-    "hist_stack": _HIST_STACK,
-    "aba_predict": _ABA_PREDICT,
-    "aba_inference": _ABA_INFERENCE,
-    "clean_raster": _CLEAN_RASTER,
-}
-
-_DIALECT = {
-    # name: (spark_sql_or_fn, duck_sql)
-    # grid-bucketed spatial joins: same skeleton, lateral-sequence dialect
-    "matching_scores": (_matching_scores_sql("spark"),
-                        _matching_scores_sql("duck")),
-    "pip_join": (_pip_join_sql("spark"), _pip_join_sql("duck")),
-    "tile_prune_roi": (_tile_prune_sql("spark"), _tile_prune_sql("duck")),
-    "raster_xy_mask": (_xy_mask_sql("spark"), _xy_mask_sql("duck")),
-    "aba_metrics": (_ABA_METRICS_SPARK, _ABA_METRICS_DUCK),
-    "text_analysis": (_TEXT_ANALYSIS_SPARK, _TEXT_ANALYSIS_DUCK),
-    "rabin_fingerprint": (_RABIN_SPARK, _RABIN_DUCK),
-    "token_topk": (_TOKEN_TOPK_SPARK, _TOKEN_TOPK_DUCK),
-    # driver-budget repack (round 3b): the two shingle-based pair finders
-    # share one section-tagged row; their standalone twins live in
-    # _EXTENDED, and the freed slot pins phash_neardup (the image-side
-    # near-dup family member) as a driver row.
-    "text_neardup": (_text_neardup, _text_neardup_duck()),
-    "embedding_neardup": (_NEARDUP_SPARK, _NEARDUP_DUCK),
-    "cell_join_salted": (_salted_join_spark, _SALTED_JOIN_ORACLE),
-    "simhash_neardup": (
-        _SIMHASH_ND_SPARK.replace("%%SIMHASH%%", _SIMHASH_SPARK),
-        _SIMHASH_ND_DUCK.replace("%%SIMHASH%%", _SIMHASH_DUCK)),
-}
 
 def _raster_local_max_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL raster_local_max kernel (coregistration.R:275-331: top-2
@@ -2503,60 +2489,6 @@ WHERE ABS(x - 48) + ABS(y - 48) <= 30
 """
 
 
-# Oracle-backed gates OUTSIDE the driver's 50-row correctness budget.
-# CORRECTNESS_r01/r02 show the driver's harness records at most 50 rows
-# (r02 = exactly the first 50 oracle_sql() entries; the 51st-53rd were
-# silently skipped), so the driver-facing oracle_sql() is held at exactly
-# 50 maximally-informative gates and these variants — each one fully
-# subsumed by an in-budget gate — are verified by the SAME comparison
-# locally (tools/check_oracle.py + tests/test_queries_gate.py run
-# oracle_sql_extended()):
-# - aba_quantiles / langid_heuristic / text_quality / bpe_token_count /
-#   doc_fingerprint: column-subsets of the merged aba_metrics /
-#   text_analysis / rabin_fingerprint gates;
-# - simhash: its SQL is embedded verbatim inside simhash_neardup (the
-#   %%SIMHASH%% substitution), so the neardup gate pins it;
-# - matching_mutual_nn: the mutual-NN variant of tree_match_oracle (the
-#   reference semantic is the greedy matcher, which keeps its slot);
-# - embedding_topk: the exact brute-force anchor, embedded as the
-#   method='exact' half of the ann_lsh driver gate;
-# - species_dim_join: trivial broadcast dim lookup, plan-asserted in
-#   tests/test_plans.py.
-# Round 3 repacks the budget further (see "Round-3 driver-budget repack" at
-# the bottom of this module): same-family single-op gates are merged into
-# section-tagged UNION gates (scalar_map_ops, aba_model_scores,
-# raster_masks, cell_index_dual) and their constituents demoted HERE, while
-# the round-3 composite pins (catalog_roi_stats, checkpoint_resume_stats,
-# halo_dominance_stats, gap_merge_mosaic, raster_local_max,
-# coregistration_stats) and the new training_data_pipeline composite take
-# the freed slots. Every demoted gate remains in this dict, so the local
-# gate set still verifies each constituent individually.
-_EXTENDED = {
-    "aba_quantiles": (_ABA_QUANTILES_SPARK, _ABA_QUANTILES_DUCK),
-    "langid_heuristic": (_LANGID_SPARK, _LANGID_DUCK),
-    "text_quality": (_TEXT_QUALITY, _TEXT_QUALITY),
-    "bpe_token_count": (_BPE_SPARK, _BPE_DUCK),
-    "doc_fingerprint": (_FINGERPRINT_SPARK, _FINGERPRINT_DUCK),
-    "simhash": (_SIMHASH_SPARK, _SIMHASH_DUCK),
-    "matching_mutual_nn": (_mutual_nn_sql("spark"), _mutual_nn_sql("duck")),
-    "embedding_topk": (_topk_spark, _TOPK_DUCK),
-    "species_dim_join": (_SPECIES_JOIN_SPARK, _SPECIES_JOIN_DUCK),
-    # not redundant variants — NEW pins that arrived after the 50-slot
-    # budget was already allocated to composite gates
-    "raster_local_max": (_raster_local_max_gate, _RASTER_LOCAL_MAX_DUCK),
-    "gap_merge_mosaic": (_gap_global_gate, _GAP_GLOBAL_DUCK),
-    "crowns_spike": (_crowns_spike_gate, _CROWNS_SPIKE_DUCK),
-    "coregistration_stats": (_coreg_e2e_gate, _COREG_E2E_DUCK),
-    "points_lifecycle_stats": (_points_lifecycle_gate,
-                               _POINTS_LIFECYCLE_DUCK),
-    "checkpoint_resume_stats": (_ckpt_resume_gate, _CKPT_RESUME_DUCK),
-    "halo_dominance_stats": (_halo_dominance_gate, _HALO_DOMINANCE_DUCK),
-    "tree_metrics_spike": (_tree_metrics_spike_gate,
-                           _TREE_METRICS_SPIKE_DUCK),
-    "catalog_roi_stats": (_catalog_roi_gate, _CATALOG_ROI_DUCK),
-    "hilbert_index": (_hilbert_index_gate, _hilbert_duck()),
-}
-
 def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity search driver gate: the REAL lsh_topk operator
     (mapInPandas SRP bucketize -> one (table, bucket) equi-join -> exact
@@ -2730,8 +2662,6 @@ FROM (
 WHERE rk <= 5
 """
 
-_DIALECT["ann_ivf"] = (_ann_ivf, _ANN_IVF_DUCK)
-
 
 def _multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL image_features operator (decode -> bilinear resize ->
@@ -2875,9 +2805,6 @@ FROM stats s
 JOIN ge g ON g.t = s.t
 JOIN tstats ts ON ts.t = s.t
 """
-
-_DIALECT["multimodal_image_features"] = (_multimodal_features,
-                                         _MULTIMODAL_DUCK)
 
 
 def _checkpointed_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3463,13 +3390,10 @@ def _coreg_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _coreg_kernel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-budget merge (round 4): the two coreg KERNEL gates —
-    rasters_moving_cor's full correlation surface (coreg_surface) and
-    raster_local_max's dominance-filtered top-2 statistics — share one
-    section-tagged long-format row, freeing a driver slot for the
-    points_lifecycle_stats composite (the complete points branch, the one
-    codepath no driver row exercised end-to-end). Both constituents stay
-    individually verified in the extended set."""
+    """The two coreg KERNEL gates — rasters_moving_cor's full
+    correlation surface (coreg_surface) and raster_local_max's
+    dominance-filtered top-2 statistics — share one section-tagged
+    long-format driver row. Both constituents are extended gates."""
     surf = _coreg_surface(spark, sf_dir).selectExpr(
         "'surface' AS section", "CAST(tile AS INT) AS tile",
         "dx AS kx", "dy AS ky", "'corr' AS metric", "corr AS v")
@@ -4180,47 +4104,6 @@ def _points2dtm_tin_plane(spark: SparkSession, sf_dir: str) -> DataFrame:
                              schema="col int, i int, j int, z double")
 
 
-_DIALECT["ann_lsh"] = (_ann_lsh, _ANN_LSH_DUCK)
-_DIALECT["north_star_stats"] = (_north_star_stats, _NORTH_STAR_DUCK)
-
-_NO_ORACLE = {
-    "north_star_chain": _north_star_chain,
-    "tree_detect_tiles": _flagship_detect,
-    "tree_match_greedy": _match_greedy,
-    "tiles_decode_invariants": _decode_invariants,
-    "tree_detect_halo": _halo_detect,
-    "tree_detect_crowns": _detect_with_crowns,
-    "tree_detection_catalog_roi": _detect_catalog_roi,
-    "gap_detection": _gap_detect,
-    "gap_detection_global": _gap_detect_global,
-    "coregistration": _coregistration,
-    "checkpointed_detect": _checkpointed_detect,
-    "points_to_tiles_detect": _points_to_tiles,
-    "points2dtm_normalize_detect": _points2dtm_normalize_detect,
-    "clouds_tree_metrics": _tree_metrics,
-    "gap_detection_reconstruct": _gap_detect_reconstruct,
-}
-
-_DIALECT["edge_detection_stats"] = (_edge_stats, _EDGE_STATS_DUCK)
-_DIALECT["tree_match_oracle"] = (_tree_match_oracle, _TM_ORACLE_DUCK)
-_DIALECT["raster_chull_mask"] = (_chull_mask, _chull_mask_duck())
-_DIALECT["tiles_roundtrip_stats"] = (_tiles_roundtrip, _RT_DUCK)
-_DIALECT["maxima_localmax"] = (_maxima_localmax, _MAXIMA_DUCK)
-_DIALECT["dedup_clusters"] = (_dedup_clusters, _dedup_clusters_duck())
-_DIALECT["cell_index_hierarchy"] = (_cell_index, _CELL_INDEX_DUCK)
-_DIALECT["coreg_surface"] = (_coreg_surface, _COREG_SURF_DUCK)
-_DIALECT["watershed_voronoi"] = (_watershed_voronoi, _WATERSHED_DUCK)
-_DIALECT["dem_filtering_surface"] = (_dem_filtering_surface, _DEMFILT_DUCK)
-_DIALECT["label_components_blocks"] = (_label_components_blocks,
-                                       _LABEL_CC_DUCK)
-_DIALECT["zonal_adjust_stats"] = (_zonal_adjust_stats, _ZONAL_DUCK)
-_DIALECT["tree_extraction_stats"] = (_tree_extraction_stats,
-                                     _TREE_EXTRACT_DUCK)
-_DIALECT["points2dtm_tin_plane"] = (_points2dtm_tin_plane, _TIN_PLANE_DUCK)
-_DIALECT["gap_ladder_surface"] = (_gap_ladder_surface, _GAP_LADDER_DUCK)
-_DIALECT["crown_wkt_rects"] = (_crown_wkt_rects, _CROWN_WKT_DUCK)
-
-
 # --- Structured Streaming gates: the STREAM's result (memory sink,
 # availableNow) is compared against a plain batch SQL oracle — on bounded
 # input a correct streaming aggregation must equal the batch answer.
@@ -4398,37 +4281,6 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
 FROM events GROUP BY event_type
 """
 
-_DIALECT["streaming_dedup"] = (_streaming_dedup, _STREAM_DEDUP_DUCK)
-_DIALECT["streaming_windowed_events"] = (_streaming_windowed,
-                                         _STREAM_WINDOWED_DUCK)
-_DIALECT["streaming_running_totals"] = (_streaming_totals,
-                                        _STREAM_TOTALS_DUCK)
-_DIALECT["streaming_detect_resume"] = (_streaming_detect_resume,
-                                       _STREAM_DETECT_DUCK)
-
-
-# ===========================================================================
-# Round-3 driver-budget repack. The driver's correctness harness records at
-# most 50 oracle rows (see _EXTENDED's note), so every one of those rows
-# should pin as much of SURVEY.md §2 as possible. Three moves, applied at
-# the bottom of this module so every constituent stays defined and
-# individually verifiable above:
-#   1. MERGE same-family single-op gates into one section-tagged UNION gate
-#      (scalar_map_ops, aba_model_scores, raster_masks, cell_index_dual) —
-#      each merged row carries every value its constituents carried, under
-#      a documented generic schema.
-#   2. ADD training_data_pipeline: the LLM-corpus counterpart of
-#      north_star_stats — exact dedup -> MinHash-LSH near-dup clustering
-#      through the REAL distributed connected-components operator -> keep
-#      one canonical per cluster -> language/quality/token-count filters ->
-#      deterministic stratified sample, as ONE lineage-carrying plan,
-#      re-derived end to end by a recursive-CTE DuckDB oracle.
-#   3. PROMOTE the round-3 composite pins (catalog_roi_stats,
-#      checkpoint_resume_stats, halo_dominance_stats, gap_merge_mosaic,
-#      raster_local_max, coregistration_stats) from the local-only
-#      _EXTENDED set into the driver budget; the demoted constituents move
-#      to _EXTENDED where tools/check_oracle.py and the pytest gate still
-#      run them on every pass.
 
 # --- training_data_pipeline -----------------------------------------------
 # Stage 1 (exact dedup) is the exact_dedup gate's keep-side: one canonical
@@ -4618,7 +4470,7 @@ FROM ({_chull_mask_duck()}) chm
 
 def _raster_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """raster_xy_mask + raster_chull_mask as one section-tagged gate (the
-    constituents remain individually oracled in _EXTENDED)."""
+    constituents are extended gates)."""
     load_views(spark, sf_dir)
     xy = spark.sql(_xy_mask_sql("spark")).selectExpr(
         "'xy' AS section", "CAST(cx AS BIGINT) AS a",
@@ -4648,37 +4500,6 @@ def _cell_index_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = _hilbert_index_gate(spark, sf_dir).select(
         F.lit("hilbert").alias("curve"), *cols)
     return m.unionAll(h)
-
-
-# --- the repack itself ------------------------------------------------------
-# demotions: constituents stay individually verifiable in the local gate set
-for _n in ("vegetation_indices", "boxcox_transforms", "clean_raster",
-           "polar2projected", "aba_predict", "aba_inference", "exact_dedup"):
-    _demoted_sql = _SHARED.pop(_n)
-    _EXTENDED[_n] = (_demoted_sql, _demoted_sql)
-for _n in ("raster_xy_mask", "raster_chull_mask", "cell_index_hierarchy",
-           "tile_prune_roi"):
-    _EXTENDED[_n] = _DIALECT.pop(_n)
-# merged replacements + the new composite
-_SHARED["scalar_map_ops"] = _SCALAR_MAP_OPS
-_SHARED["aba_model_scores"] = _ABA_MODEL_SCORES
-_DIALECT["raster_masks"] = (_raster_masks, _RASTER_MASKS_DUCK)
-_DIALECT["cell_index_dual"] = (_cell_index_dual, _CELL_DUAL_DUCK)
-_DIALECT["training_data_pipeline"] = (_training_pipeline, _TD_PIPELINE_DUCK)
-# promotions: round-3 composite pins enter the driver budget
-for _n in ("catalog_roi_stats", "checkpoint_resume_stats",
-           "halo_dominance_stats", "gap_merge_mosaic",
-           "coregistration_stats"):
-    _DIALECT[_n] = _EXTENDED.pop(_n)
-# Round-4 repack: the two coreg KERNEL gates merge into one section-tagged
-# row (coreg_kernel_stats) and the freed slot promotes the
-# points_lifecycle_stats composite (complete points->DTM->DSM->CHM->detect
-# chain, previously extended-only). raster_local_max stays in _EXTENDED and
-# coreg_surface demotes there, so both constituents remain individually
-# verified by the local gate set.
-_EXTENDED["coreg_surface"] = _DIALECT.pop("coreg_surface")
-_DIALECT["coreg_kernel_stats"] = (_coreg_kernel_stats, _coreg_kernel_duck())
-_DIALECT["points_lifecycle_stats"] = _EXTENDED.pop("points_lifecycle_stats")
 
 
 # --- perceptual-hash image near-dup (integer-DCT pHash + banded LSH) -------
@@ -4810,13 +4631,7 @@ FROM cand
 WHERE bit_count(CAST(xor(ha, hb) AS BIGINT)) <= 7
 """
 
-# promoted to the driver set by the round-3b repack (slot freed by merging
-# minhash_lsh + ngram_jaccard into text_neardup); the standalone text
-# pair-finders stay verified in the extended set.
-_DIALECT["phash_neardup"] = (_phash_neardup, _PHASH_ND_DUCK)
-
-
-# --- image near-dup clustering + canonical selection (extended set) ---------
+# --- image near-dup clustering + canonical selection -------------------------
 # The image-side twin of dedup_clusters: pHash banded-LSH pairs feed the
 # REAL distributed connected-components operator, then keep-one-per-cluster.
 # Singletons survive with themselves as canonical (left join).
@@ -4869,13 +4684,7 @@ SELECT CAST(i AS BIGINT) AS media_id, CAST(canonical AS BIGINT) AS canonical,
 FROM allv
 """
 
-_EXTENDED["image_dedup_clusters"] = (_image_dedup_gate, _IMG_DEDUP_DUCK)
-_EXTENDED["minhash_lsh"] = (_minhash_sql(_SHINGLES_SPARK, "spark"),
-                            _minhash_sql(_SHINGLES_DUCK, "duck")
-                            .replace("AS STRING", "AS VARCHAR"))
-_EXTENDED["ngram_jaccard"] = (_ngram_jaccard_salted,
-                              _jaccard_sql(_SHINGLES_DUCK))
-# --- BPE tokenizer training gate (extended set) -----------------------------
+# --- BPE tokenizer training gate ---------------------------------------------
 # The REAL distributed trainer (operators/tokenize.train_bpe_merges: one
 # vocab shuffle + per-merge map-side pair-count partials, driver keeps only
 # the K-row merge table) on a PLANTED corpus whose merge sequence is
@@ -4930,10 +4739,8 @@ SELECT * FROM (VALUES
 ) AS t(section, step, a, b, cnt)
 """
 
-_EXTENDED["bpe_train"] = (_bpe_train, _BPE_TRAIN_DUCK)
 
-
-# --- IVF-PQ ANN gate (extended set; the 50-row budget is full) -------------
+# --- IVF-PQ ANN gate ---------------------------------------------------------
 # The FAISS-style third ANN path beside ann_lsh/ann_ivf: coarse cells
 # prune the corpus, then ADC scores m-byte PQ codes without touching the
 # full vectors. Both codebooks are the operators' own deterministic
@@ -5032,10 +4839,8 @@ FROM (SELECT qid, vec_id, adc,
 WHERE rk <= 5
 """
 
-_EXTENDED["ann_pq"] = (_ann_pq, _ANN_PQ_DUCK)
 
-
-# --- image augmentation gate (extended set; the 50-row budget is full) -----
+# --- image augmentation gate -------------------------------------------------
 # Training-data augmentation as exact index/value transforms: 12 analytic
 # NON-SQUARE PNGs (orientation-pinning) run through all eight ops of
 # operators/multimodal.augment_images, the augmented PNG BYTES are decoded
@@ -5144,25 +4949,8 @@ FROM outpx
 GROUP BY i, op, oh, ow
 """
 
-_EXTENDED["image_augment_stats"] = (_image_augment_stats,
-                                    _IMAGE_AUGMENT_DUCK)
 
-# round-3b swap: the standalone stratified sample is demoted (the SAME
-# deterministic hash-ranked sampler is the final stage of the
-# ♦ training_data_pipeline DRIVER row, so the operator stays
-# driver-pinned); the freed slot promotes bpe_train — a capability class
-# (tokenizer training) no other row covers.
-_EXTENDED["stratified_sample"] = (_STRATIFIED_SAMPLE, _STRATIFIED_SAMPLE)
-_DIALECT["bpe_train"] = _EXTENDED.pop("bpe_train")
-
-# demoted by the matching_scores merge (slot now pins streaming_dedup)
-_EXTENDED["hist_detection"] = (_hist_detection_sql("spark"),
-                               _hist_detection_sql("duck"))
-_EXTENDED["height_regression"] = (_height_regression_sql("spark"),
-                                  _height_regression_sql("duck"))
-
-
-# --- aspect-ratio bucketed image batch packing (extended set) ---------------
+# --- aspect-ratio bucketed image batch packing -------------------------------
 # Vision-training batch prep (NaViT / SDXL-style aspect bucketing) packs
 # images into fixed pixel-budget batches WITHIN an aspect class, so a batch
 # never mixes orientations. Buckets come from integer cross-multiplication
@@ -5202,10 +4990,7 @@ FROM cum
 """
 
 
-_EXTENDED["image_pack"] = (_image_pack_sql("spark"), _image_pack_sql("duck"))
-
-
-# --- caption<->image alignment filtering (extended set) ---------------------
+# --- caption<->image alignment filtering -------------------------------------
 # The cross-modal pair filter of image+caption pipelines (the CLIP-score
 # step of LAION-style dataset construction, re-expressed with a
 # deterministic alignment metric): decode the image with the REAL codec,
@@ -5275,10 +5060,8 @@ SELECT printf('img%04d', t) AS media_id,
 FROM v
 """
 
-_EXTENDED["caption_alignment"] = (_caption_align_gate, _CAPTION_ALIGN_DUCK)
 
-
-# --- merge as-of join (extended set) ----------------------------------------
+# --- merge as-of join --------------------------------------------------------
 # The classic temporal operator Spark lacks: for each click, the latest
 # prior view by the same user. operators/temporal.asof_join re-expresses
 # it as union-tag + ONE keyed shuffle + a running last(ignorenulls)
@@ -5323,10 +5106,8 @@ SELECT l.event_id, CAST(l.user_id AS BIGINT) AS user_id,
 FROM l ASOF LEFT JOIN r ON l.user_id = r.r_user AND l.ts >= r.view_ts
 """
 
-_EXTENDED["asof_join"] = (_asof_gate, _ASOF_DUCK)
 
-
-# --- multi-level rollup aggregation (extended set) --------------------------
+# --- multi-level rollup aggregation ------------------------------------------
 # OLAP cube semantics over the corpus dimensions: one ROLLUP pass emits
 # (lang, source), (lang), and grand-total rows with GROUPING markers —
 # Spark plans this as a single Expand + hash aggregate (one shuffle, rows
@@ -5342,10 +5123,8 @@ FROM documents
 GROUP BY ROLLUP(lang, source)
 """
 
-_EXTENDED["rollup_counts"] = (_ROLLUP_COUNTS, _ROLLUP_COUNTS)
 
-
-# --- overview pyramid build (extended set) ----------------------------------
+# --- overview pyramid build --------------------------------------------------
 # COG/TMS-style overviews: 2x2 child tiles -> one parent at half ground
 # resolution via operators/tiles.build_overview (ONE keyed shuffle per
 # level, exact NaN-aware 2x2 box average, real png16 re-encode). The gate
@@ -5415,13 +5194,11 @@ SELECT printf('p%04d_%04d', pr, pc) AS image_id,
 FROM pix GROUP BY pr, pc
 """
 
-_EXTENDED["overview_pyramid"] = (_overview_gate, _OVERVIEW_DUCK)
-
 
 # --- statistical text-selection filters: CCNet ppl + DSIR + tf-idf ----------
 # Three model-based data-selection operators over the documents corpus,
 # merged into one section-tagged driver gate (stat_filters); the standalone
-# variants live in _EXTENDED. All scores are quantize-then-sum integers:
+# variants are extended gates. All scores are quantize-then-sum integers:
 # each log term is rounded to the 1e-4 grid FIRST and summed as BIGINT
 # (coarse on purpose: the LN inputs are engine-computed transcendentals,
 # and the odds of a 1-ulp libm disagreement landing on a rounding
@@ -5600,21 +5377,6 @@ SELECT 'tfidf', CAST(doc_id AS BIGINT), rk, score, CAST(tf AS DOUBLE), w
 FROM tfk"""
 
 
-# driver-budget repack (round 3d): the merged stat_filters row pins all
-# three selection operators (and its tfidf section re-pins the per-group
-# top-k machinery), so the standalone token_topk gate yields its slot and
-# joins the extended set — 50 driver rows, unchanged.
-_DIALECT["stat_filters"] = (_stat_filters_sql("spark"),
-                            _stat_filters_sql("duck"))
-_EXTENDED["token_topk"] = _DIALECT.pop("token_topk")
-_EXTENDED["lm_perplexity"] = (_stat_filters_sql("spark", "ppl"),
-                              _stat_filters_sql("duck", "ppl"))
-_EXTENDED["dsir_select"] = (_stat_filters_sql("spark", "dsir"),
-                            _stat_filters_sql("duck", "dsir"))
-_EXTENDED["tfidf_keywords"] = (_stat_filters_sql("spark", "tfidf"),
-                               _stat_filters_sql("duck", "tfidf"))
-
-
 # --- LAS 1.2 point-cloud ingestion gate (round 4) --------------------------
 # The reference's native input is a .laz file read by lidR::readLAS
 # (/root/reference/R/common.R:16-20; inst/extdata las_chablais3.laz). This
@@ -5698,8 +5460,6 @@ SELECT CAST(FLOOR(x) AS BIGINT) AS cx, CAST(FLOOR(y) AS BIGINT) AS cy,
 FROM p GROUP BY 1, 2
 """
 
-_EXTENDED["las_ingest_dsm"] = (_las_ingest_gate, _LAS_INGEST_DUCK)
-
 
 def _las_lifecycle_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The points_lifecycle chain FROM A .las FILE: the same plane+spike
@@ -5754,10 +5514,6 @@ def _file_lifecycle_detect(spark: SparkSession,
         F.round("s", 6).alias("s"), F.round("v", 3).alias("v"))
 
 
-_EXTENDED["las_lifecycle_detect"] = (_las_lifecycle_gate,
-                                     _POINTS_LIFECYCLE_DUCK)
-
-
 def _laz_lifecycle_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """las_lifecycle_detect with the COMPRESSED sink: the same analytic
     point field round-trips through write_laz (LASzip encode, one .laz
@@ -5770,10 +5526,6 @@ def _laz_lifecycle_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only laz_chablais_detect covers the real reference file, this
     covers the engine's own compressed write->read cycle."""
     return _file_lifecycle_detect(spark, compressed=True)
-
-
-_EXTENDED["laz_lifecycle_detect"] = (_laz_lifecycle_gate,
-                                     _POINTS_LIFECYCLE_DUCK)
 
 
 def _clustered_layout_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5823,15 +5575,12 @@ FROM p
 WHERE x >= 0 AND x < 32 AND y >= 0 AND y < 32
 """
 
-_EXTENDED["clustered_layout_scan"] = (_clustered_layout_gate,
-                                      _CLUSTERED_LAYOUT_DUCK)
-
 
 def _ann_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-5 merged ANN driver gate: the SRP-LSH gate (which already
-    carries its exact brute-force baseline as method='exact' rows) plus
-    the IVF search path as method='ivf' rows — three ANN strategies, one
-    section-tagged driver row. Constituent gates stay in _EXTENDED."""
+    """Merged ANN driver gate: the SRP-LSH gate (which already carries
+    its exact brute-force baseline as method='exact' rows) plus the IVF
+    search path as method='ivf' rows — three ANN strategies, one
+    section-tagged driver row. The constituents are extended gates."""
     lsh = _ann_lsh(spark, sf_dir)
     ivf = _ann_ivf(spark, sf_dir).select(
         F.lit("ivf").alias("method"), "qid", "vec_id", "rk", "cosine")
@@ -5843,6 +5592,10 @@ SELECT method, qid, vec_id, rk, cosine FROM ({_ANN_LSH_DUCK})
 UNION ALL
 SELECT 'ivf' AS method, qid, vec_id, rk, cosine FROM ({_ANN_IVF_DUCK})
 """
+
+# the reference's bundled tile, read where a lidaRtRee checkout puts it
+CHABLAIS3 = "/root/reference/inst/extdata/las_chablais3.laz"
+
 
 def _laz_chablais_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's REAL bundled workflow on its REAL bundled data:
@@ -5861,16 +5614,13 @@ def _laz_chablais_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         points_to_dtm_tiles,
         points_to_tiles,
     )
-    pts = read_las(spark, "/root/reference/inst/extdata/las_chablais3.laz")
+    pts = read_las(spark, CHABLAIS3)
     local = pts.selectExpr("x - 974326.0 AS x", "y - 6581619.0 AS y", "z",
                            "classification")
     ground = local.where("classification = 2").select("x", "y", "z")
     dtm = points_to_dtm_tiles(ground, halo_m=8.0)
     dsm = points_to_tiles(local.select("x", "y", "z"))
     return detect_trees(normalize_tiles(dsm, dtm))
-
-
-_NO_ORACLE["laz_chablais_detect"] = _laz_chablais_detect
 
 
 def _geotiff_spike_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5894,51 +5644,205 @@ def _geotiff_spike_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return det.select("image_id", "x", "y", "h", "crown")
 
 
-_EXTENDED["geotiff_spike_detect"] = (_geotiff_spike_gate,
-                                     _CROWNS_SPIKE_DUCK)
+FORESTRY = [
+    Query("std_tree_metrics", _STD_TREE_METRICS,
+          _STD_TREE_METRICS, driver=True),
+    Query("matching_mutual_nn", _mutual_nn_sql("spark"),
+          _mutual_nn_sql("duck")),
+    Query("hist_detection", _hist_detection_sql("spark"),
+          _hist_detection_sql("duck")),
+    Query("height_regression", _height_regression_sql("spark"),
+          _height_regression_sql("duck")),
+    Query("matching_scores", _matching_scores_sql("spark"),
+          _matching_scores_sql("duck"), driver=True),
+    Query("pip_join", _pip_join_sql("spark"),
+          _pip_join_sql("duck"), driver=True),
+    Query("tile_prune_roi", _tile_prune_sql("spark"), _tile_prune_sql("duck")),
+    Query("species_dim_join", _SPECIES_JOIN_SPARK, _SPECIES_JOIN_DUCK),
+    Query("hist_stack", _HIST_STACK, _HIST_STACK),
+    Query("cell_join_salted", _salted_join_spark,
+          _SALTED_JOIN_ORACLE, driver=True),
+    Query("north_star_chain", _north_star_chain),
+    Query("north_star_stats", _north_star_stats,
+          _NORTH_STAR_DUCK, driver=True),
+    Query("tree_detect_tiles", _flagship_detect),
+    Query("tree_match_oracle", _tree_match_oracle,
+          _TM_ORACLE_DUCK, driver=True),
+    Query("tree_match_greedy", _match_greedy),
+    Query("tiles_decode_invariants", _decode_invariants),
+    Query("tree_detect_halo", _halo_detect),
+    Query("tree_detection_catalog_roi", _detect_catalog_roi),
+    Query("tree_detect_crowns", _detect_with_crowns),
+    Query("crowns_spike", _crowns_spike_gate, _CROWNS_SPIKE_DUCK, driver=True),
+    Query("checkpoint_resume_stats", _ckpt_resume_gate,
+          _CKPT_RESUME_DUCK, driver=True),
+    Query("halo_dominance_stats", _halo_dominance_gate,
+          _HALO_DOMINANCE_DUCK, driver=True),
+    Query("tree_metrics_spike", _tree_metrics_spike_gate,
+          _TREE_METRICS_SPIKE_DUCK, driver=True),
+    Query("catalog_roi_stats", _catalog_roi_gate,
+          _CATALOG_ROI_DUCK, driver=True),
+    Query("checkpointed_detect", _checkpointed_detect),
+    Query("clouds_tree_metrics", _tree_metrics),
+    Query("tiles_roundtrip_stats", _tiles_roundtrip, _RT_DUCK, driver=True),
+    Query("maxima_localmax", _maxima_localmax, _MAXIMA_DUCK, driver=True),
+    Query("watershed_voronoi", _watershed_voronoi,
+          _WATERSHED_DUCK, driver=True),
+    Query("dem_filtering_surface", _dem_filtering_surface,
+          _DEMFILT_DUCK, driver=True),
+    Query("label_components_blocks", _label_components_blocks,
+          _LABEL_CC_DUCK, driver=True),
+    Query("zonal_adjust_stats", _zonal_adjust_stats, _ZONAL_DUCK, driver=True),
+    Query("tree_extraction_stats", _tree_extraction_stats,
+          _TREE_EXTRACT_DUCK, driver=True),
+    Query("crown_wkt_rects", _crown_wkt_rects, _CROWN_WKT_DUCK, driver=True),
+    Query("streaming_detect_resume", _streaming_detect_resume,
+          _STREAM_DETECT_DUCK, driver=True),
+]
+
+RASTER = [
+    Query("points2dsm", _POINTS2DSM, _POINTS2DSM, driver=True),
+    Query("raster_metrics_regrid", _RASTER_METRICS,
+          _RASTER_METRICS, driver=True),
+    Query("vegetation_indices", _VEG_INDICES, _VEG_INDICES),
+    Query("boxcox_transforms", _BOXCOX, _BOXCOX),
+    Query("aba_metrics", _ABA_METRICS_SPARK, _ABA_METRICS_DUCK, driver=True),
+    Query("aba_quantiles", _ABA_QUANTILES_SPARK, _ABA_QUANTILES_DUCK),
+    Query("terrain_plane_fit", _TERRAIN_PLANE, _TERRAIN_PLANE, driver=True),
+    Query("polar2projected", _POLAR2PROJ, _POLAR2PROJ),
+    Query("raster_xy_mask", _xy_mask_sql("spark"), _xy_mask_sql("duck")),
+    Query("aba_predict", _ABA_PREDICT, _ABA_PREDICT),
+    Query("aba_inference", _ABA_INFERENCE, _ABA_INFERENCE),
+    Query("clean_raster", _CLEAN_RASTER, _CLEAN_RASTER),
+    Query("gap_detection", _gap_detect),
+    Query("gap_detection_global", _gap_detect_global),
+    Query("gap_detection_reconstruct", _gap_detect_reconstruct),
+    Query("coregistration", _coregistration),
+    Query("raster_local_max", _raster_local_max_gate, _RASTER_LOCAL_MAX_DUCK),
+    Query("gap_merge_mosaic", _gap_global_gate, _GAP_GLOBAL_DUCK, driver=True),
+    Query("coregistration_stats", _coreg_e2e_gate,
+          _COREG_E2E_DUCK, driver=True),
+    Query("points_lifecycle_stats", _points_lifecycle_gate,
+          _POINTS_LIFECYCLE_DUCK, driver=True),
+    Query("hilbert_index", _hilbert_index_gate, _hilbert_duck()),
+    Query("points_to_tiles_detect", _points_to_tiles),
+    Query("points2dtm_normalize_detect", _points2dtm_normalize_detect),
+    Query("edge_detection_stats", _edge_stats, _EDGE_STATS_DUCK, driver=True),
+    Query("raster_chull_mask", _chull_mask, _chull_mask_duck()),
+    Query("cell_index_hierarchy", _cell_index, _CELL_INDEX_DUCK),
+    Query("coreg_surface", _coreg_surface, _COREG_SURF_DUCK),
+    Query("coreg_kernel_stats", _coreg_kernel_stats,
+          _coreg_kernel_duck(), driver=True),
+    Query("gap_ladder_surface", _gap_ladder_surface,
+          _GAP_LADDER_DUCK, driver=True),
+    Query("points2dtm_tin_plane", _points2dtm_tin_plane,
+          _TIN_PLANE_DUCK, driver=True),
+    Query("scalar_map_ops", _SCALAR_MAP_OPS, _SCALAR_MAP_OPS, driver=True),
+    Query("aba_model_scores", _ABA_MODEL_SCORES,
+          _ABA_MODEL_SCORES, driver=True),
+    Query("raster_masks", _raster_masks, _RASTER_MASKS_DUCK, driver=True),
+    Query("cell_index_dual", _cell_index_dual, _CELL_DUAL_DUCK, driver=True),
+    Query("overview_pyramid", _overview_gate, _OVERVIEW_DUCK),
+]
+
+INTERCHANGE = [
+    Query("las_ingest_dsm", _las_ingest_gate, _LAS_INGEST_DUCK),
+    Query("las_lifecycle_detect", _las_lifecycle_gate, _POINTS_LIFECYCLE_DUCK),
+    Query("laz_lifecycle_detect", _laz_lifecycle_gate, _POINTS_LIFECYCLE_DUCK),
+    Query("clustered_layout_scan", _clustered_layout_gate,
+          _CLUSTERED_LAYOUT_DUCK),
+    Query("laz_chablais_detect", _laz_chablais_detect, needs=CHABLAIS3),
+    Query("geotiff_spike_detect", _geotiff_spike_gate, _CROWNS_SPIKE_DUCK),
+]
+
+IMAGES = [
+    Query("multimodal_image_features", _multimodal_features,
+          _MULTIMODAL_DUCK, driver=True),
+    Query("phash_neardup", _phash_neardup, _PHASH_ND_DUCK, driver=True),
+    Query("image_dedup_clusters", _image_dedup_gate, _IMG_DEDUP_DUCK),
+    Query("image_augment_stats", _image_augment_stats, _IMAGE_AUGMENT_DUCK),
+    Query("image_pack", _image_pack_sql("spark"), _image_pack_sql("duck")),
+    Query("caption_alignment", _caption_align_gate, _CAPTION_ALIGN_DUCK),
+]
+
+TEXT = [
+    Query("exact_dedup", _EXACT_DEDUP, _EXACT_DEDUP),
+    Query("text_quality", _TEXT_QUALITY, _TEXT_QUALITY),
+    Query("bpe_token_count", _BPE_SPARK, _BPE_DUCK),
+    Query("rabin_fingerprint", _RABIN_SPARK, _RABIN_DUCK, driver=True),
+    Query("token_topk", _TOKEN_TOPK_SPARK, _TOKEN_TOPK_DUCK),
+    Query("langid_heuristic", _LANGID_SPARK, _LANGID_DUCK),
+    Query("doc_fingerprint", _FINGERPRINT_SPARK, _FINGERPRINT_DUCK),
+    Query("text_analysis", _TEXT_ANALYSIS_SPARK,
+          _TEXT_ANALYSIS_DUCK, driver=True),
+    Query("minhash_lsh", _minhash_sql(_SHINGLES_SPARK, "spark"),
+          _minhash_sql(_SHINGLES_DUCK, "duck")
+          .replace("AS STRING", "AS VARCHAR")),
+    Query("ngram_jaccard", _ngram_jaccard_salted,
+          _jaccard_sql(_SHINGLES_DUCK)),
+    Query("text_neardup", _text_neardup, _text_neardup_duck(), driver=True),
+    Query("simhash", _SIMHASH_SPARK, _SIMHASH_DUCK),
+    Query("embedding_topk", _topk_spark, _TOPK_DUCK),
+    Query("simhash_neardup",
+          _SIMHASH_ND_SPARK.replace("%%SIMHASH%%", _SIMHASH_SPARK),
+          _SIMHASH_ND_DUCK.replace("%%SIMHASH%%", _SIMHASH_DUCK),
+          driver=True),
+    Query("embedding_neardup", _NEARDUP_SPARK, _NEARDUP_DUCK, driver=True),
+    Query("stratified_sample", _STRATIFIED_SAMPLE, _STRATIFIED_SAMPLE),
+    Query("ann_lsh", _ann_lsh, _ANN_LSH_DUCK),
+    Query("ann_ivf", _ann_ivf, _ANN_IVF_DUCK),
+    Query("dedup_clusters", _dedup_clusters,
+          _dedup_clusters_duck(), driver=True),
+    Query("training_data_pipeline", _training_pipeline,
+          _TD_PIPELINE_DUCK, driver=True),
+    Query("bpe_train", _bpe_train, _BPE_TRAIN_DUCK, driver=True),
+    Query("ann_pq", _ann_pq, _ANN_PQ_DUCK),
+    Query("asof_join", _asof_gate, _ASOF_DUCK),
+    Query("rollup_counts", _ROLLUP_COUNTS, _ROLLUP_COUNTS),
+    Query("stat_filters", _stat_filters_sql("spark"),
+          _stat_filters_sql("duck"), driver=True),
+    Query("lm_perplexity", _stat_filters_sql("spark", "ppl"),
+          _stat_filters_sql("duck", "ppl")),
+    Query("dsir_select", _stat_filters_sql("spark", "dsir"),
+          _stat_filters_sql("duck", "dsir")),
+    Query("tfidf_keywords", _stat_filters_sql("spark", "tfidf"),
+          _stat_filters_sql("duck", "tfidf")),
+    Query("ann_dual", _ann_dual, _ANN_DUAL_DUCK, driver=True),
+]
+
+STREAMING = [
+    Query("streaming_windowed_events", _streaming_windowed,
+          _STREAM_WINDOWED_DUCK, driver=True),
+    Query("streaming_running_totals", _streaming_totals,
+          _STREAM_TOTALS_DUCK, driver=True),
+    Query("streaming_dedup", _streaming_dedup,
+          _STREAM_DEDUP_DUCK, driver=True),
+]
 
 
-# --- Round-5 driver-budget repack (final round): the last two reference
-# codepaths without driver-row evidence — crowns_spike (crown=True WKT
-# end-to-end) and tree_metrics_spike (clouds_tree_metrics end-to-end) —
-# enter the driver 50. Slots are freed by (a) folding hist_stack's facts
-# into matching_scores' 'stack' section and (b) merging the two ANN gates
-# into section-tagged ann_dual. All three vacated standalones remain
-# individually verified in _EXTENDED (tools/check_oracle.py + pytest).
-_EXTENDED["hist_stack"] = (_HIST_STACK, _HIST_STACK)
-_SHARED.pop("hist_stack")
-_EXTENDED["ann_lsh"] = _DIALECT.pop("ann_lsh")
-_EXTENDED["ann_ivf"] = _DIALECT.pop("ann_ivf")
-_DIALECT["ann_dual"] = (_ann_dual, _ANN_DUAL_DUCK)
-_DIALECT["crowns_spike"] = _EXTENDED.pop("crowns_spike")
-_DIALECT["tree_metrics_spike"] = _EXTENDED.pop("tree_metrics_spike")
+def _by_name(qs: list[Query]) -> dict[str, Query]:
+    names = [q.name for q in qs]
+    twice = sorted({n for n in names if names.count(n) > 1})
+    if twice:
+        raise ValueError(f"queries declared more than once: {twice}")
+    return {q.name: q for q in qs}
+
+
+REGISTRY = MappingProxyType(_by_name(
+    FORESTRY + RASTER + INTERCHANGE + IMAGES + TEXT + STREAMING))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name, sql in _SHARED.items():
-        out[name] = _sql(sql)
-    for src in (_DIALECT, _EXTENDED):
-        for name, (spark_side, _) in src.items():
-            out[name] = (spark_side if callable(spark_side)
-                         else _sql(spark_side))
-    out.update(_NO_ORACLE)
-    return out
+    return {name: q.run for name, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """Driver-facing oracle set: exactly 50 entries (the driver's
-    correctness harness records at most 50 rows — see _EXTENDED's note)."""
-    out = dict(_SHARED)
-    for name, (_, duck) in _DIALECT.items():
-        out[name] = duck
-    return out
+    """Driver-facing oracle set: the 50 `driver=True` entries."""
+    return {name: q.duck for name, q in REGISTRY.items() if q.driver}
 
 
 def oracle_sql_extended() -> dict[str, str]:
-    """Every oracle, including the redundant variants outside the driver's
-    50-row budget — the set tools/check_oracle.py and the pytest gate run."""
-    out = oracle_sql()
-    for name, (_, duck) in _EXTENDED.items():
-        out[name] = duck
-    return out
+    """Every oracle, driver and extended — the set tools/check_oracle.py
+    and the pytest gate run."""
+    return {name: q.duck for name, q in REGISTRY.items()
+            if q.duck is not None}

@@ -15,6 +15,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def spark_cpus() -> str:
+    """SPARK_GRAFT_CPUS, the N of the default local[N] master."""
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
 def get_spark(app: str = "lidartree_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     # One BLAS/OpenMP thread per Python worker: Spark supplies the
@@ -25,7 +30,7 @@ def get_spark(app: str = "lidartree_spark", master: str | None = None,
     for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
               "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(v, "1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = spark_cpus()
     shuffle = shuffle_partitions or int(os.environ.get(
         "SPARK_GRAFT_SHUFFLE", str(max(32, int(cpus) if cpus.isdigit() else 32))))
     b = (

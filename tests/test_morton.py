@@ -88,9 +88,9 @@ def test_cell_gate_expression_stays_small(spark):
     references and grew the gate's physical-plan text ~5x (generated
     methods blew past JIT limits -> silent 2x slowdown). The additive
     guard keeps the plan compact; alert if it regresses."""
-    from lidartree_spark.queries import _cell_index
-    plan = _cell_index(spark, "/root/testdata/sf0.001") \
-        ._jdf.queryExecution().executedPlan().toString()
+    from lidartree_spark.queries import queries
+    df = queries()["cell_index_hierarchy"](spark, "/root/testdata/sf0.001")
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert len(plan) < 25_000  # measured 7.8k healthy, ~40k with the blowup
 
 

@@ -16,9 +16,10 @@ def test_chain_is_lossless_and_matches_standalone(spark):
         synthetic_ref_trees,
         synthetic_tiles,
     )
-    from lidartree_spark.queries import _north_star_chain
+    from lidartree_spark.queries import queries
 
-    out = _north_star_chain(spark, "/root/testdata/sf0.001").toPandas()
+    chain = queries()["north_star_chain"]
+    out = chain(spark, "/root/testdata/sf0.001").toPandas()
     assert len(out) > 0
     assert out.n_trees.min() >= 1
     assert out.zone.str.startswith("zone_").all()
@@ -38,7 +39,7 @@ def test_chain_is_lossless_and_matches_standalone(spark):
     assert (got == want).all().all()
 
     # deterministic across runs (seeded synthesis + deterministic kernels)
-    again = _north_star_chain(spark, "/root/testdata/sf0.001").toPandas()
+    again = chain(spark, "/root/testdata/sf0.001").toPandas()
     a = out.sort_values(["cell", "image_id"]).reset_index(drop=True)
     b = again.sort_values(["cell", "image_id"]).reset_index(drop=True)
     assert a.equals(b)

@@ -90,28 +90,63 @@ DRIVER_50_SHA256 = ("cee63f4c7c5ecce288a301489936282b"
                     "ea81763b9b5835fe582b8e76106e1d88")
 
 
-def test_registry_tiers_partition_queries():
-    """Every query sits in exactly one tier: driver (_SHARED or _DIALECT,
-    via oracle_sql), extended (_EXTENDED) or no-oracle (_NO_ORACLE). A name
-    registered twice would otherwise collapse silently inside queries()."""
+# The 48 extended gates and the 16 rows-only entries, pinned the same way.
+EXTENDED_48 = {
+    "aba_inference", "aba_predict", "aba_quantiles", "ann_ivf", "ann_lsh",
+    "ann_pq", "asof_join", "boxcox_transforms", "bpe_token_count",
+    "caption_alignment", "cell_index_hierarchy", "clean_raster",
+    "clustered_layout_scan", "coreg_surface", "doc_fingerprint",
+    "dsir_select", "embedding_topk", "exact_dedup", "geotiff_spike_detect",
+    "height_regression", "hilbert_index", "hist_detection", "hist_stack",
+    "image_augment_stats", "image_dedup_clusters", "image_pack",
+    "langid_heuristic", "las_ingest_dsm", "las_lifecycle_detect",
+    "laz_lifecycle_detect", "lm_perplexity", "matching_mutual_nn",
+    "minhash_lsh", "ngram_jaccard", "overview_pyramid", "polar2projected",
+    "raster_chull_mask", "raster_local_max", "raster_xy_mask",
+    "rollup_counts", "simhash", "species_dim_join", "stratified_sample",
+    "text_quality", "tfidf_keywords", "tile_prune_roi", "token_topk",
+    "vegetation_indices",
+}
+ROWS_ONLY_16 = {
+    "checkpointed_detect", "clouds_tree_metrics", "coregistration",
+    "gap_detection", "gap_detection_global", "gap_detection_reconstruct",
+    "laz_chablais_detect", "north_star_chain", "points2dtm_normalize_detect",
+    "points_to_tiles_detect", "tiles_decode_invariants", "tree_detect_crowns",
+    "tree_detect_halo", "tree_detect_tiles", "tree_detection_catalog_roi",
+    "tree_match_greedy",
+}
+EXTENDED_98_SHA256 = ("059499828436797caddae53cb8fa0cb8"
+                      "9cca4edbbc47f48e395114d3904d359e")
+# {name: SQL} of the 42 queries whose Spark side is a SQL string
+SPARK_SQL_42_SHA256 = ("b6b2a201d84d966a6b69f9a47c7e33c7"
+                       "d3231c7d4f39eda5e532bcb849d359af")
+
+
+def _sha256(d):
     import hashlib
     import json
+    return hashlib.sha256(json.dumps(d, sort_keys=True).encode()).hexdigest()
 
+
+def test_registry_tiers_partition_queries():
+    """The three tiers, derived from the declarations, partition queries()
+    into the pinned name sets, and every oracle and Spark SQL text is
+    pinned by digest."""
     from lidartree_spark.queries import (
-        _DIALECT,
-        _EXTENDED,
-        _NO_ORACLE,
-        _SHARED,
+        REGISTRY,
         oracle_sql,
+        oracle_sql_extended,
     )
 
-    driver = oracle_sql()
+    driver, every = oracle_sql(), oracle_sql_extended()
     assert set(driver) == DRIVER_50 and len(DRIVER_50) == 50
-    digest = hashlib.sha256(
-        json.dumps(driver, sort_keys=True).encode()).hexdigest()
-    assert digest == DRIVER_50_SHA256
-    tiers = [set(_SHARED), set(_DIALECT), set(_EXTENDED), set(_NO_ORACLE)]
-    for i, a in enumerate(tiers):
-        for b in tiers[i + 1:]:
-            assert not a & b, sorted(a & b)
-    assert set().union(*tiers) == set(queries())
+    assert _sha256(driver) == DRIVER_50_SHA256
+    assert set(every) - set(driver) == EXTENDED_48 and len(EXTENDED_48) == 48
+    assert _sha256(every) == EXTENDED_98_SHA256
+    assert set(queries()) - set(every) == ROWS_ONLY_16
+    assert len(ROWS_ONLY_16) == 16 and len(queries()) == 114
+    spark_sql = {name: q.spark for name, q in REGISTRY.items()
+                 if isinstance(q.spark, str)}
+    assert len(spark_sql) == 42
+    assert _sha256(spark_sql) == SPARK_SQL_42_SHA256
+

@@ -1,7 +1,8 @@
-"""Local replica of the driver's correctness gate: run each queries() entry
+"""Local replica of the driver's correctness gate: run each registry entry
 on Spark and its oracle on DuckDB over the same sf dir; compare row-count,
 column names, and order-insensitive values. Checks the EXTENDED oracle set
-(the driver-facing 50 plus the locally-verified variants).
+(the driver-facing 50 plus the locally-verified variants). An entry whose
+input file (`Query.needs`) is absent is skipped, not failed.
 
 Usage: python tools/check_oracle.py [sf_dir] [name ...]
 """
@@ -75,22 +76,25 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    from lidartree_spark.queries import oracle_sql_extended, queries
+    from lidartree_spark.queries import REGISTRY
     from lidartree_spark.session import get_spark
 
     spark = get_spark("oracle-check", master="local[8]")
     con = duck_connect(sf_dir)
 
-    qs, os_ = queries(), oracle_sql_extended()
     failures = []
-    for name, fn in qs.items():
+    for name, q in REGISTRY.items():
         if only and name not in only:
             continue
-        err = compare_one(spark, con, name, fn, os_.get(name), sf_dir)
+        missing = q.missing_input()
+        if missing:
+            print(f"skip {name}: missing {missing}")
+            continue
+        err = compare_one(spark, con, name, q.run, q.duck, sf_dir)
         if err is not None:
             failures.append((name, err))
             print(f"FAIL {name}: {err}")
-        elif name not in os_:
+        elif q.duck is None:
             print(f"ok   {name}: rows-only")
         else:
             print(f"ok   {name}: rows match")
