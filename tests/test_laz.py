@@ -15,7 +15,7 @@ import struct
 import numpy as np
 import pytest
 
-from lidartree_spark.queries import CHABLAIS3
+from lidartree_spark.queries.interchange import CHABLAIS3
 
 needs_chablais = pytest.mark.skipif(not os.path.exists(CHABLAIS3),
                                     reason="reference .laz not present")
