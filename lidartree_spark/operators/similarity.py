@@ -1,7 +1,7 @@
 """Similarity search over embedding columns.
 
 - brute_force_topk: exact cosine top-k (the baseline; also expressed in pure
-  SQL as queries.py `embedding_topk` with a DuckDB oracle).
+  SQL as queries/text.py `embedding_topk` with a DuckDB oracle).
 - lsh_topk: scale path #1 — sign-random-projection LSH with L independent
   hash tables. Hashing is a vectorized numpy matmul per Arrow batch
   (mapInPandas); candidates come from one equi-join on (table, bucket);
@@ -36,7 +36,7 @@ def _planes(dim: int, n_tables: int, n_bits: int, seed: int = 97) -> np.ndarray:
 def srp_planes_int(n_tables: int, n_bits: int, dim: int) -> np.ndarray:
     """Deterministic INTEGER SRP hyperplanes via an LCG over the (bit, dim)
     index — the same formula the DuckDB oracle re-derives in SQL
-    (queries.py ann_lsh / embedding_neardup), so bucket assignment is
+    (queries/text.py ann_lsh / embedding_neardup), so bucket assignment is
     exactly cross-checkable when the vectors are integer-quantized:
     w[p, j] = (1103515245 * (p*dim + j + 7) + 12345) % 2^31 - 2^30,
     p = table*n_bits + bit. All arithmetic stays in int64."""

@@ -54,10 +54,6 @@ class Query:
     driver: bool = False
     needs: str | None = None
 
-    def __post_init__(self):
-        if self.driver and self.duck is None:
-            raise ValueError(f"driver query {self.name!r} has no oracle")
-
     def run(self, spark: SparkSession, sf_dir: str) -> DataFrame:
         if isinstance(self.spark, str):
             load_views(spark, sf_dir)

@@ -14,7 +14,7 @@ from lidartree_spark.queries.shared import _lifecycle_points, _spike_tiles
 
 # --- LAS 1.2 point-cloud ingestion gate (round 4) --------------------------
 # The reference's native input is a .laz file read by lidR::readLAS
-# (/root/reference/R/common.R:16-20; inst/extdata las_chablais3.laz). This
+# (lidaRtRee R/common.R:16-20; inst/extdata las_chablais3.laz). This
 # gate closes the uncompressed-container parity gap END TO END: it PLANTS
 # real LAS 1.2 bytes on disk (3 files, point format 1, power-of-two scale
 # factors so every coordinate decodes to an exact double), reads them back

@@ -17,7 +17,7 @@ from lidartree_spark.queries.shared import (
 
 # ---------------------------------------------------------------------------
 # §2.1 points2DSM — rasterize points -> max-in-cell grid
-# (/root/reference/R/common.R:53-70: cell = max Z of points in cell, extent
+# (lidaRtRee R/common.R:53-70: cell = max Z of points in cell, extent
 # snapped to multiples of res). Points: events(value, user_id); z = value.
 # Pure Catalyst hash aggregation; at 100 TB this is a single shuffle on the
 # (cx, cy) key with map-side partial max.

@@ -10,6 +10,7 @@ from lidartree_spark.queries import oracle_sql, oracle_sql_extended, queries
 from tools.check_oracle import compare_one, duck_connect
 
 SF = "/root/testdata/sf0.001"
+EXTENDED = sorted(set(oracle_sql_extended()) - set(oracle_sql()))
 
 
 @pytest.fixture(scope="module")
@@ -19,8 +20,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name",
-                         sorted(set(oracle_sql_extended()) - set(oracle_sql())))
+@pytest.mark.parametrize("name", EXTENDED)
 def test_extended_oracle(spark, duck, name):
     err = compare_one(spark, duck, name, queries()[name],
                       oracle_sql_extended()[name], SF)
