@@ -5,7 +5,10 @@ final line carries only the gate numbers):
   {"metric": "...", "value": N, "unit": "sec", "sf": ..., "tiles_per_sec":
    ..., "n_tiles": ..., "queries_total_sec": ..., "queries_file": ...,
    "scaling": {...}}
-Per-query timings and the raw scaling trials go to BENCH/queries_latest.json.
+Per-query timings and the raw scaling trials go to BENCH/queries_latest.json,
+the tracked record, on a run at the default sizes; a run that overrides
+SPARK_GRAFT_BENCH_GRID, SPARK_GRAFT_SCALING* or SPARK_GRAFT_SF_DIR writes
+them to the ignored .bench_build/queries_latest.json instead.
 
 Headline metric = tiles/sec through the flagship pipeline (decode +
 segmentation + extraction + greedy spatial matching), the BASELINE.json
@@ -357,6 +360,15 @@ def run_isolated_top(results: dict, k: int = 10, n: int = 4) -> dict:
         return {"n": n, "error": f"{type(e).__name__}: {e}"[:300]}
 
 
+def detail_relpath(environ) -> str:
+    """Where a run's per-query detail goes, relative to the repo: the
+    tracked BENCH/ record only at the default sizes, else .bench_build/."""
+    resized = any(k in ("SPARK_GRAFT_BENCH_GRID", "SPARK_GRAFT_SF_DIR")
+                  or k.startswith("SPARK_GRAFT_SCALING") for k in environ)
+    return os.path.join(".bench_build" if resized else "BENCH",
+                        "queries_latest.json")
+
+
 def main() -> None:
     import tempfile
 
@@ -489,7 +501,8 @@ def main() -> None:
     # stdout line stays compact so the driver's bounded tail capture can
     # parse it (BENCH_r02.json recorded parsed:null because the old
     # all-in-one line overflowed the capture window).
-    detail_path = os.path.join(REPO, "BENCH", "queries_latest.json")
+    detail_file = detail_relpath(os.environ)
+    detail_path = os.path.join(REPO, detail_file)
     os.makedirs(os.path.dirname(detail_path), exist_ok=True)
     with open(detail_path, "w") as f:
         json.dump({"sf": sf, "queries": results, "scaling_raw": scaling,
@@ -508,7 +521,7 @@ def main() -> None:
         "queries_total_sec": total,
         "n_queries": len(results),
         "n_query_errors": len(errors),
-        "queries_file": "BENCH/queries_latest.json",
+        "queries_file": detail_file,
         "scaling": compact_scaling,
         "skew": skew,
         "layout": layout,

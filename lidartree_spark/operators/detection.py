@@ -46,6 +46,27 @@ def _segment_batch(pdf: pd.DataFrame, p: dict):
             decode_tile(rec.bytes, rec.fmt, rec.w, rec.h), **kw)
 
 
+def _core_trees(rec, seg: dict, res: float, crown: bool = False) -> list:
+    """tree_extraction rows of one segmented tile in map coordinates; on a
+    padded tile (rec.pad > 0) only the apexes inside the tile core are kept
+    (crop-to-core dedup, tree_detection.R:160-165): an apex in the halo
+    belongs to the neighbor whose core holds it."""
+    from lidartree_spark.generator import parse_tile_id, tile_origin
+    from lidartree_spark.kernels.extraction import tree_extraction
+    row, col = parse_tile_id(rec.image_id)
+    pad = int(getattr(rec, "pad", 0))
+    w_core, h_core = rec.w - 2 * pad, rec.h - 2 * pad
+    x0, y1 = tile_origin(row, col, w_core, h_core, res)
+    rows = tree_extraction(
+        seg["filled_dem"], seg["local_maxima"], seg["segments_id"],
+        x0=x0 - pad * res, y1=y1 + pad * res, res=res, crown=crown)
+    if pad:
+        x1 = x0 + w_core * res
+        y0 = y1 - h_core * res
+        rows = [r for r in rows if x0 <= r["x"] < x1 and y0 <= r["y"] < y1]
+    return rows
+
+
 def detect_trees(tiles: DataFrame, params: dict | None = None,
                  crown: bool = False) -> DataFrame:
     """tiles -> tree rows (tree_detection LAS/SpatRaster branch semantics,
@@ -57,27 +78,10 @@ def detect_trees(tiles: DataFrame, params: dict | None = None,
     cols = ["image_id", "bytes", "w", "h", "fmt"] + (["pad"] if padded else [])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from lidartree_spark.generator import parse_tile_id, tile_origin
-        from lidartree_spark.kernels.extraction import tree_extraction
-        res = p["res"]
         for pdf in batches:
             out = []
             for rec, seg in _segment_batch(pdf, p):
-                row, col = parse_tile_id(rec.image_id)
-                pad = int(getattr(rec, "pad", 0))
-                w_core, h_core = rec.w - 2 * pad, rec.h - 2 * pad
-                x0, y1 = tile_origin(row, col, w_core, h_core, res)
-                rows = tree_extraction(
-                    seg["filled_dem"], seg["local_maxima"],
-                    seg["segments_id"], x0=x0 - pad * res, y1=y1 + pad * res,
-                    res=res, crown=crown)
-                if pad:
-                    # crop-to-core dedup (tree_detection.R:160-165): an apex
-                    # in the halo belongs to the neighbor whose core holds it
-                    x1 = x0 + w_core * res
-                    y0 = y1 - h_core * res
-                    rows = [r for r in rows
-                            if x0 <= r["x"] < x1 and y0 <= r["y"] < y1]
+                rows = _core_trees(rec, seg, p["res"], crown)
                 for r in rows:
                     r["image_id"] = rec.image_id
                 out.extend(rows)

@@ -4,12 +4,14 @@ the reference's chunk buffer (lidR catalog buffer >= 10 m warning,
 /root/reference/R/tree_detection.R:114-115; crop-to-core dedup :160-165).
 
 Scale design: tiles only ship their BORDER STRIPS (O(halo * perimeter) bytes,
-not O(tile) x 9), keyed by the receiving tile id — one hash shuffle on
-image_id, then a grouped assembly. At 10^12 tiles the shuffle volume is
-halo_px/tile_w (~25% at 16/64) of the corpus, and the subsequent detection
-stays embarrassingly parallel. Missing neighbors (corpus edge) are filled by
-edge replication, matching the reference's padding semantics
-(tree_detection.R:315-333).
+not O(tile) x 9), keyed by the receiving tile id. One hash shuffle on that
+key, rows sorted by it within each partition, then a batched grouped map
+(operators.matching.whole_groups): group boundaries are found by slicing
+each Arrow batch, so a tile costs a numpy slice, not an Arrow round trip.
+At 10^12 tiles the shuffle volume is halo_px/tile_w (~25% at 16/64) of the
+corpus, and the subsequent detection stays embarrassingly parallel. Missing
+neighbors (corpus edge) are filled by edge replication, matching the
+reference's padding semantics (tree_detection.R:315-333).
 """
 
 from __future__ import annotations
@@ -18,7 +20,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 PADDED_SCHEMA = ("image_id string, bytes binary, w int, h int, fmt string, "
                  "pad int")
@@ -80,17 +81,17 @@ def with_halo(tiles: DataFrame, halo_px: int = 16) -> DataFrame:
             yield pd.DataFrame(out, columns=["target", "part", "bytes",
                                              "w", "h"])
 
-    parts = tiles.select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(emit, schema=_PART_SCHEMA)
+    parts = (tiles.select("image_id", "bytes", "w", "h", "fmt")
+             .mapInPandas(emit, schema=_PART_SCHEMA)
+             .repartition("target")
+             .sortWithinPartitions("target"))
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(rows: dict) -> dict | None:
         import numpy as np
         from lidartree_spark.codecs import decode_tile, encode_tile
-        rows = {rec.part: rec for rec in pdf.itertuples(index=False)}
         if "self" not in rows:
             # halo strips arriving for a tile absent from the corpus
-            return pd.DataFrame(columns=["image_id", "bytes", "w", "h",
-                                         "fmt", "pad"])
+            return None
         s = rows["self"]
         core = decode_tile(s.bytes, "raw_f32", s.w, s.h)
         h, w = core.shape
@@ -126,10 +127,18 @@ def with_halo(tiles: DataFrame, halo_px: int = 16) -> DataFrame:
         idx_r = np.clip(np.arange(h + 2 * p), r0, r1 - 1)
         idx_c = np.clip(np.arange(w + 2 * p), c0, c1 - 1)
         out = out[np.ix_(idx_r, idx_c)]
-        return pd.DataFrame([{
-            "image_id": key[0],
-            "bytes": encode_tile(out.astype(np.float32), "raw_f32"),
-            "w": w + 2 * p, "h": h + 2 * p, "fmt": "raw_f32", "pad": p,
-        }])
+        return {"image_id": s.target,
+                "bytes": encode_tile(out.astype(np.float32), "raw_f32"),
+                "w": w + 2 * p, "h": h + 2 * p, "fmt": "raw_f32", "pad": p}
 
-    return parts.groupBy("target").applyInPandas(assemble, schema=PADDED_SCHEMA)
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from lidartree_spark.operators.matching import whole_groups
+        for pdf, starts in whole_groups(batches, "target"):
+            recs = list(pdf.itertuples(index=False))
+            out = [assemble({rec.part: rec for rec in recs[a:b]})
+                   for a, b in zip(starts[:-1], starts[1:])]
+            yield pd.DataFrame([o for o in out if o is not None],
+                               columns=["image_id", "bytes", "w", "h", "fmt",
+                                        "pad"])
+
+    return parts.mapInPandas(run, schema=PADDED_SCHEMA)

@@ -6,10 +6,8 @@ per group but groups are small (one tile/plot: ~10 trees), so the engine
 shuffles once on the group key and runs the exact reference loop in numpy.
 Two physical strategies, same semantics (parity-tested):
 - match_trees: one hash shuffle, rows sorted by (key, side) within
-  partitions, BATCHED grouped map (group boundaries found by slicing inside
-  each Arrow batch — per-group cost is a numpy slice, not an Arrow round
-  trip). The scale default; the group key is the skew unit and AQE covers
-  hot spots.
+  partitions, then the batched grouped map of `whole_groups`. The scale
+  default; the group key is the skew unit and AQE covers hot spots.
 - detect_and_match: broadcast the (small) inventory into the detection
   stage — the whole pipeline fuses to one zero-shuffle map. Best when the
   corpus >> inventory and per-core counts dominate (single-executor edge).
@@ -17,12 +15,42 @@ Two physical strategies, same semantics (parity-tested):
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MATCH_SCHEMA = ("image_id string, r long, d long, h_diff double, "
                 "plan_diff double")
+
+
+def whole_groups(batches: Iterator[pd.DataFrame], key: str
+                 ) -> Iterator[tuple[pd.DataFrame, np.ndarray]]:
+    """Batched grouped map over Arrow batches sorted by `key`: yields
+    (pdf, starts), pdf holding whole groups only and group i being rows
+    starts[i]:starts[i + 1]. A group costs a numpy slice, not an Arrow
+    round trip. Groups can span batches: the trailing group of every batch
+    is carried into the next, so memory stays O(batch), not O(partition)."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if pdf.empty:
+            continue
+        keys = pdf[key].to_numpy()
+        cut = len(keys) - int((keys == keys[-1]).sum())
+        carry = pdf.iloc[cut:].reset_index(drop=True)
+        if cut:
+            yield pdf.iloc[:cut], _starts(keys[:cut])
+    if carry is not None:
+        yield carry, _starts(carry[key].to_numpy())
+
+
+def _starts(keys: np.ndarray) -> np.ndarray:
+    return np.concatenate(
+        [[0], np.nonzero(keys[1:] != keys[:-1])[0] + 1, [len(keys)]])
 
 
 def match_trees(ref: DataFrame, det: DataFrame,
@@ -34,14 +62,8 @@ def match_trees(ref: DataFrame, det: DataFrame,
     Output r/d are the 1-based within-group indices in input order (sorted by
     tree_id / id for determinism), matching the reference's row indices."""
 
-    # One shuffle on the group key, rows sorted (key, side, oid) within each
-    # partition, then a BATCHED grouped map: plain slicing finds group
-    # boundaries inside each Arrow batch, so the per-group cost is a numpy
-    # slice instead of a full Arrow->pandas round trip (the cogroup path
-    # paid ~2-4 ms of conversion per tile, dominating matching time at
-    # ~10 trees/group). Groups can span Arrow batches; the trailing group of
-    # every batch is carried into the next, so memory stays O(batch), not
-    # O(partition).
+    # whole_groups, not a cogroup: the cogroup path paid ~2-4 ms of Arrow
+    # conversion per group, dominating matching time at ~10 trees/group.
     r = ref.select(F.col(key).alias("k"), F.lit(0).alias("side"),
                    F.col("tree_id").cast("long").alias("oid"), "x", "y", "h")
     d = det.select(F.col(key).alias("k"), F.lit(1).alias("side"),
@@ -51,16 +73,12 @@ def match_trees(ref: DataFrame, det: DataFrame,
          .sortWithinPartitions("k", "side", "oid"))
 
     def run(batches):
-        import numpy as np
         from lidartree_spark.kernels.matching import tree_matching
         cols = ["image_id", "r", "d", "h_diff", "plan_diff"]
-
-        def process(pdf: pd.DataFrame):
+        for pdf, starts in whole_groups(batches, "k"):
             keys = pdf["k"].to_numpy()
             side = pdf["side"].to_numpy()
             xyz = pdf[["x", "y", "h"]].to_numpy()
-            starts = np.concatenate(
-                [[0], np.nonzero(keys[1:] != keys[:-1])[0] + 1, [len(keys)]])
             out_k, out_r, out_d, out_hd, out_pd = [], [], [], [], []
             for a, b in zip(starts[:-1], starts[1:]):
                 s = side[a:b]
@@ -76,31 +94,10 @@ def match_trees(ref: DataFrame, det: DataFrame,
                     out_d.append(int(p["d"]))
                     out_hd.append(p["h_diff"])
                     out_pd.append(p["plan_diff"])
-            if not out_k:
-                return None
-            return pd.DataFrame({"image_id": out_k, "r": out_r, "d": out_d,
-                                 "h_diff": out_hd, "plan_diff": out_pd},
-                                columns=cols)
-
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                continue
-            keys = pdf["k"].to_numpy()
-            tail = keys == keys[-1]
-            cut = len(keys) - int(tail.sum())
-            carry = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            res = process(body) if len(body) else None
-            if res is not None:
-                yield res
-        if carry is not None and len(carry):
-            res = process(carry)
-            if res is not None:
-                yield res
+            if out_k:
+                yield pd.DataFrame({"image_id": out_k, "r": out_r,
+                                    "d": out_d, "h_diff": out_hd,
+                                    "plan_diff": out_pd}, columns=cols)
 
     return u.mapInPandas(run, schema=MATCH_SCHEMA)
 
@@ -131,45 +128,24 @@ def detect_and_match(tiles: DataFrame, ref: DataFrame,
     cols = ["image_id", "bytes", "w", "h", "fmt"] + (["pad"] if padded else [])
 
     def run(batches):
-        import numpy as np
-        from lidartree_spark.codecs import decode_tile
-        from lidartree_spark.generator import parse_tile_id, tile_origin
-        from lidartree_spark.kernels.extraction import tree_extraction
         from lidartree_spark.kernels.matching import tree_matching
-        from lidartree_spark.kernels.segmentation import tree_segmentation
+        from lidartree_spark.operators.detection import (
+            _core_trees,
+            _segment_batch,
+        )
         groups = bc.value
-        res = p["res"]
         for pdf in batches:
             out = []
-            for rec in pdf.itertuples(index=False):
-                lr = groups.get(rec.image_id)
-                if lr is None or not len(lr):
-                    continue
-                chm = decode_tile(rec.bytes, rec.fmt, rec.w, rec.h)
-                seg = tree_segmentation(
-                    chm, res=res, nl_filter=p["nl_filter"],
-                    nl_size=p["nl_size"], sigma=p["sigma"],
-                    max_width=p["max_width"], hmin=p["hmin"], dmin=p["dmin"],
-                    dprop=p["dprop"], prop=p["prop"],
-                    min_value=p["min_value"])
-                row, col = parse_tile_id(rec.image_id)
-                pad = int(getattr(rec, "pad", 0))
-                w_core, h_core = rec.w - 2 * pad, rec.h - 2 * pad
-                x0, y1 = tile_origin(row, col, w_core, h_core, res)
-                rows = tree_extraction(
-                    seg["filled_dem"], seg["local_maxima"],
-                    seg["segments_id"], x0=x0 - pad * res,
-                    y1=y1 + pad * res, res=res)
-                if pad:
-                    x1 = x0 + w_core * res
-                    y0 = y1 - h_core * res
-                    rows = [r for r in rows
-                            if x0 <= r["x"] < x1 and y0 <= r["y"] < y1]
+            # a tile without reference trees has no match: skip its decode
+            mine = pdf["image_id"].map(groups.__contains__).astype(bool)
+            for rec, seg in _segment_batch(pdf[mine], p):
+                rows = _core_trees(rec, seg, p["res"])
                 if not rows:
                     continue
                 rows.sort(key=lambda r: r["id"])
                 ld = np.array([[r["x"], r["y"], r["h"]] for r in rows])
-                for m in tree_matching(lr, ld, delta_ground=delta_ground,
+                for m in tree_matching(groups[rec.image_id], ld,
+                                       delta_ground=delta_ground,
                                        h_prec=h_prec):
                     out.append({"image_id": rec.image_id,
                                 "r": int(m["r"]), "d": int(m["d"]),

@@ -15,6 +15,10 @@ Each stage materializes to a snapshot directory:
                                      per-partition lineage (partition id ->
                                      rows), wall time, schema
 
+The stage is written once and never read back to be counted: per-partition
+rows come from the Parquet footers of the part files just written, the
+schema from the stage DataFrame (so the stage data carries no extra column).
+
 Commit protocol: data is written first, the manifest last via
 write-temp-then-rename (atomic on POSIX); a stage directory without a
 manifest is an uncommitted snapshot and is recomputed. `Pipeline.run`
@@ -34,8 +38,8 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -52,6 +56,25 @@ def _fingerprint(stage: Stage, input_hashes: dict[str, str]) -> str:
                        "params": stage.params,
                        "inputs": input_hashes}, sort_keys=True)
     return hashlib.sha256(blob.encode()).hexdigest()[:16]
+
+
+def _part_files(data_dir: str) -> tuple[dict[str, int], int]:
+    """(rows per partition id, bytes) of a written stage. The task of
+    partition NNNNN writes `part-NNNNN-*.parquet`, whose footer holds its
+    row count; only a committed attempt's file is left, so retries do not
+    count twice. Zero-row files are skipped: as in a scan, a partition
+    without rows is absent."""
+    rows: dict[str, int] = {}
+    nbytes = 0
+    for f in sorted(os.listdir(data_dir)):
+        if f.endswith(".parquet"):
+            path = os.path.join(data_dir, f)
+            nbytes += os.path.getsize(path)
+            n = pq.read_metadata(path).num_rows
+            if n:
+                k = str(int(f.split("-")[1]))
+                rows[k] = rows.get(k, 0) + n
+    return rows, nbytes
 
 
 class Pipeline:
@@ -96,28 +119,19 @@ class Pipeline:
                 shutil.rmtree(sdir)
             os.makedirs(sdir)
             t0 = time.time()
-            dfs = {i: self.read_stage(i) for i in st.inputs}
+            dfs = {i: self.read_output(i) for i in st.inputs}
             df = st.fn(self.spark, **dfs)
             data_dir = os.path.join(sdir, "data")
-            # per-partition lineage: rows per output partition id
-            tagged = df.withColumn("_part", F.spark_partition_id())
-            tagged.write.mode("overwrite").parquet(data_dir)
-            written = self.spark.read.parquet(data_dir)
-            part_rows = {str(r["_part"]): r["n"] for r in
-                         written.groupBy("_part")
-                         .agg(F.count("*").alias("n")).collect()}
-            n_rows = sum(part_rows.values())
+            df.write.mode("overwrite").parquet(data_dir)
+            part_rows, nbytes = _part_files(data_dir)
             manifest = {
                 "stage": st.name,
                 "fingerprint": fp,
                 "inputs": input_hashes,
-                "rows": n_rows,
+                "rows": sum(part_rows.values()),
                 "partitions": part_rows,
-                "schema": written.drop("_part").schema.simpleString(),
-                "bytes": sum(
-                    os.path.getsize(os.path.join(data_dir, f))
-                    for f in os.listdir(data_dir)
-                    if f.endswith(".parquet")),
+                "schema": df.schema.simpleString(),
+                "bytes": nbytes,
                 "wall_sec": round(time.time() - t0, 3),
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ",
                                               time.gmtime()),
@@ -133,4 +147,5 @@ class Pipeline:
         return status
 
     def read_output(self, name: str) -> DataFrame:
+        # stages committed before manifests came from footers carry _part
         return self.read_stage(name).drop("_part")

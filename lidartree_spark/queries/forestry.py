@@ -15,6 +15,7 @@ from lidartree_spark.queries.shared import (
     _MORTON_TERMS,
     _lat_seq,
     _spike_tiles,
+    scratch_dir,
 )
 
 
@@ -702,8 +703,6 @@ def _ckpt_resume_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     statuses are emitted as columns, so a recompute (or a stale/partial
     snapshot) fails the oracle; the data columns pin that the resumed
     snapshot holds every spike detection exactly once."""
-    import tempfile
-
     from lidartree_spark.plans.checkpoint import Pipeline, Stage
 
     def s_tiles(s):
@@ -715,7 +714,7 @@ def _ckpt_resume_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stages = [Stage("tiles", s_tiles),
               Stage("detect", s_detect, inputs=["tiles"])]
-    base = tempfile.mkdtemp(prefix="lidartree_ckptr_")
+    base = scratch_dir("lidartree_ckptr_")
     st1 = Pipeline(spark, base).run(stages)
     st2 = Pipeline(spark, base).run(stages)
     det = Pipeline(spark, base).read_output("detect")
@@ -920,8 +919,6 @@ def _checkpointed_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship pipeline through the checkpoint/lineage layer: each stage
     commits a snapshot + per-partition manifest; rerunning skips committed
     stages (north-rule resumability; see plans/checkpoint.py)."""
-    import tempfile
-
     from lidartree_spark.plans.checkpoint import Pipeline, Stage
 
     def s_tiles(s):
@@ -932,7 +929,7 @@ def _checkpointed_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         from lidartree_spark.operators.detection import detect_trees
         return detect_trees(tiles)
 
-    p = Pipeline(spark, tempfile.mkdtemp(prefix="lidartree_ckpt_"))
+    p = Pipeline(spark, scratch_dir("lidartree_ckpt_"))
     p.run([Stage("tiles", s_tiles),
            Stage("detect", s_detect, inputs=["tiles"])])
     return p.read_output("detect")
@@ -1624,13 +1621,12 @@ def _streaming_detect_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-resumed run would miss phase-2 rows). The oracle re-derives the
     full spike set per tile (see _north_star_stats for the closed form)."""
     import os
-    import tempfile
 
     from lidartree_spark.streaming.ops import (
         stream_detect_to_parquet,
         stream_tiles,
     )
-    base = tempfile.mkdtemp(prefix="lidartree_sdr_")
+    base = scratch_dir("lidartree_sdr_")
     src = os.path.join(base, "src")
     sink = os.path.join(base, "sink")
     ckpt = os.path.join(base, "ckpt")

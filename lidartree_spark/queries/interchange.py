@@ -9,7 +9,11 @@ from pyspark.sql import functions as F
 from lidartree_spark.queries import Query
 from lidartree_spark.queries.forestry import _CROWNS_SPIKE_DUCK
 from lidartree_spark.queries.raster import _POINTS_LIFECYCLE_DUCK
-from lidartree_spark.queries.shared import _lifecycle_points, _spike_tiles
+from lidartree_spark.queries.shared import (
+    _lifecycle_points,
+    _spike_tiles,
+    scratch_dir,
+)
 
 
 # --- LAS 1.2 point-cloud ingestion gate (round 4) --------------------------
@@ -34,12 +38,11 @@ def _las_plant_files() -> str:
     # (gate green, encoder broken) and races concurrent runs on the same
     # tmp path; the 420 KB of files cost nothing to rewrite
     import os
-    import tempfile
 
     import numpy as np
 
     from lidartree_spark.las import encode_las
-    d = tempfile.mkdtemp(prefix="lidartree_las_gate_")
+    d = scratch_dir("lidartree_las_gate_")
     for f in range(3):
         g = np.arange(f * 5000, (f + 1) * 5000, dtype=np.int64)
         path = os.path.join(d, f"part{f}.las")
@@ -121,8 +124,6 @@ def _file_lifecycle_detect(spark: SparkSession,
     laz_lifecycle_detect — ONE builder so the select/round expressions
     that must stay byte-identical to _POINTS_LIFECYCLE_DUCK cannot
     drift between the two gates (the _lifecycle_points precedent)."""
-    import tempfile
-
     from lidartree_spark.las import read_las, write_las, write_laz
     from lidartree_spark.operators.detection import detect_trees
     from lidartree_spark.operators.rasterize import (
@@ -133,11 +134,11 @@ def _file_lifecycle_detect(spark: SparkSession,
     ground, canopy = _lifecycle_points(spark, with_class=True)
     pts = ground.unionByName(canopy).repartition(8)
     if compressed:
-        d = tempfile.mkdtemp(prefix="lidartree_laz_lc_")
+        d = scratch_dir("lidartree_laz_lc_")
         write_laz(pts, d, scale=(0.25, 0.25, 0.0025)).count()
         back = read_las(spark, d)
     else:
-        d = tempfile.mkdtemp(prefix="lidartree_las_lc_")
+        d = scratch_dir("lidartree_las_lc_")
         write_las(pts, d, scale=(0.25, 0.25, 0.0025)).count()
         back = read_las(spark, d, chunk_records=4096)
     g2 = back.where("classification = 2").select("x", "y", "z")
@@ -174,8 +175,6 @@ def _clustered_layout_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     effect (1-of-32 row groups for this 1/64-domain bbox vs 32-of-32
     hash-scattered) is engine-metadata, so it is asserted in
     tests/test_layout.py rather than here."""
-    import tempfile
-
     from lidartree_spark.operators.layout import bbox_scan, write_clustered
     pts = spark.range(200_000).selectExpr(
         "id",
@@ -183,7 +182,7 @@ def _clustered_layout_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST((id * 104729 + 13) % 25600 AS DOUBLE) / CAST(100 AS DOUBLE)"
         " AS y",
         "CAST(id % 97 AS DOUBLE) AS z")
-    d = tempfile.mkdtemp(prefix="lidartree_layout_")
+    d = scratch_dir("lidartree_layout_")
     write_clustered(pts, d, res=0.5, n_files=32)
     got = bbox_scan(spark, d, 0.0, 0.0, 32.0, 32.0)
     return got.agg(
@@ -250,11 +249,9 @@ def _geotiff_spike_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interchange format must not move a single detection or WKT
     vertex. DuckDB-oracle evidence for the raster source/sink, the
     exact analog of laz_lifecycle_detect on the point side."""
-    import tempfile
-
     from lidartree_spark.operators.detection import detect_trees
     from lidartree_spark.tiff import read_geotiff_tiles, write_geotiff_tiles
-    d = tempfile.mkdtemp(prefix="lidartree_tif_")
+    d = scratch_dir("lidartree_tif_")
     write_geotiff_tiles(_spike_tiles(spark), d).count()
     back = read_geotiff_tiles(spark, d)
     det = detect_trees(back, crown=True)

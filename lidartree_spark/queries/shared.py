@@ -2,7 +2,27 @@
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
+
+_SCRATCH: list[str] = []  # this process's scratch root, once made
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory for a builder's files, under one root per process
+    that is removed at interpreter exit. Builders return lazy DataFrames
+    that read these files, so a directory must outlive the call."""
+    if not _SCRATCH:
+        root, pid = tempfile.mkdtemp(prefix="lidartree_"), os.getpid()
+        # a forked child that exits must not remove its parent's files
+        atexit.register(lambda: os.getpid() == pid
+                        and shutil.rmtree(root, ignore_errors=True))
+        _SCRATCH.append(root)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH[0])
 
 
 def _lat_seq(dialect: str, lo: str, hi: str, tab: str, col: str) -> str:

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lidartree_spark.queries import Query
+from lidartree_spark.queries.shared import scratch_dir
 
 
 def _stage_events(spark: SparkSession, sf_dir: str, n_files: int = 1,
@@ -19,10 +20,9 @@ def _stage_events(spark: SparkSession, sf_dir: str, n_files: int = 1,
     head) — real duplicate rows arriving in different micro-batches, the
     streaming_dedup gate's input."""
     import shutil
-    import tempfile
 
     import pandas as pd
-    d = tempfile.mkdtemp(prefix="lidartree_stream_src_")
+    d = scratch_dir("lidartree_stream_src_")
     if n_files == 1 and not overlap:
         shutil.copy(f"{sf_dir}/events.parquet", f"{d}/part-0.parquet")
         return d

@@ -1,7 +1,10 @@
 """Halo exchange, gap detection, coregistration — engine vs oracle."""
 
+import hashlib
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from lidartree_spark.codecs import decode_tile, encode_tile
 from lidartree_spark.generator import gen_tile, gen_tile_row, tile_origin
@@ -51,6 +54,43 @@ def test_halo_assembly_pixels(spark):
     # south edge (corpus border) is edge-replicated
     assert np.allclose(np.nan_to_num(arr[-1, HALO:-HALO]),
                        np.nan_to_num(arr[-HALO - 1, HALO:-HALO]))
+
+
+# a 4x5 grid without two corner tiles and two interior ones: edge tiles
+# with a straight neighbor but no diagonal one take the mosaic-corner rule
+RAGGED_HOLES = ["t0000_0000", "t0003_0004", "t0001_0001", "t0002_0003"]
+
+
+@pytest.mark.parametrize("corpus, batch_rows, expected", [
+    ("rect_3x4", None,
+     "3240e9759c26f0cd73794d06c83408b2dc443f5becb79a50c0ee35cace1054be"),
+    ("ragged_4x5", None,
+     "62fa578a7b4b5a5c1002809d997cb974dae8e71b718c148abb7005de8a3ff3f7"),
+    # 4-row Arrow batches: a tile's 9 parts span batches
+    ("ragged_4x5", "4",
+     "62fa578a7b4b5a5c1002809d997cb974dae8e71b718c148abb7005de8a3ff3f7"),
+])
+def test_halo_payloads_pinned(spark, corpus, batch_rows, expected):
+    """sha256 of every padded payload (sorted by image_id) equals the
+    digest of the per-tile grouped assembly this batched one replaced."""
+    if corpus == "rect_3x4":
+        tiles = synthetic_tiles(spark, 3, 4)
+    else:
+        tiles = synthetic_tiles(spark, 4, 5).where(
+            ~F.col("image_id").isin(RAGGED_HOLES))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if batch_rows:
+        spark.conf.set(key, batch_rows)
+    try:
+        rows = with_halo(tiles, HALO).collect()
+    finally:
+        spark.conf.set(key, old)
+    h = hashlib.sha256()
+    for r in sorted(rows, key=lambda r: r.image_id):
+        h.update(f"{r.image_id},{r.w},{r.h},{r.fmt},{r.pad};".encode())
+        h.update(bytes(r.bytes))
+    assert h.hexdigest() == expected
 
 
 def test_halo_detection_equals_mosaic(spark):

@@ -1,7 +1,12 @@
 """Gate-level tests for driver queries: the SRP-LSH embedding near-dup
 (parity with brute force + no-cartesian plan), the multimodal feature
 gate (canonicalizable scalar schema, like the driver's hash step) and the
-registry's tier partition (the pinned driver-50 set)."""
+registry's tier partition (the pinned driver-50 set), and the removal of
+builders' scratch directories at exit."""
+
+import os
+import subprocess
+import sys
 
 import numpy as np
 import pandas as pd
@@ -150,3 +155,29 @@ def test_registry_tiers_partition_queries():
     assert len(spark_sql) == 42
     assert _sha256(spark_sql) == SPARK_SQL_42_SHA256
 
+
+
+_SCRATCH_RUN = """
+import os, sys, tempfile
+sys.path.insert(0, {repo!r})
+from lidartree_spark.queries import REGISTRY
+from lidartree_spark.session import get_spark
+spark = get_spark("scratch", master="local[1]", shuffle_partitions=2)
+REGISTRY["checkpoint_resume_stats"].run(spark, "unused").collect()
+print(sorted(os.listdir(tempfile.gettempdir())))
+spark.stop()
+"""
+
+
+def test_builder_scratch_dirs_removed_at_exit(tmp_path):
+    """A builder's files outlive its call (the DataFrame it returns reads
+    them) but not the process: with TMPDIR at tmp_path, the process leaves
+    no lidartree_* entry behind."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_RUN.format(repo=repo)],
+        env={**os.environ, "TMPDIR": str(tmp_path)}, capture_output=True,
+        text=True, timeout=600, check=True).stdout
+    assert "lidartree_" in out  # the builder did write under TMPDIR
+    assert not [e for e in os.listdir(tmp_path)
+                if e.startswith("lidartree_")]

@@ -217,6 +217,75 @@ def test_checkpoint_resume(spark, tmp_path):
     assert s4 == {"a": "skipped", "b": "computed"}
 
 
+def _partition_scan(df):
+    """{partition id: rows} the way Pipeline.run counted before manifests
+    came from Parquet footers: a spark_partition_id() scan."""
+    from pyspark.sql import functions as F
+    return {str(r["p"]): r["n"] for r in
+            df.groupBy(F.spark_partition_id().alias("p"))
+            .agg(F.count("*").alias("n")).collect()}
+
+
+@pytest.mark.parametrize("where", ["id < 3", "id < 0"])
+def test_checkpoint_manifest_counts_from_footers(spark, tmp_path, where):
+    """Empty partitions (id < 3 leaves 2 of 4 empty) and a zero-row stage:
+    the manifest's rows and partitions equal a partition scan of the same
+    DataFrame, and the committed data carries no bookkeeping column."""
+    def stage(s):
+        return s.range(0, 10, 1, 4).where(where)
+
+    p = Pipeline(spark, str(tmp_path / "ckpt"))
+    assert p.run([Stage("a", stage)]) == {"a": "computed"}
+    man = p.read_manifest("a")
+    scan = _partition_scan(stage(spark))
+    assert man["partitions"] == scan
+    assert man["rows"] == sum(scan.values())
+    assert man["schema"] == "struct<id:bigint>"
+    assert p.read_stage("a").columns == ["id"]
+
+
+def test_checkpoint_resumes_workdir_with_part_column(spark, tmp_path):
+    """A stage committed when the data carried a `_part` column (the
+    partition id, written beside the rows) resumes as skipped and reads
+    back without it; a recomputed downstream stage does not inherit it."""
+    import hashlib
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from lidartree_spark.plans.checkpoint import _fingerprint
+
+    def stage_a(s):
+        return s.range(0, 10, 1, 4)
+
+    def stage_b(s, a):
+        return a.where("id % 2 = 0")
+
+    stages = [Stage("a", stage_a), Stage("b", stage_b, inputs=["a"])]
+    wd = tmp_path / "old"
+    data = wd / "a" / "data"
+    stage_a(spark).withColumn("_part", F.spark_partition_id()) \
+        .write.parquet(str(data))
+    man = {"stage": "a", "fingerprint": _fingerprint(stages[0], {}),
+           "inputs": {}, "rows": 10,
+           "partitions": _partition_scan(stage_a(spark)),
+           "schema": "struct<id:bigint>", "bytes": 0, "wall_sec": 0.0,
+           "committed_at": "2026-10-17T00:00:00Z"}
+    man["manifest_hash"] = hashlib.sha256(
+        json.dumps(man, sort_keys=True).encode()).hexdigest()[:16]
+    with open(os.path.join(wd, "a", "MANIFEST.json"), "w") as f:
+        json.dump(man, f)
+
+    p = Pipeline(spark, str(wd))
+    assert p.run(stages) == {"a": "skipped", "b": "computed"}
+    a = p.read_output("a")
+    assert a.columns == ["id"]
+    assert sorted(r.id for r in a.collect()) == list(range(10))
+    assert p.read_stage("b").columns == ["id"]
+    assert p.read_manifest("b")["rows"] == 5
+
+
 def test_real_png_codec_roundtrip_and_filters():
     """Spec-compliant PNG: signature/CRC valid, lossless round trip on the
     1/256 grid with NaN sentinel, and decode of a crafted file using every
