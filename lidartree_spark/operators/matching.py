@@ -41,7 +41,7 @@ def whole_groups(batches: Iterator[pd.DataFrame], key: str
             continue
         keys = pdf[key].to_numpy()
         cut = len(keys) - int((keys == keys[-1]).sum())
-        carry = pdf.iloc[cut:].reset_index(drop=True)
+        carry = pdf.iloc[cut:]
         if cut:
             yield pdf.iloc[:cut], _starts(keys[:cut])
     if carry is not None:
