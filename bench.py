@@ -369,19 +369,11 @@ def detail_relpath(environ) -> str:
                         "queries_latest.json")
 
 
-def main() -> None:
-    import tempfile
-
-    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
-    results: dict[str, float] = {}
-
-    workdir = tempfile.mkdtemp(prefix="lidartree_bench_")
-    paths = setup_tiles(workdir, GRID)
+def run_tile_legs(paths: dict) -> tuple[float, dict]:
+    """The headline tile pipeline at local[CPUS], then the N vs 4N scaling
+    legs; returns (headline seconds, scaling record)."""
     dt = run_tile_pipeline(f"local[{CPUS}]", paths, GRID)
     n_tiles = GRID * GRID
-    results["tile_pipeline"] = round(dt, 3)
-    tiles_per_sec = round(n_tiles / dt, 2)
-
     scaling = {}
     if os.environ.get("SPARK_GRAFT_SCALING", "1") == "1":
         n_sc = SCALING_GRID * SCALING_GRID
@@ -444,6 +436,24 @@ def main() -> None:
             f"local{CPUS}_peak_sec": round(dt, 3),
             f"local{CPUS}_peak_tiles_per_sec": round(n_tiles / dt, 2),
         }
+    return dt, scaling
+
+
+def main() -> None:
+    import shutil
+    import tempfile
+
+    sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
+    results: dict[str, float] = {}
+
+    workdir = tempfile.mkdtemp(prefix="lidartree_bench_")
+    try:
+        dt, scaling = run_tile_legs(setup_tiles(workdir, GRID))
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+    n_tiles = GRID * GRID
+    results["tile_pipeline"] = round(dt, 3)
+    tiles_per_sec = round(n_tiles / dt, 2)
 
     # --- SQL operator suite at the bench SF
     from lidartree_spark.queries import oracle_sql_extended, queries

@@ -173,16 +173,3 @@ def prune_tiles_to_roi(tiles: DataFrame, roi_bbox: tuple) -> DataFrame:
     return tiles.where(
         (b["xmin"] < F.lit(xmax)) & (b["xmax"] > F.lit(xmin))
         & (b["ymin"] < F.lit(ymax)) & (b["ymax"] > F.lit(ymin)))
-
-
-def crop_to_core(trees: DataFrame, buffer_m: float) -> DataFrame:
-    """Buffered-tile dedup: keep detections whose apex falls inside the
-    owning tile's unbuffered core (crop-to-bbox rule,
-    tree_detection.R:160-165). Apex on the boundary belongs to the tile whose
-    half-open core [min, max) contains it — exactly once globally."""
-    b = tile_bbox(F.col("image_id"), F.lit(64), F.lit(64))
-    return trees.where(
-        (F.col("x") >= b["xmin"] + F.lit(buffer_m))
-        & (F.col("x") < b["xmax"] - F.lit(buffer_m))
-        & (F.col("y") >= b["ymin"] + F.lit(buffer_m))
-        & (F.col("y") < b["ymax"] - F.lit(buffer_m)))

@@ -10,8 +10,7 @@ most frequent adjacent symbol pair. The distributed shape:
   (per-partition dict partials, Arrow-batched) + one tiny groupBy whose
   top-1 row comes to the driver. The merge list itself is the only
   driver-side state (K rows), broadcast back into the next pass's
-  closure — the classic small-model/large-data loop, same pattern as
-  operators/similarity.train_centroids;
+  closure — the classic small-model/large-data loop;
 - segmentation is recomputed FROM the merge list each pass (stateless
   stages: no cached distributed state to invalidate, deterministic under
   retries; cost is O(K) re-merges per word per pass over vocab rows,

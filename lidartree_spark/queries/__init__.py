@@ -9,17 +9,17 @@ from the declaration:
   segmentation, matching, coreg, gaps) that are not ANSI-SQL-expressible;
   the driver records a rows-only check and tests/ validates them against
   the numpy oracle;
-- driver (`driver=True`): the 50 rows of `oracle_sql()`, the most the
-  driver's correctness harness records, so each one pins as much of §2 as
-  possible (section-tagged composites);
+- driver (`driver=True`): the rows of `oracle_sql()`, at most 50 (the
+  most the driver's correctness harness records), so each one pins as
+  much of §2 as possible (section-tagged composites);
 - extended (every other oracle): verified by the same comparison in
   tools/check_oracle.py and tests/test_extended_oracles.py, via
   `oracle_sql_extended()`.
 
 Conventions for byte-stable Spark<->DuckDB parity:
 - prefer integer-exact arithmetic (counts, integer-valued doubles like
-  l_quantity, quantized embeddings) so aggregation order cannot perturb
-  values;
+  l_quantity, log terms quantized to a 1e-4 grid) so aggregation order
+  cannot perturb values;
 - round genuinely-float outputs to 6 decimals ON BOTH SIDES with the same
   expression shape;
 - alias every computed column identically on both sides;
@@ -36,7 +36,7 @@ from types import MappingProxyType
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
+          "lineitem", "events", "documents")
 
 
 def load_views(spark: SparkSession, sf_dir: str) -> None:
@@ -95,7 +95,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """Driver-facing oracle set: the 50 `driver=True` entries."""
+    """Driver-facing oracle set: the `driver=True` entries (at most 50)."""
     return {name: q.duck for name, q in REGISTRY.items() if q.driver}
 
 

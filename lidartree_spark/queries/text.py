@@ -1,7 +1,6 @@
-"""Text and embedding gates over `documents` and `embeddings`: analysis,
-fingerprints, near-dup finders and clusters, statistical filters, BPE,
-the training-data pipeline, sampling, as-of join, rollups and ANN
-search."""
+"""Text gates over `documents`: analysis, fingerprints, near-dup finders
+and clusters, statistical filters, BPE, the training-data pipeline,
+sampling and rollups."""
 
 from __future__ import annotations
 
@@ -422,78 +421,6 @@ SELECT doc_id,
 FROM bits GROUP BY doc_id
 """
 
-# Embedding cosine top-k: integer-quantized (x10000) dot/norms so the
-# arithmetic is order-independent and engine-exact; division of identical
-# integers -> identical doubles. Brute-force baseline (LSH variant is
-# q_ann_lsh, rows-only).
-_TOPK_SPARK = """
-WITH q AS (
-  SELECT vec_id AS qid,
-         transform(embedding, x -> CAST(ROUND(x * 10000, 0) AS BIGINT)) AS qv
-  FROM embeddings WHERE vec_id < 8
-), base AS (
-  SELECT vec_id,
-         transform(embedding, x -> CAST(ROUND(x * 10000, 0) AS BIGINT)) AS bv
-  FROM embeddings
-), scored AS (
-  SELECT q.qid, base.vec_id,
-         aggregate(zip_with(q.qv, base.bv, (a, b) -> a * b), 0L,
-                   (acc, v) -> acc + v) AS dot,
-         aggregate(transform(q.qv, a -> a * a), 0L, (acc, v) -> acc + v) AS nq,
-         aggregate(transform(base.bv, b -> b * b), 0L, (acc, v) -> acc + v) AS nb
-  FROM q CROSS JOIN base
-  WHERE q.qid != base.vec_id
-), ranked AS (
-  SELECT qid, vec_id, dot, nq, nb,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY
-            CAST(dot AS DOUBLE) / SQRT(CAST(nq AS DOUBLE) * CAST(nb AS DOUBLE))
-            DESC, vec_id) AS rk
-  FROM ranked_src
-)
-SELECT qid, vec_id, rk,
-       ROUND(CAST(dot AS DOUBLE)
-             / SQRT(CAST(nq AS DOUBLE) * CAST(nb AS DOUBLE)), 6) AS cosine
-FROM ranked WHERE rk <= 5
-"""
-
-
-def _topk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_views(spark, sf_dir)
-    sql = _TOPK_SPARK.replace("ranked_src", "scored")
-    return spark.sql(sql)
-
-
-_TOPK_DUCK = """
-WITH q AS (
-  SELECT vec_id AS qid,
-         list_transform(embedding, x -> CAST(ROUND(x * 10000) AS BIGINT)) AS qv
-  FROM embeddings WHERE vec_id < 8
-), base AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(ROUND(x * 10000) AS BIGINT)) AS bv
-  FROM embeddings
-), scored AS (
-  SELECT q.qid, base.vec_id,
-         list_sum(list_transform(range(1, len(q.qv) + 1),
-                  i -> q.qv[i] * base.bv[i])) AS dot,
-         list_sum(list_transform(q.qv, a -> a * a)) AS nq,
-         list_sum(list_transform(base.bv, b -> b * b)) AS nb
-  FROM q CROSS JOIN base
-  WHERE q.qid != base.vec_id
-), ranked AS (
-  SELECT qid, vec_id, dot, nq, nb,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY
-            CAST(dot AS DOUBLE) / SQRT(CAST(nq AS DOUBLE) * CAST(nb AS DOUBLE))
-            DESC, vec_id) AS rk
-  FROM scored
-)
-SELECT qid, vec_id, rk,
-       ROUND(CAST(dot AS DOUBLE)
-             / SQRT(CAST(nq AS DOUBLE) * CAST(nb AS DOUBLE)), 6) AS cosine
-FROM ranked WHERE rk <= 5
-"""
-
-
 # SimHash near-dup pairing: Hamming-band LSH over the 32-bit simhash —
 # candidates come from an equi-join on (band, byte value), then the exact
 # bit_count(xor) filter runs only on candidates. Pigeonhole over 4 bands
@@ -529,129 +456,6 @@ _SIMHASH_ND_DUCK = _simhash_neardup(
     "%%SIMHASH%%", "bit_count(CAST(xor(ha, hb) AS BIGINT))", "duck")
 
 
-# Embedding-cosine near-dup: corpus = originals UNION mildly perturbed
-# copies (v'[i] = v[i] + v[(i mod 64) + 1] div 10 over the QUANTIZED
-# integers — quantize-then-perturb keeps everything integer-exact; a
-# pre-quantization float mix hits ROUND half-boundaries because the source
-# embeddings live on a 1e-4 grid and the engines' ROUND differs there);
-# report pairs with exact cosine >= 0.95 — planted pairs score ~0.995,
-# random pairs cosine ~0 on this corpus.
-#
-# SCALE PATH (not a cartesian): candidates come from sign-random-projection
-# LSH — 64 SRP bits per vector against DETERMINISTIC integer hyperplanes
-# (an LCG over the plane x dim index, identical in both engines, all
-# arithmetic in exact int64), banded 8 bands x 8 bits; candidate pairs are
-# an equi-join on (band, band_value); the exact integer cosine reranks
-# candidates only. One shuffle on the band key instead of O(n^2). A pair
-# at cosine 0.995 flips each SRP bit w.p. acos(.995)/pi ~ 0.032, so the
-# probability of missing all 8 bands is ~(1-(1-.032)^8)^8 ~ 7e-6; random
-# pairs (cosine ~ 0) match a band w.p. ~0.5^8. Both engines run the SAME
-# banding so the DuckDB oracle pins the full pipeline; the parity of this
-# LSH+rerank result with the old brute-force gate on this corpus is
-# asserted in tests (test_queries_gate.py).
-_NEARDUP_PLANES = (
-    "(CAST(1103515245 AS BIGINT) * (p * 64 + {j} + 7) + 12345) "
-    "% 2147483648 - 1073741824")
-
-
-def _neardup_sql(dialect: str) -> str:
-    """Shared SRP-LSH + rerank skeleton; dialect in {'spark', 'duck'}."""
-    if dialect == "spark":
-        quant = """
-WITH orig AS (
-  SELECT vec_id AS id,
-         transform(sequence(1, 64),
-                   i -> CAST(ROUND(element_at(embedding, i) * 10000, 0)
-                             AS BIGINT)) AS v
-  FROM embeddings WHERE vec_id < 300
-), pert AS (
-  SELECT id + 100000 AS id,
-         transform(sequence(1, 64),
-                   i -> element_at(v, i)
-                        + CAST(FLOOR(CAST(element_at(v, i % 64 + 1) AS DOUBLE)
-                                     / 10.0) AS BIGINT)) AS v
-  FROM orig
-), corpus AS (
-  SELECT * FROM orig UNION ALL SELECT * FROM pert
-)"""
-        w = _NEARDUP_PLANES.format(j="i")
-        bits_body = f"""
-  SELECT id, p,
-         CASE WHEN aggregate(
-                zip_with(v,
-                         transform(sequence(0, 63), i -> {w}),
-                         (x, w) -> x * w),
-                0L, (acc, t) -> acc + t) > 0
-              THEN 1 ELSE 0 END AS bit
-  FROM corpus LATERAL VIEW explode(sequence(0, 63)) pt AS p"""
-        rerank = """
-  SELECT cd.doc_a, cd.doc_b,
-         aggregate(zip_with(x.v, y.v, (a, b) -> a * b), 0L,
-                   (acc, t) -> acc + t) AS dot,
-         aggregate(transform(x.v, a -> a * a), 0L, (acc, t) -> acc + t) AS na,
-         aggregate(transform(y.v, a -> a * a), 0L, (acc, t) -> acc + t) AS nb
-  FROM cand cd
-  JOIN corpus x ON x.id = cd.doc_a
-  JOIN corpus y ON y.id = cd.doc_b"""
-    else:
-        quant = """
-WITH orig AS (
-  SELECT vec_id AS id,
-         list_transform(range(1, 65),
-                        i -> CAST(ROUND(embedding[i] * 10000) AS BIGINT)) AS v
-  FROM embeddings WHERE vec_id < 300
-), pert AS (
-  SELECT id + 100000 AS id,
-         list_transform(range(1, 65),
-                        i -> v[i]
-                             + CAST(FLOOR(CAST(v[i % 64 + 1] AS DOUBLE)
-                                          / 10.0) AS BIGINT)) AS v
-  FROM orig
-), corpus AS (
-  SELECT * FROM orig UNION ALL SELECT * FROM pert
-)"""
-        w = _NEARDUP_PLANES.format(j="(i - 1)")
-        bits_body = f"""
-  SELECT id, p,
-         CASE WHEN list_sum(
-                list_transform(range(1, 65),
-                               i -> v[i] * ({w}))) > 0
-              THEN 1 ELSE 0 END AS bit
-  FROM corpus, range(0, 64) pt(p)"""
-        rerank = """
-  SELECT cd.doc_a, cd.doc_b,
-         list_sum(list_transform(range(1, 65), i -> x.v[i] * y.v[i])) AS dot,
-         list_sum(list_transform(x.v, a -> a * a)) AS na,
-         list_sum(list_transform(y.v, a -> a * a)) AS nb
-  FROM cand cd
-  JOIN corpus x ON x.id = cd.doc_a
-  JOIN corpus y ON y.id = cd.doc_b"""
-    return f"""{quant}, bits AS ({bits_body}
-), bands AS (
-  SELECT id, CAST(FLOOR(p / 8.0) AS INT) AS b,
-         SUM(CASE WHEN bit = 1 THEN CAST(POW(2, p % 8) AS BIGINT)
-                  ELSE 0 END) AS band_val
-  FROM bits GROUP BY id, CAST(FLOOR(p / 8.0) AS INT)
-), cand AS (
-  SELECT a.id AS doc_a, c.id AS doc_b
-  FROM bands a JOIN bands c ON a.b = c.b AND a.band_val = c.band_val
-  WHERE a.id < c.id
-  GROUP BY a.id, c.id
-), scored AS ({rerank}
-)
-SELECT doc_a, doc_b,
-       ROUND(CAST(dot AS DOUBLE)
-             / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 6) AS cosine
-FROM scored
-WHERE CAST(dot AS DOUBLE)
-      / SQRT(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) >= 0.95
-"""
-
-
-_NEARDUP_SPARK = _neardup_sql("spark")
-_NEARDUP_DUCK = _neardup_sql("duck")
-
-
 # Deterministic proportional stratified sampling — the training-data
 # pipeline's "sample X% per (lang, source) stratum, reproducibly"
 # primitive. Hash-ordered ROW_NUMBER per stratum makes the sample a pure
@@ -672,180 +476,6 @@ SELECT lang, source, CAST(doc_id AS BIGINT) AS doc_id,
        CAST(rk AS BIGINT) AS rk, CAST(stratum_n AS BIGINT) AS stratum_n
 FROM ranked
 WHERE rk <= CEIL(0.2 * stratum_n)
-"""
-
-
-def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Similarity search driver gate: the REAL lsh_topk operator
-    (mapInPandas SRP bucketize -> one (table, bucket) equi-join -> exact
-    rerank -> window top-k) AND the exact brute-force baseline, side by
-    side as method='lsh' / method='exact' rows — the gate IS the recall
-    evidence. Exactly re-derivable because (a) vectors are quantized to
-    int64 (integer sums are exact in f64 in any order), (b) hyperplanes
-    are the deterministic integer LCG that the DuckDB oracle rebuilds in
-    SQL (srp_planes_int == the _ANN_LSH_DUCK bits CTE), and (c) cosine is
-    composed as dot/(sqrt(na)*sqrt(nb)) in BOTH engines (same IEEE ops ->
-    identical doubles)."""
-    from lidartree_spark.operators.similarity import (
-        brute_force_topk,
-        lsh_topk,
-        srp_planes_int,
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").selectExpr(
-        "vec_id",
-        "transform(embedding, x -> CAST(ROUND(x * 10000, 0) AS BIGINT))"
-        " AS embedding")
-    q = emb.where("vec_id < 8")
-    planes = srp_planes_int(n_tables=8, n_bits=8, dim=64)
-    lsh = lsh_topk(emb, q, k=5, n_tables=8, n_bits=8, planes=planes) \
-        .select(F.lit("lsh").alias("method"), "qid", "vec_id",
-                F.col("rk").cast("long").alias("rk"),
-                F.round("cosine", 6).alias("cosine"))
-    exact = brute_force_topk(emb, q, k=5) \
-        .select(F.lit("exact").alias("method"), "qid", "vec_id",
-                F.col("rk").cast("long").alias("rk"),
-                F.round("cosine", 6).alias("cosine"))
-    return exact.unionByName(lsh)
-
-
-_ANN_LSH_DUCK = """
-WITH corpus AS (
-  SELECT vec_id AS id,
-         list_transform(range(1, 65),
-                        i -> CAST(ROUND(embedding[i] * 10000) AS BIGINT)) AS v
-  FROM embeddings
-), q AS (
-  SELECT * FROM corpus WHERE id < 8
-), scored_exact AS (
-  SELECT q.id AS qid, c.id AS vec_id,
-         CAST(list_sum(list_transform(range(1, 65),
-                                      i -> q.v[i] * c.v[i])) AS DOUBLE)
-         / (SQRT(CAST(list_sum(list_transform(q.v, a -> a * a)) AS DOUBLE))
-            * SQRT(CAST(list_sum(list_transform(c.v, a -> a * a)) AS DOUBLE)))
-           AS cosine
-  FROM q JOIN corpus c ON c.id != q.id
-), exact_rk AS (
-  SELECT 'exact' AS method, qid, vec_id,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY cosine DESC, vec_id) AS rk,
-         cosine
-  FROM scored_exact
-), bits AS (
-  SELECT id, p,
-         CASE WHEN list_sum(list_transform(range(1, 65),
-                i -> v[i] * ((1103515245 * (p * 64 + (i - 1) + 7) + 12345)
-                             % 2147483648 - 1073741824))) > 0
-              THEN 1 ELSE 0 END AS bit
-  FROM corpus, range(0, 64) pt(p)
-), bands AS (
-  SELECT id, CAST(FLOOR(p / 8.0) AS INT) AS b,
-         SUM(CASE WHEN bit = 1 THEN CAST(POW(2, p % 8) AS BIGINT)
-                  ELSE 0 END) AS band_val
-  FROM bits GROUP BY id, CAST(FLOOR(p / 8.0) AS INT)
-), cand AS (
-  SELECT qb.id AS qid, cb.id AS vec_id
-  FROM bands qb JOIN bands cb
-    ON cb.b = qb.b AND cb.band_val = qb.band_val
-  WHERE qb.id < 8 AND cb.id != qb.id
-  GROUP BY qb.id, cb.id
-), scored_lsh AS (
-  SELECT cd.qid, cd.vec_id,
-         CAST(list_sum(list_transform(range(1, 65),
-                                      i -> x.v[i] * y.v[i])) AS DOUBLE)
-         / (SQRT(CAST(list_sum(list_transform(x.v, a -> a * a)) AS DOUBLE))
-            * SQRT(CAST(list_sum(list_transform(y.v, a -> a * a)) AS DOUBLE)))
-           AS cosine
-  FROM cand cd
-  JOIN corpus x ON x.id = cd.qid
-  JOIN corpus y ON y.id = cd.vec_id
-), lsh_rk AS (
-  SELECT 'lsh' AS method, qid, vec_id,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY cosine DESC, vec_id) AS rk,
-         cosine
-  FROM scored_lsh
-)
-SELECT method, qid, vec_id, CAST(rk AS BIGINT) AS rk,
-       ROUND(cosine, 6) AS cosine
-FROM (SELECT * FROM exact_rk UNION ALL SELECT * FROM lsh_rk) u
-WHERE rk <= 5
-"""
-
-
-def _ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF driver gate: the REAL ivf_topk operator (vectorized cell
-    assignment, nprobe cell pruning, broadcast candidate join, exact
-    rerank, window top-k) with a FIXED deterministic codebook — the
-    operator's own md5-ordered init (train_centroids, iters=0) — so DuckDB
-    re-derives codebook selection, nearest-cell assignment (all-integer
-    d2, ties to the lowest cell id), the nprobe probe set, and the rerank.
-    Lloyd training itself is pinned separately by pytest (full-probe ==
-    brute force + recall floor, tests/test_similarity_multimodal_
-    checkpoint.py); this gate pins the search path the 100 TB plan relies
-    on."""
-    from lidartree_spark.operators.similarity import (
-        ivf_topk,
-        train_centroids,
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").selectExpr(
-        "vec_id",
-        "transform(embedding, x -> CAST(ROUND(x * 10000, 0) AS BIGINT))"
-        " AS embedding")
-    cen = train_centroids(emb, n_centroids=16, iters=0, seed=131)
-    out = ivf_topk(emb, emb.where("vec_id < 8"), k=5, nprobe=4,
-                   centroids=cen)
-    return out.select("qid", "vec_id", F.col("rk").cast("long").alias("rk"),
-                      F.round("cosine", 6).alias("cosine"))
-
-
-_ANN_IVF_DUCK = """
-WITH corpus AS (
-  SELECT vec_id AS id,
-         list_transform(range(1, 65),
-                        i -> CAST(ROUND(embedding[i] * 10000) AS BIGINT)) AS v
-  FROM embeddings
-), cen AS (
-  SELECT v AS cv, cid FROM (
-    SELECT v, ROW_NUMBER() OVER (
-             ORDER BY md5('131|' || CAST(id AS VARCHAR))) - 1 AS cid
-    FROM corpus) t
-  WHERE cid < 16
-), d2 AS (
-  SELECT c.id, n.cid,
-         list_sum(list_transform(range(1, 65),
-                  i -> (c.v[i] - n.cv[i]) * (c.v[i] - n.cv[i]))) AS d2
-  FROM corpus c, cen n
-), ranked AS (
-  SELECT id, cid,
-         ROW_NUMBER() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-  FROM d2
-), base_cells AS (
-  SELECT id AS vec_id, cid FROM ranked WHERE rn = 1
-), query_cells AS (
-  SELECT id AS qid, cid FROM ranked WHERE rn <= 4 AND id < 8
-), cand AS (
-  SELECT q.qid, b.vec_id
-  FROM query_cells q JOIN base_cells b ON b.cid = q.cid
-  WHERE b.vec_id != q.qid
-  GROUP BY q.qid, b.vec_id
-), scored AS (
-  SELECT cd.qid, cd.vec_id,
-         CAST(list_sum(list_transform(range(1, 65),
-                                      i -> x.v[i] * y.v[i])) AS DOUBLE)
-         / (SQRT(CAST(list_sum(list_transform(x.v, a -> a * a)) AS DOUBLE))
-            * SQRT(CAST(list_sum(list_transform(y.v, a -> a * a)) AS DOUBLE)))
-           AS cosine
-  FROM cand cd
-  JOIN corpus x ON x.id = cd.qid
-  JOIN corpus y ON y.id = cd.vec_id
-)
-SELECT qid, vec_id, CAST(rk AS BIGINT) AS rk, ROUND(cosine, 6) AS cosine
-FROM (
-  SELECT qid, vec_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY cosine DESC, vec_id) AS rk
-  FROM scored) t
-WHERE rk <= 5
 """
 
 
@@ -1087,152 +717,6 @@ SELECT * FROM (VALUES
 """
 
 
-# --- IVF-PQ ANN gate ---------------------------------------------------------
-# The FAISS-style third ANN path beside ann_lsh/ann_ivf: coarse cells
-# prune the corpus, then ADC scores m-byte PQ codes without touching the
-# full vectors. Both codebooks are the operators' own deterministic
-# md5-ordered inits (iters=0) over integer-quantized vectors, so DuckDB
-# re-derives coarse assignment, every per-(vector, subspace, codeword)
-# distance (the same table serves as PQ code argmin AND query LUT), the
-# ADC sums, and the top-5 — all integer-exact.
-
-def _ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL pq_topk operator (operators/similarity): coarse-cell
-    equi-join pruning (nprobe=4 of 16 cells) + JVM-side ADC aggregate
-    over array<int> codes + window top-k. Lloyd training and the refine
-    stage are pinned by pytest (tests/test_pq.py); this gate pins the
-    search path."""
-    from lidartree_spark.operators.similarity import (
-        pq_topk,
-        train_centroids,
-        train_pq_codebook,
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").selectExpr(
-        "vec_id",
-        "transform(embedding, x -> CAST(ROUND(x * 10000, 0) AS BIGINT))"
-        " AS embedding")
-    book = train_pq_codebook(emb, m=4, ksub=8, iters=0, seed=151)
-    cen = train_centroids(emb, n_centroids=16, iters=0, seed=131)
-    out = pq_topk(emb, emb.where("vec_id < 8"), k=5, codebook=book,
-                  coarse_centroids=cen, nprobe=4)
-    return out.select("qid", "vec_id",
-                      F.col("rk").cast("long").alias("rk"),
-                      F.round("adc", 6).alias("adc"))
-
-
-_ANN_PQ_DUCK = """
-WITH corpus AS (
-  SELECT vec_id AS id,
-         list_transform(range(1, 65),
-                        i -> CAST(ROUND(embedding[i] * 10000) AS BIGINT)) AS v
-  FROM embeddings
-), cen AS (
-  SELECT v AS cv, cid FROM (
-    SELECT v, ROW_NUMBER() OVER (
-             ORDER BY md5('131|' || CAST(id AS VARCHAR))) - 1 AS cid
-    FROM corpus) t
-  WHERE cid < 16
-), pqc AS (
-  SELECT v AS pv, j FROM (
-    SELECT v, ROW_NUMBER() OVER (
-             ORDER BY md5('151|' || CAST(id AS VARCHAR))) - 1 AS j
-    FROM corpus) t
-  WHERE j < 8
-), cd2 AS (
-  SELECT c.id, n.cid,
-         list_sum(list_transform(range(1, 65),
-                  i -> (c.v[i] - n.cv[i]) * (c.v[i] - n.cv[i]))) AS d2
-  FROM corpus c, cen n
-), cranked AS (
-  SELECT id, cid,
-         ROW_NUMBER() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-  FROM cd2
-), base_cells AS (
-  SELECT id AS vec_id, cid FROM cranked WHERE rn = 1
-), query_cells AS (
-  SELECT id AS qid, cid FROM cranked WHERE rn <= 4 AND id < 8
-), subd2 AS (
-  -- per-(vector, subspace, codeword) squared distance: the argmin over j
-  -- gives the PQ code; the SAME rows for id < 8 are the query ADC LUTs
-  SELECT c.id, s, p.j,
-         list_sum(list_transform(range(1, 17),
-                  i -> (c.v[s * 16 + i] - p.pv[s * 16 + i])
-                     * (c.v[s * 16 + i] - p.pv[s * 16 + i]))) AS d2
-  FROM corpus c, range(0, 4) ss(s), pqc p
-), codes AS (
-  SELECT id, s, j AS code FROM (
-    SELECT id, s, j,
-           ROW_NUMBER() OVER (PARTITION BY id, s ORDER BY d2, j) AS rn
-    FROM subd2) t
-  WHERE rn = 1
-), cand AS (
-  SELECT q.qid, b.vec_id
-  FROM query_cells q JOIN base_cells b ON b.cid = q.cid
-  WHERE b.vec_id != q.qid
-  GROUP BY q.qid, b.vec_id
-), adc AS (
-  SELECT cd.qid, cd.vec_id, SUM(l.d2) AS adc
-  FROM cand cd
-  JOIN codes k2 ON k2.id = cd.vec_id
-  JOIN subd2 l ON l.id = cd.qid AND l.s = k2.s AND l.j = k2.code
-  GROUP BY cd.qid, cd.vec_id
-)
-SELECT qid, vec_id, CAST(rk AS BIGINT) AS rk,
-       ROUND(CAST(adc AS DOUBLE), 6) AS adc
-FROM (SELECT qid, vec_id, adc,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY adc, vec_id) AS rk
-      FROM adc) t
-WHERE rk <= 5
-"""
-
-
-# --- merge as-of join --------------------------------------------------------
-# The classic temporal operator Spark lacks: for each click, the latest
-# prior view by the same user. operators/temporal.asof_join re-expresses
-# it as union-tag + ONE keyed shuffle + a running last(ignorenulls)
-# window over a struct-packed right row — no per-key range explosion, no
-# nested loop, AQE skew-split applies. The DuckDB oracle uses the engine's
-# NATIVE `ASOF LEFT JOIN` — a structurally independent implementation, so
-# the gate pins the merge semantics (<= tie rule, left-join NULLs, exact
-# microsecond gaps), not a shared formula.
-
-def _asof_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lidartree_spark.operators.temporal import asof_join
-
-    load_views(spark, sf_dir)
-    ev = spark.table("events")
-    left = ev.where("event_type = 'click'").select("event_id", "user_id",
-                                                   "ts")
-    right = ev.where("event_type = 'view'").selectExpr(
-        "event_id AS view_id", "user_id", "ts AS view_ts")
-    j = asof_join(left, right, "user_id", "ts", "view_ts", "view_id")
-    return j.selectExpr(
-        "event_id", "CAST(user_id AS BIGINT) AS user_id", "view_id",
-        # parquet ts is TIMESTAMP_NTZ; the session TZ is pinned UTC, so the
-        # cast reads the same microseconds DuckDB's epoch_us sees
-        "unix_micros(CAST(ts AS TIMESTAMP))"
-        " - unix_micros(CAST(view_ts AS TIMESTAMP)) AS gap_us")
-
-
-_ASOF_DUCK = """
-WITH l AS (
-  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-r AS (
-  -- dedupe to the greatest event_id per (user, ts): DuckDB's native ASOF
-  -- picks an ARBITRARY row at timestamp ties, while asof_join's
-  -- documented tie rule is greatest right_id — pre-aggregating makes the
-  -- oracle deterministic under any future corpus (today no sf corpus has
-  -- duplicate (user, ts) pairs, but the gate must not rely on that)
-  SELECT MAX(event_id) AS view_id, user_id AS r_user, ts AS view_ts
-  FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-SELECT l.event_id, CAST(l.user_id AS BIGINT) AS user_id,
-       r.view_id,
-       epoch_us(l.ts) - epoch_us(r.view_ts) AS gap_us
-FROM l ASOF LEFT JOIN r ON l.user_id = r.r_user AND l.ts >= r.view_ts
-"""
-
-
 # --- multi-level rollup aggregation ------------------------------------------
 # OLAP cube semantics over the corpus dimensions: one ROLLUP pass emits
 # (lang, source), (lang), and grand-total rows with GROUPING markers —
@@ -1432,24 +916,6 @@ SELECT 'tfidf', CAST(doc_id AS BIGINT), rk, score, CAST(tf AS DOUBLE), w
 FROM tfk"""
 
 
-def _ann_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged ANN driver gate: the SRP-LSH gate (which already carries
-    its exact brute-force baseline as method='exact' rows) plus the IVF
-    search path as method='ivf' rows — three ANN strategies, one
-    section-tagged driver row. The constituents are extended gates."""
-    lsh = _ann_lsh(spark, sf_dir)
-    ivf = _ann_ivf(spark, sf_dir).select(
-        F.lit("ivf").alias("method"), "qid", "vec_id", "rk", "cosine")
-    return lsh.unionByName(ivf)
-
-
-_ANN_DUAL_DUCK = f"""
-SELECT method, qid, vec_id, rk, cosine FROM ({_ANN_LSH_DUCK})
-UNION ALL
-SELECT 'ivf' AS method, qid, vec_id, rk, cosine FROM ({_ANN_IVF_DUCK})
-"""
-
-
 QUERIES = [
     Query("exact_dedup", _EXACT_DEDUP, _EXACT_DEDUP),
     Query("text_quality", _TEXT_QUALITY, _TEXT_QUALITY),
@@ -1467,22 +933,16 @@ QUERIES = [
           _jaccard_sql(_SHINGLES_DUCK)),
     Query("text_neardup", _text_neardup, _text_neardup_duck(), driver=True),
     Query("simhash", _SIMHASH_SPARK, _SIMHASH_DUCK),
-    Query("embedding_topk", _topk_spark, _TOPK_DUCK),
     Query("simhash_neardup",
           _SIMHASH_ND_SPARK.replace("%%SIMHASH%%", _SIMHASH_SPARK),
           _SIMHASH_ND_DUCK.replace("%%SIMHASH%%", _SIMHASH_DUCK),
           driver=True),
-    Query("embedding_neardup", _NEARDUP_SPARK, _NEARDUP_DUCK, driver=True),
     Query("stratified_sample", _STRATIFIED_SAMPLE, _STRATIFIED_SAMPLE),
-    Query("ann_lsh", _ann_lsh, _ANN_LSH_DUCK),
-    Query("ann_ivf", _ann_ivf, _ANN_IVF_DUCK),
     Query("dedup_clusters", _dedup_clusters,
           _dedup_clusters_duck(), driver=True),
     Query("training_data_pipeline", _training_pipeline,
           _TD_PIPELINE_DUCK, driver=True),
     Query("bpe_train", _bpe_train, _BPE_TRAIN_DUCK, driver=True),
-    Query("ann_pq", _ann_pq, _ANN_PQ_DUCK),
-    Query("asof_join", _asof_gate, _ASOF_DUCK),
     Query("rollup_counts", _ROLLUP_COUNTS, _ROLLUP_COUNTS),
     Query("stat_filters", _stat_filters_sql("spark"),
           _stat_filters_sql("duck"), driver=True),
@@ -1492,5 +952,4 @@ QUERIES = [
           _stat_filters_sql("duck", "dsir")),
     Query("tfidf_keywords", _stat_filters_sql("spark", "tfidf"),
           _stat_filters_sql("duck", "tfidf")),
-    Query("ann_dual", _ann_dual, _ANN_DUAL_DUCK, driver=True),
 ]

@@ -1,8 +1,8 @@
 """The extended oracle set — gates OUTSIDE the driver's 50-row correctness
 budget — verified in pytest with the driver's exact comparison (rows +
 schema + order-insensitive values), via the same code path
-tools/check_oracle.py runs. The in-budget 50 are the driver's job; these
-are ours."""
+tools/check_oracle.py runs. The in-budget driver rows are the driver's
+job; these are ours."""
 
 import pytest
 

@@ -1,4 +1,4 @@
-"""ANN similarity, multimodal plumbing, checkpoint-resume tests."""
+"""Multimodal plumbing and checkpoint-resume tests."""
 
 from types import SimpleNamespace
 
@@ -12,119 +12,7 @@ from lidartree_spark.operators.multimodal import (
     resize_bilinear,
     synthetic_media,
 )
-from lidartree_spark.operators.similarity import (
-    brute_force_topk,
-    ivf_topk,
-    lsh_topk,
-    train_centroids,
-)
 from lidartree_spark.plans.checkpoint import Pipeline, Stage
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet")
-
-
-def test_brute_force_topk_matches_numpy(spark, emb):
-    q = emb.where("vec_id < 3")
-    got = brute_force_topk(emb, q, k=3).collect()
-    pdf = emb.toPandas()
-    vecs = np.stack(pdf.embedding.to_numpy()).astype(np.float64)
-    ids = pdf.vec_id.to_numpy()
-    norm = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-    sims = norm @ norm.T
-    for qid in range(3):
-        qi = int(np.nonzero(ids == qid)[0][0])
-        order = sorted(((-sims[qi, j], int(ids[j])) for j in range(len(ids))
-                        if ids[j] != qid))
-        exp = [v for _, v in order[:3]]
-        g = sorted((r for r in got if r.qid == qid), key=lambda r: r.rk)
-        assert [r.vec_id for r in g] == exp
-
-
-def test_lsh_topk_recall(spark, emb):
-    q = emb.where("vec_id < 10")
-    exact = brute_force_topk(emb, q, k=5).collect()
-    approx = lsh_topk(emb, q, k=5, n_tables=32, n_bits=6).collect()
-    exact_sets = {}
-    for r in exact:
-        exact_sets.setdefault(r.qid, set()).add(r.vec_id)
-    approx_sets = {}
-    for r in approx:
-        approx_sets.setdefault(r.qid, set()).add(r.vec_id)
-    hits = sum(len(exact_sets[q_] & approx_sets.get(q_, set()))
-               for q_ in exact_sets)
-    recall = hits / sum(len(s) for s in exact_sets.values())
-    assert recall >= 0.5, f"LSH recall too low: {recall}"
-    # approx ranks must be a superset-ranked consistently: every reported
-    # cosine matches the exact one for the same pair
-    exact_by_pair = {(r.qid, r.vec_id): r.cosine for r in exact}
-    for r in approx:
-        if (r.qid, r.vec_id) in exact_by_pair:
-            assert r.cosine == pytest.approx(exact_by_pair[(r.qid, r.vec_id)])
-
-
-def test_ivf_topk_full_probe_is_exact(spark, emb):
-    """nprobe == n_centroids scans every cell -> must equal brute force
-    (pins the whole IVF plumbing: codebook, assignment, rerank)."""
-    q = emb.where("vec_id < 10")
-    exact = {(r.qid, r.rk): r.vec_id
-             for r in brute_force_topk(emb, q, k=5).collect()}
-    full = {(r.qid, r.rk): r.vec_id
-            for r in ivf_topk(emb, q, k=5, n_centroids=8, nprobe=8,
-                              iters=1).collect()}
-    assert full == exact
-
-
-def test_ivf_topk_recall_and_scores(spark, emb):
-    q = emb.where("vec_id < 10")
-    exact = brute_force_topk(emb, q, k=5).collect()
-    approx = ivf_topk(emb, q, k=5, n_centroids=8, nprobe=4, iters=2).collect()
-    exact_sets, approx_sets = {}, {}
-    for r in exact:
-        exact_sets.setdefault(r.qid, set()).add(r.vec_id)
-    for r in approx:
-        approx_sets.setdefault(r.qid, set()).add(r.vec_id)
-    hits = sum(len(exact_sets[q_] & approx_sets.get(q_, set()))
-               for q_ in exact_sets)
-    recall = hits / sum(len(s) for s in exact_sets.values())
-    assert recall >= 0.4, f"IVF recall too low: {recall}"
-    exact_by_pair = {(r.qid, r.vec_id): r.cosine for r in exact}
-    for r in approx:
-        if (r.qid, r.vec_id) in exact_by_pair:
-            assert r.cosine == pytest.approx(exact_by_pair[(r.qid, r.vec_id)])
-
-
-def test_train_centroids_deterministic(spark, emb):
-    c1 = train_centroids(emb, n_centroids=8, iters=2)
-    c2 = train_centroids(emb, n_centroids=8, iters=2)
-    assert np.allclose(c1, c2)
-    assert c1.shape == (8, 64)
-
-
-def test_ivf_sampled_codebook_recall(spark, emb):
-    """Codebook trained on a deterministic hash-sample of the corpus (the
-    scale path for Lloyd passes): still deterministic, recall unchanged in
-    practice on this corpus."""
-    cs1 = train_centroids(emb, n_centroids=8, iters=2, sample_fraction=0.5)
-    cs2 = train_centroids(emb, n_centroids=8, iters=2, sample_fraction=0.5)
-    assert np.allclose(cs1, cs2)
-    q = emb.where("vec_id < 10")
-    exact = brute_force_topk(emb, q, k=5).collect()
-    approx = ivf_topk(emb, q, k=5, n_centroids=8, nprobe=4, iters=2,
-                      sample_fraction=0.5).collect()
-    exact_sets, approx_sets = {}, {}
-    for r in exact:
-        exact_sets.setdefault(r.qid, set()).add(r.vec_id)
-    for r in approx:
-        approx_sets.setdefault(r.qid, set()).add(r.vec_id)
-    hits = sum(len(exact_sets[q_] & approx_sets.get(q_, set()))
-               for q_ in exact_sets)
-    recall = hits / sum(len(s) for s in exact_sets.values())
-    assert recall >= 0.4, f"sampled-codebook IVF recall too low: {recall}"
 
 
 def test_resize_bilinear_identity_and_downscale():

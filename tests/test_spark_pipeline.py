@@ -11,7 +11,6 @@ from lidartree_spark.kernels.matching import tree_matching
 from lidartree_spark.kernels.segmentation import tree_segmentation
 from lidartree_spark.operators.detection import (
     DEFAULT_PARAMS,
-    crop_to_core,
     detect_trees,
     prune_tiles_to_roi,
     segment_layers,
@@ -142,11 +141,6 @@ def test_prune_and_core_crop(spark):
     pruned = prune_tiles_to_roi(tiles, (1.0, 1.0, 20.0, 20.0))
     ids = [r.image_id for r in pruned.select("image_id").collect()]
     assert ids == ["t0000_0000"]
-    det = detect_trees(pruned)
-    core = crop_to_core(det, buffer_m=8.0)
-    for r in core.collect():
-        assert 8.0 <= r.x < 24.0 and 8.0 <= r.y < 24.0
-    assert core.count() <= det.count()
 
 
 def test_detect_and_match_equals_shuffle_path(spark):

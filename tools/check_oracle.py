@@ -5,6 +5,7 @@ column names, and order-insensitive values. Checks the EXTENDED oracle set
 input file (`Query.needs`) is absent is skipped, not failed.
 
 Usage: python tools/check_oracle.py [sf_dir] [name ...]
+A name that is not in the registry exits 2 before Spark starts.
 """
 
 from __future__ import annotations
@@ -77,6 +78,11 @@ def main():
     only = set(sys.argv[2:])
 
     from lidartree_spark.queries import REGISTRY
+    unknown = sorted(only - set(REGISTRY))
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+
     from lidartree_spark.session import get_spark
 
     spark = get_spark("oracle-check", master="local[8]")
