@@ -136,6 +136,8 @@ def test_detection_counts_and_regression(spark):
 
 
 def test_prune_and_core_crop(spark):
+    """ROI pruning; the in-UDF crop-to-core is checked by
+    test_halo_dedup_exactly_once and test_halo_detection_equals_mosaic."""
     tiles = synthetic_tiles(spark, GRID, GRID)
     # tile (0,0) covers x,y in [0,32); ROI hits only that tile
     pruned = prune_tiles_to_roi(tiles, (1.0, 1.0, 20.0, 20.0))
