@@ -18,8 +18,7 @@ from the declaration:
 
 Conventions for byte-stable Spark<->DuckDB parity:
 - prefer integer-exact arithmetic (counts, integer-valued doubles like
-  l_quantity, log terms quantized to a 1e-4 grid) so aggregation order
-  cannot perturb values;
+  l_quantity) so aggregation order cannot perturb values;
 - round genuinely-float outputs to 6 decimals ON BOTH SIDES with the same
   expression shape;
 - alias every computed column identically on both sides;
@@ -72,7 +71,6 @@ from lidartree_spark.queries import (  # noqa: E402
     images,
     interchange,
     raster,
-    streaming,
     text,
 )
 
@@ -87,7 +85,7 @@ def _by_name(qs: list[Query]) -> dict[str, Query]:
 
 REGISTRY = MappingProxyType(_by_name(
     forestry.QUERIES + raster.QUERIES + interchange.QUERIES
-    + images.QUERIES + text.QUERIES + streaming.QUERIES))
+    + images.QUERIES + text.QUERIES))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,6 +1,6 @@
-"""Text gates over `documents`: analysis, fingerprints, near-dup finders
-and clusters, statistical filters, BPE, the training-data pipeline,
-sampling and rollups."""
+"""Text gates over `documents`: per-doc quality, language and analysis
+scans, fingerprints, near-dup finders and clusters, and the training-data
+pipeline."""
 
 from __future__ import annotations
 
@@ -35,38 +35,6 @@ SELECT doc_id,
        ROUND(CAST(LENGTH(REPLACE(text, ' ', '')) AS DOUBLE)
              / (LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1), 6)
            AS mean_token_len
-FROM documents
-"""
-
-# BPE-ish token counting (GPT-2-style pre-tokenizer classes, simplified to
-# ASCII): optional-leading-space letter runs / digit runs / punctuation
-# runs. Complements the whitespace count in text_quality — the pair is the
-# brief's "token counting (whitespace + a BPE-ish regex)". regexp dialects:
-# Spark string literals process backslash escapes (Java regex), DuckDB's
-# don't (RE2) — the pattern itself is compatible with both engines.
-_BPE_SPARK = r"""
-SELECT doc_id,
-       CAST(size(regexp_extract_all(text,
-            ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\\s]+', 0)) AS BIGINT)
-           AS n_bpe,
-       CAST(size(regexp_extract_all(text, ' ?[A-Za-z]+', 0)) AS BIGINT)
-           AS n_word,
-       CAST(size(regexp_extract_all(text, ' ?[0-9]+', 0)) AS BIGINT)
-           AS n_num,
-       CAST(size(regexp_extract_all(text, ' ?[^A-Za-z0-9\\s]+', 0))
-            AS BIGINT) AS n_punct
-FROM documents
-"""
-
-_BPE_DUCK = r"""
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text,
-            ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+')) AS BIGINT) AS n_bpe,
-       CAST(len(regexp_extract_all(text, ' ?[A-Za-z]+')) AS BIGINT)
-           AS n_word,
-       CAST(len(regexp_extract_all(text, ' ?[0-9]+')) AS BIGINT) AS n_num,
-       CAST(len(regexp_extract_all(text, ' ?[^A-Za-z0-9\s]+')) AS BIGINT)
-           AS n_punct
 FROM documents
 """
 
@@ -127,44 +95,6 @@ FROM documents d JOIN fps f ON f.doc_id = d.doc_id
 """
 
 
-# Distributed word count + top-k per group (§2.8's sort/top-k shape as an
-# explicit gate): explode tokens -> two-level aggregation (map-side
-# partials both levels) -> per-lang rank window, k=10, ties broken by
-# token text so the cut is deterministic.
-_TOKEN_TOPK_SPARK = """
-WITH toks AS (
-  SELECT lang, tok FROM documents
-  LATERAL VIEW explode(split(text, ' ')) t AS tok
-  WHERE tok != ''
-), counts AS (
-  SELECT lang, tok, COUNT(*) AS n FROM toks GROUP BY lang, tok
-), ranked AS (
-  SELECT lang, tok, n,
-         ROW_NUMBER() OVER (PARTITION BY lang
-                            ORDER BY n DESC, tok) AS rk
-  FROM counts
-)
-SELECT lang, tok, CAST(n AS BIGINT) AS n, CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= 10
-"""
-
-_TOKEN_TOPK_DUCK = """
-WITH toks AS (
-  SELECT lang, t.tok FROM documents, UNNEST(string_split(text, ' ')) t(tok)
-  WHERE t.tok != ''
-), counts AS (
-  SELECT lang, tok, COUNT(*) AS n FROM toks GROUP BY lang, tok
-), ranked AS (
-  SELECT lang, tok, n,
-         ROW_NUMBER() OVER (PARTITION BY lang
-                            ORDER BY n DESC, tok) AS rk
-  FROM counts
-)
-SELECT lang, tok, CAST(n AS BIGINT) AS n, CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= 10
-"""
-
-
 # Language-ID heuristic: stopword-hit ratio over whitespace tokens.
 _LANGID_SPARK = """
 SELECT doc_id,
@@ -203,8 +133,8 @@ FROM documents
 """
 
 # Merged per-doc text-analysis gate (language-ID + quality scoring + BPE-ish
-# token counting in one row — the three standalone queries are extended
-# gates). One scan, all columns integer-/string-exact.
+# token counting in one row — langid_heuristic and text_quality are the
+# standalone extended gates). One scan, all columns integer-/string-exact.
 _TEXT_ANALYSIS_SPARK = r"""
 SELECT doc_id,
        n_chars,
@@ -456,29 +386,6 @@ _SIMHASH_ND_DUCK = _simhash_neardup(
     "%%SIMHASH%%", "bit_count(CAST(xor(ha, hb) AS BIGINT))", "duck")
 
 
-# Deterministic proportional stratified sampling — the training-data
-# pipeline's "sample X% per (lang, source) stratum, reproducibly"
-# primitive. Hash-ordered ROW_NUMBER per stratum makes the sample a pure
-# function of the data (no RNG state, rerun-stable, cluster-size
-# independent); CEIL keeps every non-empty stratum represented. At scale
-# this is one window over the stratum-partitioned shuffle — no
-# collect, no global sort. (`doc_id || ''` is the string coercion both
-# dialects accept.)
-_STRATIFIED_SAMPLE = """
-WITH ranked AS (
-  SELECT lang, source, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY lang, source
-                            ORDER BY md5(doc_id || '')) AS rk,
-         COUNT(*) OVER (PARTITION BY lang, source) AS stratum_n
-  FROM documents
-)
-SELECT lang, source, CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(rk AS BIGINT) AS rk, CAST(stratum_n AS BIGINT) AS stratum_n
-FROM ranked
-WHERE rk <= CEIL(0.2 * stratum_n)
-"""
-
-
 # Near-dup dedup CLUSTERS: MinHash-LSH candidate pairs -> distributed
 # connected components (operators/gaps.connected_components — the same
 # min-label + pointer-jumping engine that merges cross-tile gaps) -> one
@@ -661,267 +568,11 @@ def _training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(n_bpe AS BIGINT) AS n_bpe", "cluster_size",
         "CAST(rk AS BIGINT) AS rk", "CAST(stratum_n AS BIGINT) AS stratum_n")
 
-# --- BPE tokenizer training gate ---------------------------------------------
-# The REAL distributed trainer (operators/tokenize.train_bpe_merges: one
-# vocab shuffle + per-merge map-side pair-count partials, driver keeps only
-# the K-row merge table) on a PLANTED corpus whose merge sequence is
-# closed-form: words abab x16, abc x8, cc x4, dd x3, de x2 give pair
-# counts (a,b)=40 > (b,a)=16 ..., and each of the six merges has a unique
-# winner — (a,b,40), (ab,ab,16), (ab,c,8), (c,c,4), (d,d,3), (d,e,2) —
-# derivable by hand (no tie-breaks exercised; determinism under ties is
-# pytest-pinned vs the local replica on the REAL documents corpus,
-# tests/test_bpe.py). A second section pins apply_bpe: after all six
-# merges every planted word re-segments to exactly one token.
-
-def _bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from lidartree_spark.operators.tokenize import (apply_bpe,
-                                                    train_bpe_merges)
-    words = [("abab", 16), ("abc", 8), ("cc", 4), ("dd", 3), ("de", 2)]
-    rows = [{"doc_id": i, "text": w}
-            for i, w in enumerate(w for w, n in words for _ in range(n))]
-    docs = spark.createDataFrame(pd.DataFrame(rows),
-                                 schema="doc_id long, text string")
-    merges = train_bpe_merges(docs, 6)
-    mrows = [{"section": "merge", "step": i, "a": a, "b": b, "cnt": n}
-             for i, (a, b, n) in enumerate(merges)]
-    distinct = spark.createDataFrame(
-        pd.DataFrame([{"doc_id": i, "text": w}
-                      for i, (w, _) in enumerate(words)]),
-        schema="doc_id long, text string")
-    toks = apply_bpe(distinct, merges).collect()
-    trows = [{"section": "tok", "step": int(r.doc_id),
-              "a": r.tokens[0], "b": "", "cnt": int(r.n_tokens)}
-             for r in toks]
-    return spark.createDataFrame(
-        pd.DataFrame(mrows + trows,
-                     columns=["section", "step", "a", "b", "cnt"]),
-        schema="section string, step long, a string, b string, cnt long")
-
-
-_BPE_TRAIN_DUCK = """
-SELECT * FROM (VALUES
-  ('merge', CAST(0 AS BIGINT), 'a', 'b', CAST(40 AS BIGINT)),
-  ('merge', 1, 'ab', 'ab', 16),
-  ('merge', 2, 'ab', 'c', 8),
-  ('merge', 3, 'c', 'c', 4),
-  ('merge', 4, 'd', 'd', 3),
-  ('merge', 5, 'd', 'e', 2),
-  ('tok', 0, 'abab', '', 1),
-  ('tok', 1, 'abc', '', 1),
-  ('tok', 2, 'cc', '', 1),
-  ('tok', 3, 'dd', '', 1),
-  ('tok', 4, 'de', '', 1)
-) AS t(section, step, a, b, cnt)
-"""
-
-
-# --- multi-level rollup aggregation ------------------------------------------
-# OLAP cube semantics over the corpus dimensions: one ROLLUP pass emits
-# (lang, source), (lang), and grand-total rows with GROUPING markers —
-# Spark plans this as a single Expand + hash aggregate (one shuffle, rows
-# x #levels map-side), identical SQL in both engines.
-
-_ROLLUP_COUNTS = """
-SELECT COALESCE(lang, '<all>') AS lang,
-       COALESCE(source, '<all>') AS source,
-       CAST(GROUPING(lang) * 2 + GROUPING(source) AS BIGINT) AS lvl,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-FROM documents
-GROUP BY ROLLUP(lang, source)
-"""
-
-
-# --- statistical text-selection filters: CCNet ppl + DSIR + tf-idf ----------
-# Three model-based data-selection operators over the documents corpus,
-# merged into one section-tagged driver gate (stat_filters); the standalone
-# variants are extended gates. All scores are quantize-then-sum integers:
-# each log term is rounded to the 1e-4 grid FIRST and summed as BIGINT
-# (coarse on purpose: the LN inputs are engine-computed transcendentals,
-# and the odds of a 1-ulp libm disagreement landing on a rounding
-# boundary scale with the grid density — 1e4 buys a 100x margin over
-# 1e6 while keeping full ranking resolution), so
-# aggregation order cannot perturb one output bit in either engine (the
-# dem_filtering FIR policy applied to log-space model scores).
-#
-# 'ppl'   — CCNet-style LM filtering (Wenzek et al. 2020): a bigram LM with
-#           add-one smoothing is trained on a designated reference slice
-#           (lang='en'; the 100 TB shape — the model is a bounded, hence
-#           broadcastable, dim exactly like CCNet's Wikipedia KenLM), every
-#           document is scored by mean per-bigram cross-entropy, and the
-#           corpus is cut into head/middle/tail at the exact 33/67 RANK
-#           positions (integer compares rn*100 <= n*33 — no percentile
-#           interpolation, whose a+(b-a)*f float shape is not identical
-#           across engines). The rank window is global; at 100 TB the cut
-#           comes from percentile_approx on a sample with the same
-#           downstream CASE, the standard CCNet deployment.
-# 'dsir'  — Data Selection with Importance Resampling (Xie et al. 2023):
-#           hashed unigram features (64 buckets from the first two hex
-#           digits of md5(word)), bucket weight = log p_target − log q_raw with add-one
-#           smoothing, per-document importance weight = integer sum of
-#           quantized bucket weights, top-25 selection via ORDER BY + LIMIT
-#           (TakeOrderedAndProject at scale — never a one-partition global
-#           window).
-# 'tfidf' — per-document top-3 keywords by tf·idf with idf quantized to
-#           integers (score = tf * qidf stays BIGINT-exact); deterministic
-#           lexicographic tie-break.
-#
-# Plan shape at 100 TB: tokenization is map-side; the LM / bucket-weight /
-# idf tables are all bounded (vocab, 64, vocab) -> broadcast joins; the only
-# corpus-sized shuffles are the per-doc aggregations on doc_id and one
-# bigram LEAD window per doc (Spark side), both keyed and combinable.
-
-_HEX = "instr('0123456789abcdef', {c}) - 1"
-
-
-def _stat_filters_sql(d: str, section: str | None = None) -> str:
-    if d == "spark":
-        base = """
-toks AS (
-  SELECT doc_id, lang, pos, w
-  FROM documents LATERAL VIEW posexplode(split(text, ' ')) t AS pos, w)"""
-        big = """
-big AS (
-  SELECT doc_id, lang, w,
-         LEAD(w) OVER (PARTITION BY doc_id ORDER BY pos) AS w1
-  FROM toks)"""
-        sub = "substring"
-    else:
-        base = """
-words AS (
-  SELECT doc_id, lang, string_split(text, ' ') AS l FROM documents),
-toks AS (
-  SELECT doc_id, lang, i AS pos, l[i] AS w
-  FROM words, UNNEST(generate_series(1, len(l))) s(i))"""
-        big = """
-big AS (
-  SELECT doc_id, lang, l[i] AS w, l[i + 1] AS w1
-  FROM words, UNNEST(generate_series(1, len(l) - 1)) s(i))"""
-        sub = "substr"
-
-    # 64-bucket md5 hashing trick: the first two hex digits, mod 64
-    h1 = _HEX.format(c=f"{sub}(md5(w), 1, 1)")
-    h2 = _HEX.format(c=f"{sub}(md5(w), 2, 1)")
-    bucket = f"((({h1}) * 16 + ({h2})) % 64)"
-
-    ppl = f"""
-runi AS (SELECT w, COUNT(*) AS ca FROM toks WHERE lang = 'en' GROUP BY w),
-rv AS (SELECT COUNT(*) AS v FROM runi),
-rbi AS (SELECT w, w1, COUNT(*) AS cab FROM big
-        WHERE lang = 'en' AND w1 IS NOT NULL GROUP BY w, w1),
-sc AS (
-  SELECT b.doc_id,
-         CAST(ROUND(10000 * LN((COALESCE(rb.cab, 0) + 1.0)
-              / (COALESCE(ru.ca, 0) + (SELECT v FROM rv))), 0)
-              AS BIGINT) AS q
-  FROM big b
-  LEFT JOIN runi ru ON ru.w = b.w
-  LEFT JOIN rbi rb ON rb.w = b.w AND rb.w1 = b.w1
-  WHERE b.w1 IS NOT NULL),
-ppl AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bi,
-         CAST(SUM(q) AS BIGINT) AS sum_q
-  FROM sc GROUP BY doc_id),
-prk AS (
-  SELECT doc_id, n_bi, sum_q,
-         (0 - sum_q) / CAST(n_bi AS DOUBLE) / CAST(10000 AS DOUBLE)
-             AS xent,
-         ROW_NUMBER() OVER (ORDER BY (0 - sum_q) / CAST(n_bi AS DOUBLE),
-                            doc_id) AS rn,
-         COUNT(*) OVER () AS n
-  FROM ppl),
-pplb AS (
-  SELECT doc_id, n_bi, sum_q, xent,
-         CASE WHEN rn * 100 <= n * 33 THEN 'head'
-              WHEN rn * 100 <= n * 67 THEN 'middle'
-              ELSE 'tail' END AS bucket
-  FROM prk)"""
-
-    dsir = f"""
-feats AS (
-  SELECT doc_id, lang, CAST({bucket} AS BIGINT) AS b FROM toks),
-tgt AS (SELECT b, COUNT(*) AS pc FROM feats WHERE lang = 'en' GROUP BY b),
-rawc AS (SELECT b, COUNT(*) AS qc FROM feats GROUP BY b),
-tots AS (SELECT CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-                AS pt,
-                CAST(COUNT(*) AS BIGINT) AS qt
-         FROM feats),
-wts AS (
-  SELECT r.b,
-         CAST(ROUND(10000 *
-              (LN((COALESCE(t.pc, 0) + 1.0) / ((SELECT pt FROM tots) + 64))
-               - LN((r.qc + 1.0) / ((SELECT qt FROM tots) + 64))), 0)
-              AS BIGINT) AS wq
-  FROM rawc r LEFT JOIN tgt t ON t.b = r.b),
-dw AS (
-  SELECT f.doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok,
-         CAST(SUM(x.wq) AS BIGINT) AS wt
-  FROM feats f JOIN wts x ON x.b = f.b
-  GROUP BY f.doc_id),
-dtop AS (SELECT doc_id, n_tok, wt FROM dw ORDER BY wt DESC, doc_id LIMIT 25),
-dsel AS (
-  SELECT doc_id, n_tok, wt,
-         CAST(ROW_NUMBER() OVER (ORDER BY wt DESC, doc_id) AS BIGINT) AS rk
-  FROM dtop)"""
-
-    tfidf = """
-tf AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS tf
-       FROM toks GROUP BY doc_id, w),
-df AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY w),
-nd AS (SELECT COUNT(DISTINCT doc_id) AS n FROM documents),
-idf AS (SELECT w, CAST(ROUND(10000 *
-                LN(((SELECT n FROM nd) + 1.0) / (df + 1.0)), 0)
-                AS BIGINT) AS qidf
-        FROM df),
-sct AS (SELECT t.doc_id, t.w, t.tf, t.tf * i.qidf AS score
-        FROM tf t JOIN idf i ON i.w = t.w),
-tk AS (SELECT doc_id, w, tf, score,
-              ROW_NUMBER() OVER (PARTITION BY doc_id
-                                 ORDER BY score DESC, w) AS rk
-       FROM sct),
-tfk AS (SELECT doc_id, CAST(rk AS BIGINT) AS rk, w, tf,
-               CAST(score AS BIGINT) AS score
-        FROM tk WHERE rk <= 3)"""
-
-    finals = {
-        "ppl": """
-SELECT CAST(doc_id AS BIGINT) AS doc_id, n_bi AS n_bigrams,
-       sum_q AS sum_qlp, xent, bucket
-FROM pplb""",
-        "dsir": """
-SELECT CAST(doc_id AS BIGINT) AS doc_id, n_tok, wt AS weight, rk
-FROM dsel""",
-        "tfidf": """
-SELECT CAST(doc_id AS BIGINT) AS doc_id, rk, w AS term, tf, score
-FROM tfk""",
-    }
-    if section == "ppl":
-        return "WITH " + ",".join([base, big, ppl]) + finals["ppl"]
-    if section == "dsir":
-        return "WITH " + ",".join([base, dsir]) + finals["dsir"]
-    if section == "tfidf":
-        return "WITH " + ",".join([base, tfidf]) + finals["tfidf"]
-    return "WITH " + ",".join([base, big, ppl, dsir, tfidf]) + """
-SELECT 'ppl' AS section, CAST(doc_id AS BIGINT) AS id, n_bi AS k1,
-       sum_q AS k2, xent AS x, bucket AS tag
-FROM pplb
-UNION ALL
-SELECT 'dsir', CAST(doc_id AS BIGINT), n_tok, wt, CAST(rk AS DOUBLE),
-       'selected'
-FROM dsel
-UNION ALL
-SELECT 'tfidf', CAST(doc_id AS BIGINT), rk, score, CAST(tf AS DOUBLE), w
-FROM tfk"""
-
 
 QUERIES = [
     Query("exact_dedup", _EXACT_DEDUP, _EXACT_DEDUP),
     Query("text_quality", _TEXT_QUALITY, _TEXT_QUALITY),
-    Query("bpe_token_count", _BPE_SPARK, _BPE_DUCK),
     Query("rabin_fingerprint", _RABIN_SPARK, _RABIN_DUCK, driver=True),
-    Query("token_topk", _TOKEN_TOPK_SPARK, _TOKEN_TOPK_DUCK),
     Query("langid_heuristic", _LANGID_SPARK, _LANGID_DUCK),
     Query("doc_fingerprint", _FINGERPRINT_SPARK, _FINGERPRINT_DUCK),
     Query("text_analysis", _TEXT_ANALYSIS_SPARK,
@@ -937,19 +588,8 @@ QUERIES = [
           _SIMHASH_ND_SPARK.replace("%%SIMHASH%%", _SIMHASH_SPARK),
           _SIMHASH_ND_DUCK.replace("%%SIMHASH%%", _SIMHASH_DUCK),
           driver=True),
-    Query("stratified_sample", _STRATIFIED_SAMPLE, _STRATIFIED_SAMPLE),
     Query("dedup_clusters", _dedup_clusters,
           _dedup_clusters_duck(), driver=True),
     Query("training_data_pipeline", _training_pipeline,
           _TD_PIPELINE_DUCK, driver=True),
-    Query("bpe_train", _bpe_train, _BPE_TRAIN_DUCK, driver=True),
-    Query("rollup_counts", _ROLLUP_COUNTS, _ROLLUP_COUNTS),
-    Query("stat_filters", _stat_filters_sql("spark"),
-          _stat_filters_sql("duck"), driver=True),
-    Query("lm_perplexity", _stat_filters_sql("spark", "ppl"),
-          _stat_filters_sql("duck", "ppl")),
-    Query("dsir_select", _stat_filters_sql("spark", "dsir"),
-          _stat_filters_sql("duck", "dsir")),
-    Query("tfidf_keywords", _stat_filters_sql("spark", "tfidf"),
-          _stat_filters_sql("duck", "tfidf")),
 ]

@@ -1,8 +1,8 @@
 """Gate-level tests for driver queries: the multimodal feature gate
 (canonicalizable scalar schema, like the driver's hash step), the
-registry's tier partition (the pinned driver-48 set), the removal of
-builders' scratch directories at exit, and tools/check_oracle.py's
-refusal of names it does not know."""
+registry's tier partition (the pinned driver-43 set), the removal of
+builders' scratch directories at exit, and the refusal of names they do
+not know by tools/check_oracle.py and tools/isolate_query.py."""
 
 import os
 import subprocess
@@ -27,48 +27,42 @@ def test_multimodal_gate_is_canonicalizable(spark):
     assert canon["std"].gt(0).all()
 
 
-# The driver's correctness harness records at most 50 rows; these 48 are
+# The driver's correctness harness records at most 50 rows; these 43 are
 # they. Changing the set (or any of its oracle SQL) is a decision to record
 # in CHANGES.md, not a side effect.
-DRIVER_48 = {
-    "aba_metrics", "aba_model_scores", "bpe_train",
-    "catalog_roi_stats", "cell_index_dual", "cell_join_salted",
-    "checkpoint_resume_stats", "coreg_kernel_stats", "coregistration_stats",
-    "crown_wkt_rects", "crowns_spike", "dedup_clusters",
-    "dem_filtering_surface", "edge_detection_stats",
+DRIVER_43 = {
+    "aba_metrics", "aba_model_scores", "catalog_roi_stats", "cell_index_dual",
+    "cell_join_salted", "checkpoint_resume_stats", "coreg_kernel_stats",
+    "coregistration_stats", "crown_wkt_rects", "crowns_spike",
+    "dedup_clusters", "dem_filtering_surface", "edge_detection_stats",
     "gap_ladder_surface", "gap_merge_mosaic", "halo_dominance_stats",
     "label_components_blocks", "matching_scores", "maxima_localmax",
     "multimodal_image_features", "north_star_stats", "phash_neardup",
     "pip_join", "points2dsm", "points2dtm_tin_plane",
     "points_lifecycle_stats", "rabin_fingerprint", "raster_masks",
     "raster_metrics_regrid", "scalar_map_ops", "simhash_neardup",
-    "stat_filters", "std_tree_metrics", "streaming_dedup",
-    "streaming_detect_resume", "streaming_running_totals",
-    "streaming_windowed_events", "terrain_plane_fit", "text_analysis",
-    "text_neardup", "tiles_roundtrip_stats", "training_data_pipeline",
-    "tree_extraction_stats", "tree_match_oracle", "tree_metrics_spike",
-    "watershed_voronoi", "zonal_adjust_stats",
+    "std_tree_metrics", "streaming_detect_resume", "terrain_plane_fit",
+    "text_analysis", "text_neardup", "tiles_roundtrip_stats",
+    "training_data_pipeline", "tree_extraction_stats", "tree_match_oracle",
+    "tree_metrics_spike", "watershed_voronoi", "zonal_adjust_stats",
 }
-DRIVER_48_SHA256 = ("55383314b069dd44aeb829c9ebb8f3ed"
-                    "e4973c57006d0c20615d3109eb3291ae")
+DRIVER_43_SHA256 = ("fb03ca538e3f404383d5ae4a9ee82d38"
+                    "3bed49b56b5a065b0b3b81b338b17613")
 
 
-# The 43 extended gates and the 16 rows-only entries, pinned the same way.
-EXTENDED_43 = {
-    "aba_inference", "aba_predict", "aba_quantiles",
-    "boxcox_transforms", "bpe_token_count",
+# The 36 extended gates and the 16 rows-only entries, pinned the same way.
+EXTENDED_36 = {
+    "aba_inference", "aba_predict", "aba_quantiles", "boxcox_transforms",
     "caption_alignment", "cell_index_hierarchy", "clean_raster",
     "clustered_layout_scan", "coreg_surface", "doc_fingerprint",
-    "dsir_select", "exact_dedup", "geotiff_spike_detect",
-    "height_regression", "hilbert_index", "hist_detection", "hist_stack",
-    "image_augment_stats", "image_dedup_clusters", "image_pack",
-    "langid_heuristic", "las_ingest_dsm", "las_lifecycle_detect",
-    "laz_lifecycle_detect", "lm_perplexity", "matching_mutual_nn",
-    "minhash_lsh", "ngram_jaccard", "overview_pyramid", "polar2projected",
-    "raster_chull_mask", "raster_local_max", "raster_xy_mask",
-    "rollup_counts", "simhash", "species_dim_join", "stratified_sample",
-    "text_quality", "tfidf_keywords", "tile_prune_roi", "token_topk",
-    "vegetation_indices",
+    "exact_dedup", "geotiff_spike_detect", "height_regression",
+    "hilbert_index", "hist_detection", "hist_stack", "image_augment_stats",
+    "image_dedup_clusters", "image_pack", "langid_heuristic",
+    "las_ingest_dsm", "las_lifecycle_detect", "laz_lifecycle_detect",
+    "matching_mutual_nn", "minhash_lsh", "ngram_jaccard", "overview_pyramid",
+    "polar2projected", "raster_chull_mask", "raster_local_max",
+    "raster_xy_mask", "simhash", "species_dim_join", "text_quality",
+    "tile_prune_roi", "vegetation_indices",
 }
 ROWS_ONLY_16 = {
     "checkpointed_detect", "clouds_tree_metrics", "coregistration",
@@ -78,11 +72,11 @@ ROWS_ONLY_16 = {
     "tree_detect_halo", "tree_detect_tiles", "tree_detection_catalog_roi",
     "tree_match_greedy",
 }
-EXTENDED_91_SHA256 = ("83c7bd52957734aadf7897e325eeb890"
-                      "3321c487b56c726e5533e727bab15944")
-# {name: SQL} of the 41 queries whose Spark side is a SQL string
-SPARK_SQL_41_SHA256 = ("330f55925391b2ec6035244dfaa7504a"
-                       "fc845fe7d40b2df208f538d18b866ac3")
+EXTENDED_79_SHA256 = ("76aae443c35a04fcf5c949c27e55757d"
+                      "c2f4293de2a85f192e0aa6b1cb9cc529")
+# {name: SQL} of the 33 queries whose Spark side is a SQL string
+SPARK_SQL_33_SHA256 = ("ed0d82b34a5b0795d27faa685c8d6dcb"
+                       "67fe97988c47abb9b45f3faa9db55ebe")
 
 
 def _sha256(d):
@@ -102,16 +96,16 @@ def test_registry_tiers_partition_queries():
     )
 
     driver, every = oracle_sql(), oracle_sql_extended()
-    assert set(driver) == DRIVER_48 and len(DRIVER_48) == 48
-    assert _sha256(driver) == DRIVER_48_SHA256
-    assert set(every) - set(driver) == EXTENDED_43 and len(EXTENDED_43) == 43
-    assert _sha256(every) == EXTENDED_91_SHA256
+    assert set(driver) == DRIVER_43 and len(DRIVER_43) == 43
+    assert _sha256(driver) == DRIVER_43_SHA256
+    assert set(every) - set(driver) == EXTENDED_36 and len(EXTENDED_36) == 36
+    assert _sha256(every) == EXTENDED_79_SHA256
     assert set(queries()) - set(every) == ROWS_ONLY_16
-    assert len(ROWS_ONLY_16) == 16 and len(queries()) == 107
+    assert len(ROWS_ONLY_16) == 16 and len(queries()) == 95
     spark_sql = {name: q.spark for name, q in REGISTRY.items()
                  if isinstance(q.spark, str)}
-    assert len(spark_sql) == 41
-    assert _sha256(spark_sql) == SPARK_SQL_41_SHA256
+    assert len(spark_sql) == 33
+    assert _sha256(spark_sql) == SPARK_SQL_33_SHA256
 
 
 
@@ -153,3 +147,17 @@ def test_check_oracle_rejects_unknown_names():
     assert "no_such_query" in out.stderr
     assert "tree_detect_tiles" not in out.stderr
     assert "ok " not in out.stdout
+
+
+def test_isolate_query_rejects_unknown_names():
+    """tools/isolate_query.py refuses an unknown name the same way: exit 2,
+    named on stderr, before any Spark session or warm-up job starts."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "isolate_query.py"),
+         "tree_detect_tiles", "no_such_query", "--n", "1", "--sf", SF],
+        capture_output=True, text=True, timeout=120)
+    assert out.returncode == 2
+    assert "no_such_query" in out.stderr
+    assert "tree_detect_tiles" not in out.stderr
+    assert out.stdout == ""

@@ -1,30 +1,12 @@
-"""Structured Streaming: stream==batch parity, checkpoint-resume
-exactly-once, watermarked windowed aggregation, stateful operator state
-across micro-batches."""
+"""Structured Streaming tile detection: stream==batch parity,
+checkpoint-resume exactly-once, and the checkpoint's resumable layout."""
 
 import glob
-import shutil
-
-import pandas as pd
-import pytest
 
 from lidartree_spark.streaming.ops import (
-    running_user_totals,
     stream_detect_to_parquet,
-    stream_events,
     stream_tiles,
-    windowed_event_stats,
 )
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def events_dir(tmp_path):
-    d = tmp_path / "events_src"
-    d.mkdir()
-    shutil.copy(f"{SF}/events.parquet", d / "part-0.parquet")
-    return str(d)
 
 
 def test_stream_detect_matches_batch_and_resumes(spark, tmp_path):
@@ -50,44 +32,6 @@ def test_stream_detect_matches_batch_and_resumes(spark, tmp_path):
     assert spark.read.parquet(sink).count() == n_before
 
 
-def test_windowed_stats_stream_equals_batch(spark, events_dir):
-    q = (windowed_event_stats(stream_events(spark, events_dir))
-         .writeStream.format("memory").queryName("ws_eq")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    stream_rows = {tuple(r) for r in spark.table("ws_eq").collect()}
-    batch_rows = {tuple(r) for r in
-                  windowed_event_stats(spark.read.parquet(events_dir))
-                  .collect()}
-    assert stream_rows == batch_rows
-    assert len(stream_rows) > 10
-
-
-def test_running_totals_state_survives_batch_boundary(spark, tmp_path):
-    """Split the source into two files and force one file per micro-batch:
-    the per-user totals after batch 2 must include batch 1's state."""
-    src = tmp_path / "ev2"
-    src.mkdir()
-    pdf = pd.read_parquet(f"{SF}/events.parquet")
-    half = len(pdf) // 2
-    pdf.iloc[:half].to_parquet(src / "a.parquet", index=False)
-    pdf.iloc[half:].to_parquet(src / "b.parquet", index=False)
-
-    ev = stream_events(spark, str(src), max_files_per_trigger=1)
-    q = (running_user_totals(ev)
-         .writeStream.format("memory").queryName("rt_state")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    out = spark.table("rt_state").toPandas()
-    # update mode appends one row per user per batch; the running maximum
-    # count per user is the final cumulative state
-    final = out.groupby("user_id").n.max()
-    expect = pdf.groupby("user_id").size()
-    assert final.sort_index().tolist() == expect.sort_index().tolist()
-    # at least one user appears in both batches (state actually carried)
-    assert (out.groupby("user_id").size() > 1).any()
-
-
 def test_streaming_checkpoint_layout(spark, tmp_path):
     """The checkpoint directory carries the file-source log + commits —
     the artifacts that make a killed run resumable."""
@@ -98,47 +42,3 @@ def test_streaming_checkpoint_layout(spark, tmp_path):
     stream_detect_to_parquet(stream_tiles(spark, str(src)), sink, ckpt)
     assert glob.glob(f"{ckpt}/sources/0/*")
     assert glob.glob(f"{ckpt}/commits/*")
-
-
-def test_dedup_stream_drops_cross_batch_duplicates(spark, tmp_path):
-    """Duplicates arriving in LATER micro-batches must be dropped by dedup
-    state; a batch-local distinct per micro-batch would keep them."""
-    from lidartree_spark.streaming.ops import dedup_stream
-
-    pdf = pd.read_parquet(f"{SF}/events.parquet").head(300)
-    d = tmp_path / "dup_src"
-    d.mkdir()
-    # file 0: rows 0-99; file 1: rows 100-199 PLUS rows 0-49 again;
-    # file 2: rows 200-299 PLUS rows 0-49 a second time
-    pdf.iloc[0:100].to_parquet(d / "part-0.parquet", index=False)
-    pd.concat([pdf.iloc[100:200], pdf.iloc[0:50]]).to_parquet(
-        d / "part-1.parquet", index=False)
-    pd.concat([pdf.iloc[200:300], pdf.iloc[0:50]]).to_parquet(
-        d / "part-2.parquet", index=False)
-
-    q = (dedup_stream(stream_events(spark, str(d), max_files_per_trigger=1))
-         .writeStream.format("memory").queryName("dedup_t")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.table("dedup_t").select("event_id").collect()
-    ids = [r.event_id for r in got]
-    assert len(ids) == 300 and len(set(ids)) == 300
-    assert sorted(ids) == sorted(pdf["event_id"].tolist())
-
-
-def test_dedup_stream_within_watermark_variant(spark, tmp_path):
-    """The bounded-state variant: duplicates inside the watermark horizon
-    are dropped; the op must produce no MORE rows than the exact variant."""
-    from lidartree_spark.streaming.ops import dedup_stream
-
-    pdf = pd.read_parquet(f"{SF}/events.parquet").head(100)
-    d = tmp_path / "wm_src"
-    d.mkdir()
-    pd.concat([pdf, pdf]).to_parquet(d / "part-0.parquet", index=False)
-
-    q = (dedup_stream(stream_events(spark, str(d)), watermark="365 days")
-         .writeStream.format("memory").queryName("dedup_wm")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    ids = [r.event_id for r in spark.table("dedup_wm").collect()]
-    assert len(ids) == 100 and len(set(ids)) == 100

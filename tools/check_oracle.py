@@ -1,7 +1,7 @@
 """Local replica of the driver's correctness gate: run each registry entry
 on Spark and its oracle on DuckDB over the same sf dir; compare row-count,
 column names, and order-insensitive values. Checks the EXTENDED oracle set
-(the driver-facing 50 plus the locally-verified variants). An entry whose
+(the driver-facing set plus the locally-verified variants). An entry whose
 input file (`Query.needs`) is absent is skipped, not failed.
 
 Usage: python tools/check_oracle.py [sf_dir] [name ...]

@@ -1,9 +1,11 @@
 """Isolated min-of-N timing for named registry queries (VERDICT r4/r5 ask:
-distinguish real regressions from co-tenant window noise — the token_topk
-lesson). Fresh session, warmup pass, min-of-N per query on an idle box.
+distinguish real regressions from co-tenant window noise — a query that
+reads slow in the bench suite's sample can read normal once isolated).
+Fresh session, warmup pass, min-of-N per query on an idle box.
 
 Usage: python tools/isolate_query.py q1 q2 ... [--n 4] [--sf DIR]
 Prints one JSON line {"sf_dir": .., "n": .., "queries": {name: min_sec}}.
+A name that is not in the registry exits 2 before Spark starts.
 """
 from __future__ import annotations
 
@@ -68,4 +70,9 @@ if __name__ == "__main__":
         i = argv.index("--sf")
         sf_dir = argv[i + 1]
         del argv[i:i + 2]
+    from lidartree_spark.queries import REGISTRY
+    unknown = sorted(set(argv) - set(REGISTRY))
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}", file=sys.stderr)
+        raise SystemExit(2)
     print(json.dumps(run_isolated(argv, n=n, sf_dir=sf_dir)))
