@@ -18,13 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from lidartree_spark.operators.tiles import TILES_SCHEMA
 
 
-def stream_tiles(spark: SparkSession, src_dir: str,
-                 max_files_per_trigger: int | None = None) -> DataFrame:
+def stream_tiles(spark: SparkSession, src_dir: str) -> DataFrame:
     """File-source stream over a directory of tile parquet files."""
-    r = spark.readStream.schema(TILES_SCHEMA)
-    if max_files_per_trigger is not None:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(src_dir)
+    return spark.readStream.schema(TILES_SCHEMA).parquet(src_dir)
 
 
 def stream_detect_to_parquet(tiles_stream: DataFrame, sink_dir: str,
