@@ -23,8 +23,7 @@ non-negative int64.
 Near-dup pairing splits the hash into 8 bands of 8 bits: two images at
 Hamming distance <= 7 MUST share at least one unchanged band
 (pigeonhole), so a band equi-join is a COMPLETE candidate generator for
-the <= 7 filter — the same LSH shape as SimHash near-dup
-(queries.simhash_neardup), one keyed shuffle, no all-pairs.
+the <= 7 filter: one keyed shuffle on (band, band value), no all-pairs.
 """
 
 from __future__ import annotations

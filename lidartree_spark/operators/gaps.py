@@ -79,6 +79,11 @@ _LABELED_SCHEMA = ("image_id string, kind string, gap_id long, n_pixels long, "
                    "edge string, pos int")
 
 
+# Symmetrized edge rows at or below which the engine's own CC calls resolve
+# components with the driver union-find instead of distributed rounds.
+CC_DRIVER_THRESHOLD = 2_000_000
+
+
 def connected_components(pairs: DataFrame, max_iters: int = 25,
                          driver_threshold: int = 0) -> DataFrame:
     """Distributed connected components over (a, b) string-node edges by
@@ -234,8 +239,7 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
     return labels
 
 
-def cc_min_labels(pairs: DataFrame, a_col: str, b_col: str,
-                  driver_threshold: int = 0) -> DataFrame:
+def cc_min_labels(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Numeric-id front end for connected_components: zero-pads both id
     columns to full-int64 width (19 digits) so the engine's lexicographic
     min-label equals the numeric min for any NON-NEGATIVE id, runs CC, and
@@ -243,7 +247,7 @@ def cc_min_labels(pairs: DataFrame, a_col: str, b_col: str,
     inverts the ordering AND breaks the cast back — failing beats silently
     wrong canonicals, the morton_cell guard policy). Returns
     (node BIGINT, comp BIGINT) — comp is the numeric-min member of each
-    component. driver_threshold passes through to the hybrid (counted in
+    component. Runs the hybrid at CC_DRIVER_THRESHOLD (counted in
     symmetrized edge rows, ~2x the undirected pair count)."""
     guard = (f"CASE WHEN {a_col} < 0 OR {b_col} < 0 THEN "
              f"raise_error(concat('cc_min_labels: negative id in edge (', "
@@ -254,7 +258,7 @@ def cc_min_labels(pairs: DataFrame, a_col: str, b_col: str,
         f"COALESCE({guard}, '')) AS a",
         f"lpad(CAST({b_col} AS STRING), 19, '0') AS b")
     return connected_components(
-        edges, driver_threshold=driver_threshold).selectExpr(
+        edges, driver_threshold=CC_DRIVER_THRESHOLD).selectExpr(
         "CAST(node AS BIGINT) AS node", "CAST(comp AS BIGINT) AS comp")
 
 
@@ -356,7 +360,7 @@ def detect_gaps_global(tiles: DataFrame, params: dict | None = None,
     # hybrid CC: cross-border gap edges are O(border gap pixels) — tiny
     # relative to the corpus — so the driver union-find path almost always
     # wins; past the threshold it degrades to distributed propagation
-    comp = connected_components(pairs, driver_threshold=2_000_000)
+    comp = connected_components(pairs, driver_threshold=CC_DRIVER_THRESHOLD)
     merged = (gaps
               .withColumn("node", F.concat_ws("|", "image_id", "gap_id"))
               .join(comp, "node", "left")

@@ -35,7 +35,7 @@ from types import MappingProxyType
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents")
+          "lineitem", "events")
 
 
 def load_views(spark: SparkSession, sf_dir: str) -> None:
@@ -71,7 +71,6 @@ from lidartree_spark.queries import (  # noqa: E402
     images,
     interchange,
     raster,
-    text,
 )
 
 
@@ -85,7 +84,7 @@ def _by_name(qs: list[Query]) -> dict[str, Query]:
 
 REGISTRY = MappingProxyType(_by_name(
     forestry.QUERIES + raster.QUERIES + interchange.QUERIES
-    + images.QUERIES + text.QUERIES))
+    + images.QUERIES))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

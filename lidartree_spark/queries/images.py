@@ -1,5 +1,5 @@
 """Image-corpus gates: multimodal features, pHash near-dups and their
-clusters, caption alignment, batch packing and augmentation."""
+clusters, caption alignment and augmentation."""
 
 from __future__ import annotations
 
@@ -154,7 +154,7 @@ JOIN tstats ts ON ts.t = s.t
 
 
 # --- perceptual-hash image near-dup (integer-DCT pHash + banded LSH) -------
-# The image-side twin of simhash_neardup: 48 real 16-bit-gray PNGs (24
+# Banded-LSH near-dup pairs over image hashes: 48 real 16-bit-gray PNGs (24
 # base/perturbed pairs — the odd image bumps ONE pixel of its even twin by
 # 6..30), decoded distributed, hashed with the INTEGER 8x8 DCT-II
 # approximation (kernels/phash.py — every coefficient, the 32nd-smallest
@@ -283,8 +283,8 @@ WHERE bit_count(CAST(xor(ha, hb) AS BIGINT)) <= 7
 """
 
 # --- image near-dup clustering + canonical selection -------------------------
-# The image-side twin of dedup_clusters: pHash banded-LSH pairs feed the
-# REAL distributed connected-components operator, then keep-one-per-cluster.
+# Near-dup clusters: the phash_neardup banded-LSH pairs feed cc_min_labels
+# (the connected-components hybrid), then keep-one-per-cluster.
 # Singletons survive with themselves as canonical (left join).
 # Oracle = the phash_neardup CTE chain extended with a
 # recursive-CTE transitive closure.
@@ -298,8 +298,7 @@ def _image_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     hashes = image_phash(_phash_media(spark))
     pairs = phash_neardup_pairs(hashes, max_hamming=7)
-    lab = cc_min_labels(pairs, "media_a", "media_b",
-                        driver_threshold=2_000_000).selectExpr(
+    lab = cc_min_labels(pairs, "media_a", "media_b").selectExpr(
         "node AS media_id", "comp AS canonical")
     base = hashes.select(F.col("media_id").cast("long").alias("media_id"))
     allv = base.join(lab, "media_id", "left").select(
@@ -446,46 +445,6 @@ GROUP BY i, op, oh, ow
 """
 
 
-# --- aspect-ratio bucketed image batch packing -------------------------------
-# Vision-training batch prep (NaViT / SDXL-style aspect bucketing) packs
-# images into fixed pixel-budget batches WITHIN an aspect class, so a batch
-# never mixes orientations. Buckets come from integer cross-multiplication
-# (4w<=3h tall, 4h<=3w wide — no float ratios), order within a bucket is the
-# md5-ranked rerun-stable stream, and the pack is ONE partitioned
-# cumulative-sum window — no global total order at any corpus size.
-# Dimensions derive deterministically from doc_id so both engines own
-# identical ground truth; every output is BIGINT-exact.
-
-def _image_pack_sql(d: str) -> str:
-    cast_t = "STRING" if d == "spark" else "VARCHAR"
-    return f"""
-WITH imgs AS (
-  SELECT doc_id AS image_id,
-         64 + ((doc_id * 37) % 9) * 32 AS w,
-         64 + ((doc_id * 53) % 9) * 32 AS h
-  FROM documents),
-cls AS (
-  SELECT image_id, w, h, w * h AS px,
-         CASE WHEN 4 * w <= 3 * h THEN 'tall'
-              WHEN 4 * h <= 3 * w THEN 'wide'
-              ELSE 'square' END AS bucket
-  FROM imgs),
-cum AS (
-  SELECT image_id, bucket, w, h, px,
-         SUM(px) OVER (PARTITION BY bucket
-                       ORDER BY md5(CAST(image_id AS {cast_t})), image_id
-                       ROWS UNBOUNDED PRECEDING) AS cpx
-  FROM cls)
-SELECT CAST(image_id AS BIGINT) AS image_id, bucket,
-       CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-       CAST(px AS BIGINT) AS px,
-       CAST(FLOOR((cpx - px) / CAST(400000 AS DOUBLE)) AS BIGINT)
-           AS batch_id,
-       CAST((cpx - px) % 400000 AS BIGINT) AS px_offset
-FROM cum
-"""
-
-
 # --- caption<->image alignment filtering -------------------------------------
 # The cross-modal pair filter of image+caption pipelines (the CLIP-score
 # step of LAION-style dataset construction, re-expressed with a
@@ -563,6 +522,5 @@ QUERIES = [
     Query("phash_neardup", _phash_neardup, _PHASH_ND_DUCK, driver=True),
     Query("image_dedup_clusters", _image_dedup_gate, _IMG_DEDUP_DUCK),
     Query("image_augment_stats", _image_augment_stats, _IMAGE_AUGMENT_DUCK),
-    Query("image_pack", _image_pack_sql("spark"), _image_pack_sql("duck")),
     Query("caption_alignment", _caption_align_gate, _CAPTION_ALIGN_DUCK),
 ]

@@ -77,3 +77,21 @@ def test_no_callerless_module_level_code():
                        for p, line in uses[name]):
                 dead.append(f"{os.path.relpath(path, ROOT)}:{first} {name}")
     assert not dead, "module-level code nothing uses:\n" + "\n".join(dead)
+
+
+def test_every_table_view_is_read():
+    """Every view that queries.load_views registers has a reader in the
+    registry: a query that scans it (`FROM t`, `JOIN t`) or opens its
+    parquet (`t.parquet`). A view whose last reader was deleted still
+    costs a parquet schema read each time a SQL query loads the views."""
+    import re
+
+    from lidartree_spark.queries import TABLES
+
+    src = ""
+    for path in _py_files(os.path.join(PACKAGE, "queries")):
+        with open(path, encoding="utf-8") as f:
+            src += f.read()
+    unread = [t for t in TABLES if not re.search(
+        rf"\b(?:FROM|JOIN)\s+{t}\b|\b{t}\.parquet\b", src)]
+    assert not unread, f"views nothing reads: {unread}"

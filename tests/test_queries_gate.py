@@ -1,6 +1,6 @@
 """Gate-level tests for driver queries: the multimodal feature gate
 (canonicalizable scalar schema, like the driver's hash step), the
-registry's tier partition (the pinned driver-43 set), the removal of
+registry's tier partition (the pinned driver-37 set), the removal of
 builders' scratch directories at exit, and the refusal of names they do
 not know by tools/check_oracle.py and tools/isolate_query.py."""
 
@@ -27,41 +27,37 @@ def test_multimodal_gate_is_canonicalizable(spark):
     assert canon["std"].gt(0).all()
 
 
-# The driver's correctness harness records at most 50 rows; these 43 are
+# The driver's correctness harness records at most 50 rows; these 37 are
 # they. Changing the set (or any of its oracle SQL) is a decision to record
 # in CHANGES.md, not a side effect.
-DRIVER_43 = {
+DRIVER_37 = {
     "aba_metrics", "aba_model_scores", "catalog_roi_stats", "cell_index_dual",
     "cell_join_salted", "checkpoint_resume_stats", "coreg_kernel_stats",
     "coregistration_stats", "crown_wkt_rects", "crowns_spike",
-    "dedup_clusters", "dem_filtering_surface", "edge_detection_stats",
-    "gap_ladder_surface", "gap_merge_mosaic", "halo_dominance_stats",
-    "label_components_blocks", "matching_scores", "maxima_localmax",
-    "multimodal_image_features", "north_star_stats", "phash_neardup",
-    "pip_join", "points2dsm", "points2dtm_tin_plane",
-    "points_lifecycle_stats", "rabin_fingerprint", "raster_masks",
-    "raster_metrics_regrid", "scalar_map_ops", "simhash_neardup",
-    "std_tree_metrics", "streaming_detect_resume", "terrain_plane_fit",
-    "text_analysis", "text_neardup", "tiles_roundtrip_stats",
-    "training_data_pipeline", "tree_extraction_stats", "tree_match_oracle",
-    "tree_metrics_spike", "watershed_voronoi", "zonal_adjust_stats",
+    "dem_filtering_surface", "edge_detection_stats", "gap_ladder_surface",
+    "gap_merge_mosaic", "halo_dominance_stats", "label_components_blocks",
+    "matching_scores", "maxima_localmax", "multimodal_image_features",
+    "north_star_stats", "phash_neardup", "pip_join", "points2dsm",
+    "points2dtm_tin_plane", "points_lifecycle_stats", "raster_masks",
+    "raster_metrics_regrid", "scalar_map_ops", "std_tree_metrics",
+    "streaming_detect_resume", "terrain_plane_fit", "tiles_roundtrip_stats",
+    "tree_extraction_stats", "tree_match_oracle", "tree_metrics_spike",
+    "watershed_voronoi", "zonal_adjust_stats",
 }
-DRIVER_43_SHA256 = ("fb03ca538e3f404383d5ae4a9ee82d38"
-                    "3bed49b56b5a065b0b3b81b338b17613")
+DRIVER_37_SHA256 = ("5cbbd00e11743d4f0c979d71c0bed3ca"
+                    "57e3aae80641fedba542a515f087cd7c")
 
 
-# The 36 extended gates and the 16 rows-only entries, pinned the same way.
-EXTENDED_36 = {
+# The 28 extended gates and the 16 rows-only entries, pinned the same way.
+EXTENDED_28 = {
     "aba_inference", "aba_predict", "aba_quantiles", "boxcox_transforms",
     "caption_alignment", "cell_index_hierarchy", "clean_raster",
-    "clustered_layout_scan", "coreg_surface", "doc_fingerprint",
-    "exact_dedup", "geotiff_spike_detect", "height_regression",
-    "hilbert_index", "hist_detection", "hist_stack", "image_augment_stats",
-    "image_dedup_clusters", "image_pack", "langid_heuristic",
-    "las_ingest_dsm", "las_lifecycle_detect", "laz_lifecycle_detect",
-    "matching_mutual_nn", "minhash_lsh", "ngram_jaccard", "overview_pyramid",
-    "polar2projected", "raster_chull_mask", "raster_local_max",
-    "raster_xy_mask", "simhash", "species_dim_join", "text_quality",
+    "clustered_layout_scan", "coreg_surface", "geotiff_spike_detect",
+    "height_regression", "hilbert_index", "hist_detection", "hist_stack",
+    "image_augment_stats", "image_dedup_clusters", "las_ingest_dsm",
+    "las_lifecycle_detect", "laz_lifecycle_detect", "matching_mutual_nn",
+    "overview_pyramid", "polar2projected", "raster_chull_mask",
+    "raster_local_max", "raster_xy_mask", "species_dim_join",
     "tile_prune_roi", "vegetation_indices",
 }
 ROWS_ONLY_16 = {
@@ -72,11 +68,11 @@ ROWS_ONLY_16 = {
     "tree_detect_halo", "tree_detect_tiles", "tree_detection_catalog_roi",
     "tree_match_greedy",
 }
-EXTENDED_79_SHA256 = ("76aae443c35a04fcf5c949c27e55757d"
-                      "c2f4293de2a85f192e0aa6b1cb9cc529")
-# {name: SQL} of the 33 queries whose Spark side is a SQL string
-SPARK_SQL_33_SHA256 = ("ed0d82b34a5b0795d27faa685c8d6dcb"
-                       "67fe97988c47abb9b45f3faa9db55ebe")
+EXTENDED_65_SHA256 = ("c6e9b22f82da330898b268d79e4207d5"
+                      "f4c0c6c46c632cb28b6ca365325fc0ef")
+# {name: SQL} of the 23 queries whose Spark side is a SQL string
+SPARK_SQL_23_SHA256 = ("5d3a2c70eefa323ff29eca53e74929ad"
+                       "31379a2dccb63329e8d2cfbd4982a2b0")
 
 
 def _sha256(d):
@@ -96,16 +92,16 @@ def test_registry_tiers_partition_queries():
     )
 
     driver, every = oracle_sql(), oracle_sql_extended()
-    assert set(driver) == DRIVER_43 and len(DRIVER_43) == 43
-    assert _sha256(driver) == DRIVER_43_SHA256
-    assert set(every) - set(driver) == EXTENDED_36 and len(EXTENDED_36) == 36
-    assert _sha256(every) == EXTENDED_79_SHA256
+    assert set(driver) == DRIVER_37 and len(DRIVER_37) == 37
+    assert _sha256(driver) == DRIVER_37_SHA256
+    assert set(every) - set(driver) == EXTENDED_28 and len(EXTENDED_28) == 28
+    assert _sha256(every) == EXTENDED_65_SHA256
     assert set(queries()) - set(every) == ROWS_ONLY_16
-    assert len(ROWS_ONLY_16) == 16 and len(queries()) == 95
+    assert len(ROWS_ONLY_16) == 16 and len(queries()) == 81
     spark_sql = {name: q.spark for name, q in REGISTRY.items()
                  if isinstance(q.spark, str)}
-    assert len(spark_sql) == 33
-    assert _sha256(spark_sql) == SPARK_SQL_33_SHA256
+    assert len(spark_sql) == 23
+    assert _sha256(spark_sql) == SPARK_SQL_23_SHA256
 
 
 

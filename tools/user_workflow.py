@@ -48,7 +48,7 @@ def main(out_dir: str | None = None) -> dict:
 
     out_dir = out_dir or tempfile.mkdtemp(prefix="lidartree_demo_")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("user-workflow")  # local[*] on the user's machine
+    spark = get_spark("user-workflow")  # local[$SPARK_GRAFT_CPUS], default 32
     try:
         # 1. the reference's own compressed point cloud (point count from
         # the 227-byte header — no decode pass just to count)
