@@ -100,9 +100,10 @@ spark = get_spark("bench-tiles", master={master!r})
 
 def pipeline(tiles_path, ref_path):
     # zero-shuffle detection + one AQE-coalesced shuffle for the batched
-    # greedy matcher. Measured faster than the fused broadcast variant
-    # (matching.detect_and_match) at >= 4 cores: the separate shuffle stage
-    # lets matching parallelize independently of scan-task boundaries.
+    # greedy matcher. Measured faster than fusing matching into the
+    # detection map over a broadcast inventory at >= 4 cores: the separate
+    # shuffle stage lets matching parallelize independently of scan-task
+    # boundaries.
     tiles = read_tiles(spark, tiles_path)
     det = detect_trees(tiles)
     ref = spark.read.parquet(ref_path)

@@ -258,10 +258,7 @@ def phash64(arr: np.ndarray) -> int:
     """64-bit perceptual hash: 8x8 block-mean image thresholded at its median.
 
     This is the AVERAGE-hash variant used for the tiles table's `phash`
-    fingerprint column (cheap, codec-roundtrip-stable). The DCT-based
-    pHash used for near-duplicate SEARCH — with its banded-LSH pair join
-    and DuckDB-exact integer transform — lives in kernels/phash.py
-    (operators/multimodal.image_phash).
+    fingerprint column (cheap, codec-roundtrip-stable).
 
     Deterministic, pure numpy (no DCT libs needed). The input is first
     snapped to the 1/256 value grid — the precision every lossless codec

@@ -5,9 +5,9 @@ Annex K luminance quantization + Huffman tables — encodable and decodable
 with numpy + stdlib only (no libjpeg/PIL in this environment; same
 motivation as the PNG codec in codecs.py). Single component (grayscale),
 no subsampling, no restart markers: the subset every baseline decoder
-accepts. Replaces the FakeDecoder image stand-in for fmt == "jpeg"
-(operators/multimodal.py); lossy acceptance contract is PSNR >= 40 dB
-(BASELINE.json input_hint), asserted in the decode-invariant gate.
+accepts. The tile codecs use it for fmt == "jpeg"; the lossy acceptance
+contract is PSNR >= 40 dB (BASELINE.json input_hint), asserted in the
+decode-invariant gate.
 
 DCT convention: with the orthonormal DCT-II matrix T (T[0,:] = 1/sqrt(8),
 T[u,x] = 0.5*cos((2x+1)u*pi/16) for u>0), T @ f @ T.T equals the JPEG FDCT

@@ -239,29 +239,6 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
     return labels
 
 
-def cc_min_labels(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
-    """Numeric-id front end for connected_components: zero-pads both id
-    columns to full-int64 width (19 digits) so the engine's lexicographic
-    min-label equals the numeric min for any NON-NEGATIVE id, runs CC, and
-    casts back. Negative ids raise loudly (zero-padding a '-' string
-    inverts the ordering AND breaks the cast back — failing beats silently
-    wrong canonicals, the morton_cell guard policy). Returns
-    (node BIGINT, comp BIGINT) — comp is the numeric-min member of each
-    component. Runs the hybrid at CC_DRIVER_THRESHOLD (counted in
-    symmetrized edge rows, ~2x the undirected pair count)."""
-    guard = (f"CASE WHEN {a_col} < 0 OR {b_col} < 0 THEN "
-             f"raise_error(concat('cc_min_labels: negative id in edge (', "
-             f"CAST({a_col} AS STRING), ', ', CAST({b_col} AS STRING), "
-             f"')')) END")
-    edges = pairs.selectExpr(
-        f"concat(lpad(CAST({a_col} AS STRING), 19, '0'), "
-        f"COALESCE({guard}, '')) AS a",
-        f"lpad(CAST({b_col} AS STRING), 19, '0') AS b")
-    return connected_components(
-        edges, driver_threshold=CC_DRIVER_THRESHOLD).selectExpr(
-        "CAST(node AS BIGINT) AS node", "CAST(comp AS BIGINT) AS comp")
-
-
 def detect_gaps_global(tiles: DataFrame, params: dict | None = None,
                        halo_px: int = 16) -> DataFrame:
     """Corpus-wide gap detection with exact cross-tile label merge.

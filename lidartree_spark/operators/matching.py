@@ -4,13 +4,9 @@ greedy assignment, plus confusion counts and height regression aggregates.
 Scale design (SURVEY.md §2.6): the greedy assignment is inherently sequential
 per group but groups are small (one tile/plot: ~10 trees), so the engine
 shuffles once on the group key and runs the exact reference loop in numpy.
-Two physical strategies, same semantics (parity-tested):
-- match_trees: one hash shuffle, rows sorted by (key, side) within
-  partitions, then the batched grouped map of `whole_groups`. The scale
-  default; the group key is the skew unit and AQE covers hot spots.
-- detect_and_match: broadcast the (small) inventory into the detection
-  stage — the whole pipeline fuses to one zero-shuffle map. Best when the
-  corpus >> inventory and per-core counts dominate (single-executor edge).
+match_trees: one hash shuffle, rows sorted by (key, side) within partitions,
+then the batched grouped map of `whole_groups`; the group key is the skew
+unit and AQE covers hot spots.
 """
 
 from __future__ import annotations
@@ -100,61 +96,6 @@ def match_trees(ref: DataFrame, det: DataFrame,
                                     "plan_diff": out_pd}, columns=cols)
 
     return u.mapInPandas(run, schema=MATCH_SCHEMA)
-
-
-def detect_and_match(tiles: DataFrame, ref: DataFrame,
-                     params: dict | None = None,
-                     delta_ground: float = 2.1, h_prec: float = 0.14,
-                     key: str = "image_id") -> DataFrame:
-    """Fused detect + match with a BROADCAST inventory: the whole flagship
-    pipeline collapses to one zero-shuffle mapInPandas stage.
-
-    This is the map-side broadcast-join strategy for the (common) case where
-    the reference inventory is a small dimension table (field plots: 10^3 -
-    10^6 rows) against a huge tile corpus — the same small-side tradeoff
-    Catalyst makes for broadcast hash joins. For inventories too big to
-    broadcast, `match_trees` is the shuffle path (grid-bucketed cogroup).
-    Semantics identical to detect_trees + match_trees (asserted in
-    tests/test_spark_pipeline.py)."""
-    from lidartree_spark.operators.detection import DEFAULT_PARAMS
-
-    p = {**DEFAULT_PARAMS, **(params or {})}
-    ref_pdf = (ref.select(key, "tree_id", "x", "y", "h")
-               .toPandas().sort_values([key, "tree_id"]))
-    ref_groups = {k: g[["x", "y", "h"]].to_numpy()
-                  for k, g in ref_pdf.groupby(key, sort=False)}
-    bc = tiles.sparkSession.sparkContext.broadcast(ref_groups)
-    padded = "pad" in tiles.columns
-    cols = ["image_id", "bytes", "w", "h", "fmt"] + (["pad"] if padded else [])
-
-    def run(batches):
-        from lidartree_spark.kernels.matching import tree_matching
-        from lidartree_spark.operators.detection import (
-            _core_trees,
-            _segment_batch,
-        )
-        groups = bc.value
-        for pdf in batches:
-            out = []
-            # a tile without reference trees has no match: skip its decode
-            mine = pdf["image_id"].map(groups.__contains__).astype(bool)
-            for rec, seg in _segment_batch(pdf[mine], p):
-                rows = _core_trees(rec, seg, p["res"])
-                if not rows:
-                    continue
-                rows.sort(key=lambda r: r["id"])
-                ld = np.array([[r["x"], r["y"], r["h"]] for r in rows])
-                for m in tree_matching(groups[rec.image_id], ld,
-                                       delta_ground=delta_ground,
-                                       h_prec=h_prec):
-                    out.append({"image_id": rec.image_id,
-                                "r": int(m["r"]), "d": int(m["d"]),
-                                "h_diff": m["h_diff"],
-                                "plan_diff": m["plan_diff"]})
-            yield pd.DataFrame(out, columns=["image_id", "r", "d",
-                                             "h_diff", "plan_diff"])
-
-    return tiles.select(*cols).mapInPandas(run, schema=MATCH_SCHEMA)
 
 
 def detection_counts(ref: DataFrame, det: DataFrame, matched: DataFrame,

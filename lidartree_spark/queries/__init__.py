@@ -28,7 +28,8 @@ Conventions for byte-stable Spark<->DuckDB parity:
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+import re
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 from types import MappingProxyType
 
@@ -38,8 +39,9 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events")
 
 
-def load_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
+def load_views(spark: SparkSession, sf_dir: str,
+               tables: Iterable[str] = TABLES) -> None:
+    for t in tables:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 
@@ -55,7 +57,9 @@ class Query:
 
     def run(self, spark: SparkSession, sf_dir: str) -> DataFrame:
         if isinstance(self.spark, str):
-            load_views(spark, sf_dir)
+            # only the views the SQL names: each is a parquet read
+            load_views(spark, sf_dir, [t for t in TABLES
+                                       if re.search(rf"\b{t}\b", self.spark)])
             return spark.sql(self.spark)
         return self.spark(spark, sf_dir)
 
@@ -68,7 +72,6 @@ class Query:
 
 from lidartree_spark.queries import (  # noqa: E402
     forestry,
-    images,
     interchange,
     raster,
 )
@@ -83,8 +86,7 @@ def _by_name(qs: list[Query]) -> dict[str, Query]:
 
 
 REGISTRY = MappingProxyType(_by_name(
-    forestry.QUERIES + raster.QUERIES + interchange.QUERIES
-    + images.QUERIES))
+    forestry.QUERIES + raster.QUERIES + interchange.QUERIES))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -101,6 +101,16 @@ def test_encode_decode_tile_dispatch():
     assert psnr(chm, out) >= 40.0
 
 
+@pytest.mark.parametrize("fmt", ["avi", "mp4", "h264"])
+def test_unknown_tile_format_raises(fmt):
+    """A format the tile codecs do not implement (video containers
+    included) raises instead of yielding fabricated pixels or bytes."""
+    with pytest.raises(ValueError, match="unknown tile format"):
+        decode_tile(b"\x00" * 256, fmt, 8, 8)
+    with pytest.raises(ValueError, match="unknown tile format"):
+        encode_tile(np.zeros((8, 8), np.float32), fmt)
+
+
 def test_truncated_stream_raises():
     img = np.zeros((8, 8), np.uint8)
     buf = encode_jpeg_gray(img)

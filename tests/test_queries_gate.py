@@ -1,8 +1,7 @@
-"""Gate-level tests for driver queries: the multimodal feature gate
-(canonicalizable scalar schema, like the driver's hash step), the
-registry's tier partition (the pinned driver-37 set), the removal of
-builders' scratch directories at exit, and the refusal of names they do
-not know by tools/check_oracle.py and tools/isolate_query.py."""
+"""Gate-level tests for driver queries: the registry's tier partition (the
+pinned driver-35 set), the removal of builders' scratch directories at
+exit, and the refusal of names they do not know by tools/check_oracle.py
+and tools/isolate_query.py."""
 
 import os
 import subprocess
@@ -13,52 +12,36 @@ from lidartree_spark.queries import queries
 SF = "/root/testdata/sf0.01"
 
 
-def test_multimodal_gate_is_canonicalizable(spark):
-    """The driver canonicalizes by sort_values over ALL columns — every
-    column must be hashable scalars (the round-1 failure was a raw
-    array<float> column)."""
-    df = queries()["multimodal_image_features"](spark, SF)
-    pdf = df.toPandas()
-    assert len(pdf) == 16
-    # this raised TypeError: unhashable type 'list' before the fix
-    canon = pdf.sort_values(by=list(pdf.columns)).reset_index(drop=True)
-    assert canon.thumb_len.eq(256).all()
-    assert canon.thumb_norm.gt(0).all()
-    assert canon["std"].gt(0).all()
-
-
-# The driver's correctness harness records at most 50 rows; these 37 are
+# The driver's correctness harness records at most 50 rows; these 35 are
 # they. Changing the set (or any of its oracle SQL) is a decision to record
 # in CHANGES.md, not a side effect.
-DRIVER_37 = {
+DRIVER_35 = {
     "aba_metrics", "aba_model_scores", "catalog_roi_stats", "cell_index_dual",
     "cell_join_salted", "checkpoint_resume_stats", "coreg_kernel_stats",
     "coregistration_stats", "crown_wkt_rects", "crowns_spike",
     "dem_filtering_surface", "edge_detection_stats", "gap_ladder_surface",
     "gap_merge_mosaic", "halo_dominance_stats", "label_components_blocks",
-    "matching_scores", "maxima_localmax", "multimodal_image_features",
-    "north_star_stats", "phash_neardup", "pip_join", "points2dsm",
-    "points2dtm_tin_plane", "points_lifecycle_stats", "raster_masks",
-    "raster_metrics_regrid", "scalar_map_ops", "std_tree_metrics",
-    "streaming_detect_resume", "terrain_plane_fit", "tiles_roundtrip_stats",
-    "tree_extraction_stats", "tree_match_oracle", "tree_metrics_spike",
-    "watershed_voronoi", "zonal_adjust_stats",
+    "matching_scores", "maxima_localmax", "north_star_stats", "pip_join",
+    "points2dsm", "points2dtm_tin_plane", "points_lifecycle_stats",
+    "raster_masks", "raster_metrics_regrid", "scalar_map_ops",
+    "std_tree_metrics", "streaming_detect_resume", "terrain_plane_fit",
+    "tiles_roundtrip_stats", "tree_extraction_stats", "tree_match_oracle",
+    "tree_metrics_spike", "watershed_voronoi", "zonal_adjust_stats",
 }
-DRIVER_37_SHA256 = ("5cbbd00e11743d4f0c979d71c0bed3ca"
-                    "57e3aae80641fedba542a515f087cd7c")
+DRIVER_35_SHA256 = ("8e283cd8d172a36e8f834687a4ca6c63"
+                    "ba3f4382be8e08e8a1ca35aaa69e589b")
 
 
-# The 28 extended gates and the 16 rows-only entries, pinned the same way.
-EXTENDED_28 = {
+# The 25 extended gates and the 16 rows-only entries, pinned the same way.
+EXTENDED_25 = {
     "aba_inference", "aba_predict", "aba_quantiles", "boxcox_transforms",
-    "caption_alignment", "cell_index_hierarchy", "clean_raster",
-    "clustered_layout_scan", "coreg_surface", "geotiff_spike_detect",
-    "height_regression", "hilbert_index", "hist_detection", "hist_stack",
-    "image_augment_stats", "image_dedup_clusters", "las_ingest_dsm",
+    "cell_index_hierarchy", "clean_raster", "clustered_layout_scan",
+    "coreg_surface", "geotiff_spike_detect", "height_regression",
+    "hilbert_index", "hist_detection", "hist_stack", "las_ingest_dsm",
     "las_lifecycle_detect", "laz_lifecycle_detect", "matching_mutual_nn",
     "overview_pyramid", "polar2projected", "raster_chull_mask",
-    "raster_local_max", "raster_xy_mask", "species_dim_join",
-    "tile_prune_roi", "vegetation_indices",
+    "raster_local_max", "raster_xy_mask", "species_dim_join", "tile_prune_roi",
+    "vegetation_indices",
 }
 ROWS_ONLY_16 = {
     "checkpointed_detect", "clouds_tree_metrics", "coregistration",
@@ -68,8 +51,8 @@ ROWS_ONLY_16 = {
     "tree_detect_halo", "tree_detect_tiles", "tree_detection_catalog_roi",
     "tree_match_greedy",
 }
-EXTENDED_65_SHA256 = ("c6e9b22f82da330898b268d79e4207d5"
-                      "f4c0c6c46c632cb28b6ca365325fc0ef")
+EXTENDED_60_SHA256 = ("c3df473ee827eeb0021255c00ce55535"
+                      "b6c3729945d4fcbc5a268f5f1185ce5d")
 # {name: SQL} of the 23 queries whose Spark side is a SQL string
 SPARK_SQL_23_SHA256 = ("5d3a2c70eefa323ff29eca53e74929ad"
                        "31379a2dccb63329e8d2cfbd4982a2b0")
@@ -92,17 +75,30 @@ def test_registry_tiers_partition_queries():
     )
 
     driver, every = oracle_sql(), oracle_sql_extended()
-    assert set(driver) == DRIVER_37 and len(DRIVER_37) == 37
-    assert _sha256(driver) == DRIVER_37_SHA256
-    assert set(every) - set(driver) == EXTENDED_28 and len(EXTENDED_28) == 28
-    assert _sha256(every) == EXTENDED_65_SHA256
+    assert set(driver) == DRIVER_35 and len(DRIVER_35) == 35
+    assert _sha256(driver) == DRIVER_35_SHA256
+    assert set(every) - set(driver) == EXTENDED_25 and len(EXTENDED_25) == 25
+    assert _sha256(every) == EXTENDED_60_SHA256
     assert set(queries()) - set(every) == ROWS_ONLY_16
-    assert len(ROWS_ONLY_16) == 16 and len(queries()) == 81
+    assert len(ROWS_ONLY_16) == 16 and len(queries()) == 76
     spark_sql = {name: q.spark for name, q in REGISTRY.items()
                  if isinstance(q.spark, str)}
     assert len(spark_sql) == 23
     assert _sha256(spark_sql) == SPARK_SQL_23_SHA256
 
+
+
+def test_sql_query_registers_only_the_views_it_names(spark):
+    """A SQL-string query registers the TABLES views its text names and
+    no other: each registration is a parquet read of one table."""
+    from lidartree_spark.queries import REGISTRY
+
+    for t in spark.catalog.listTables():
+        if t.isTemporary:
+            spark.catalog.dropTempView(t.name)
+    REGISTRY["pip_join"].run(spark, SF)
+    assert {t.name for t in spark.catalog.listTables()
+            if t.isTemporary} == {"nation", "customer"}
 
 
 _SCRATCH_RUN = """

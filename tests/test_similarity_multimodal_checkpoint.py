@@ -1,68 +1,9 @@
-"""Multimodal plumbing and checkpoint-resume tests."""
-
-from types import SimpleNamespace
+"""Checkpoint-resume tests and the PNG tile codec."""
 
 import numpy as np
 import pytest
 
-from lidartree_spark.operators.multimodal import (
-    FakeDecoder,
-    decode_image_array,
-    image_features,
-    resize_bilinear,
-    synthetic_media,
-)
 from lidartree_spark.plans.checkpoint import Pipeline, Stage
-
-
-def test_resize_bilinear_identity_and_downscale():
-    img = np.arange(16, dtype=np.float64).reshape(4, 4)[..., None]
-    same = resize_bilinear(img, 4, 4)
-    assert np.allclose(same, img)
-    down = resize_bilinear(img, 2, 2)
-    assert down.shape == (2, 2, 1)
-    assert down.mean() == pytest.approx(img.mean())
-
-
-def test_image_features_plumbing(spark):
-    media = synthetic_media(spark, 12)
-    feats = image_features(media.where("kind = 'image'"), resize_to=8).collect()
-    assert len(feats) == 4
-    for r in feats:
-        assert len(r.thumb) == 64
-        assert 0.0 <= r.mean <= 1.0 and r.std > 0
-    # deterministic across runs
-    again = image_features(media.where("kind = 'image'"), resize_to=8).collect()
-    assert sorted(r.mean for r in feats) == sorted(r.mean for r in again)
-
-
-def test_decode_has_no_fake_fallback():
-    # unknown formats (video containers included) raise instead of
-    # yielding fabricated pixels
-    for fmt in ("avi", "mp4", "h264"):
-        rec = SimpleNamespace(media_id="m2", fmt=fmt, width=8, height=8,
-                              channels=1, bytes=b"")
-        with pytest.raises(ValueError, match="unknown media fmt"):
-            decode_image_array(rec)
-
-
-def test_decode_jpeg_is_real():
-    """fmt == 'jpeg' decodes the actual payload (not a media_id-seeded
-    fake): pixels approximate the encoder's source within the lossy
-    contract."""
-    from lidartree_spark.codecs import psnr
-    from lidartree_spark.jpeg import encode_jpeg_gray
-
-    src = FakeDecoder.image("jpeg-src", 40, 24, 1)[:, :, 0]
-    u8 = np.clip(np.round(src * 255.0), 0, 255).astype(np.uint8)
-
-    class Rec:
-        media_id, fmt, width, height, channels = "other-id", "jpeg", 40, 24, 1
-        bytes = encode_jpeg_gray(u8, quality=95)
-
-    arr = decode_image_array(Rec)
-    assert arr.shape == (24, 40, 1)
-    assert psnr(u8.astype(float), arr[:, :, 0] * 255.0) >= 40.0
 
 
 def test_checkpoint_resume(spark, tmp_path):

@@ -145,24 +145,6 @@ def test_prune_and_core_crop(spark):
     assert ids == ["t0000_0000"]
 
 
-def test_detect_and_match_equals_shuffle_path(spark):
-    """Fused broadcast-join pipeline == detect_trees + match_trees."""
-    from lidartree_spark.operators.detection import detect_trees
-    from lidartree_spark.operators.matching import detect_and_match, match_trees
-    from lidartree_spark.operators.tiles import synthetic_ref_trees, synthetic_tiles
-
-    tiles = synthetic_tiles(spark, 3, 3)
-    ref = synthetic_ref_trees(spark, 3, 3)
-    shuffled = {(r.image_id, r.r, r.d): (r.h_diff, r.plan_diff)
-                for r in match_trees(ref, detect_trees(tiles)).collect()}
-    fused = {(r.image_id, r.r, r.d): (r.h_diff, r.plan_diff)
-             for r in detect_and_match(tiles, ref).collect()}
-    assert fused.keys() == shuffled.keys()
-    for k in fused:
-        assert fused[k][0] == pytest.approx(shuffled[k][0])
-        assert fused[k][1] == pytest.approx(shuffled[k][1])
-
-
 def test_geojson_roi_equals_wkt_roi():
     """parse_wkt_polygon accepts GeoJSON (string / dict / Feature /
     single-feature collection) and yields the identical ring; unsafe
