@@ -16,23 +16,33 @@ from lidartree_spark.kernels.detection import (
 )
 
 
-def watershed(seeds: np.ndarray, priority: np.ndarray) -> np.ndarray:
+def watershed(seeds: np.ndarray, priority: np.ndarray,
+              need: np.ndarray | None = None) -> np.ndarray:
     """Marker-controlled watershed by priority flooding (Meyer), 4-connectivity.
 
-    Fills EVERY pixel with the label of a seed, propagating from high priority
-    to low — the semantics of imager::watershed as used by segmentation()
-    (tree_detection.R:621-649). Ties resolved by insertion order
-    (deterministic).
+    Fills every pixel (every needed pixel, given `need`) with the label of a
+    seed, propagating from high priority to low — the semantics of
+    imager::watershed as used by segmentation() (tree_detection.R:621-649).
+    Ties resolved by insertion order (deterministic).
 
-    Hot-path implementation: the heap holds single packed ints
-    (priority-group << b | push-counter << b | flat-index) over a
+    `need` (boolean, same shape) names the pixels the caller reads: the flood
+    stops as soon as each of them has a label, and the pixels it has not
+    reached keep 0. A pixel's label is set once, when a neighbour pops, and
+    the pop order up to the stop is the full flood's, so every labelled pixel
+    carries the label the full flood gives it. Without `need` the flood stops
+    once every pixel is labelled, which skips the tail of pops that label
+    nothing.
+
+    Hot-path implementation: the heap holds single packed Python ints
+    (priority-group << 2b | push-counter << b | flat-index) over a
     sentinel-padded flat list — no tuple allocation, no bounds checks, no
-    numpy scalar access in the loop. `priority-group` is the dense rank of
-    the pixel's priority among the DISTINCT priority values (descending), so
-    pop order — and therefore every label assignment, including ties — is
-    bit-identical to the reference tuple formulation (-pri, counter), at
-    ~2.5x the speed. Verified pixel-exact against the tuple version across
-    random tiles (tests/test_kernels.py).
+    numpy scalar access in the loop, and no overflow at any tile size.
+    `priority-group` is the dense rank of the pixel's priority among the
+    DISTINCT priority values (descending), so pop order — and therefore every
+    label assignment, including ties — is bit-identical to the reference
+    tuple formulation (-pri, counter), at ~2.5x the speed. The keys are
+    unique, so the seeds are heapified at once rather than pushed one by one.
+    Verified pixel-exact against the tuple version (tests/test_kernels.py).
     """
     lab2 = np.asarray(seeds, dtype=np.int64)
     h, w = lab2.shape
@@ -42,26 +52,28 @@ def watershed(seeds: np.ndarray, priority: np.ndarray) -> np.ndarray:
     pri = np.full((h + 2, W), -np.inf)
     pri[1:-1, 1:-1] = np.nan_to_num(np.asarray(priority, dtype=np.float64),
                                     nan=-np.inf)
+    nd = np.zeros((h + 2, W), dtype=bool)
+    nd[1:-1, 1:-1] = True if need is None else np.asarray(need, dtype=bool)
     flat_lab = lab.ravel()
     p = pri.ravel()
-    n = flat_lab.size
-    nbits = max(1, int(n).bit_length())
-    if 3 * nbits > 62:  # > ~1.4M-px tiles: packed key would overflow int64
-        return _watershed_tuple(lab2, priority)
+    nd = nd.ravel()
+    left = int(np.count_nonzero(nd & (flat_lab == 0)))  # needed, unlabelled
+    nbits = max(1, int(lab.size).bit_length())
     uniq = np.unique(p)  # ascending
     group = (len(uniq) - 1) - np.searchsorted(uniq, p)  # descending dense rank
     shift1, shift2 = 2 * nbits, nbits
     mask = (1 << nbits) - 1
-    heap: list = []
-    counter = 0
     push, pop = heapq.heappush, heapq.heappop
     fl = flat_lab.tolist()
     gp = group.tolist()
+    ndl = nd.tolist()
     nb = (-W, W, -1, 1)
-    for idx in np.nonzero(flat_lab > 0)[0].tolist():
-        push(heap, (gp[idx] << shift1) | (counter << shift2) | idx)
-        counter += 1
-    while heap:
+    seed_idx = np.flatnonzero(flat_lab > 0).tolist()
+    heap = [(gp[idx] << shift1) | (k << shift2) | idx
+            for k, idx in enumerate(seed_idx)]
+    heapq.heapify(heap)
+    counter = len(heap)
+    while left and heap:
         idx = pop(heap) & mask
         l = fl[idx]
         for d in nb:
@@ -70,12 +82,14 @@ def watershed(seeds: np.ndarray, priority: np.ndarray) -> np.ndarray:
                 fl[j] = l
                 push(heap, (gp[j] << shift1) | (counter << shift2) | j)
                 counter += 1
+                if ndl[j]:
+                    left -= 1
     return np.array(fl, dtype=np.int64).reshape(h + 2, W)[1:-1, 1:-1]
 
 
 def _watershed_tuple(seeds: np.ndarray, priority: np.ndarray) -> np.ndarray:
-    """Reference formulation (tuple heap); fallback for giant tiles where
-    the packed-int key would overflow. Semantics identical."""
+    """Reference formulation (tuple heap) of the full flood; kept as the
+    oracle for watershed's parity test."""
     lab = np.asarray(seeds, dtype=np.int64).copy()
     pri = np.nan_to_num(np.asarray(priority, dtype=np.float64), nan=-np.inf)
     h, w = lab.shape
@@ -98,17 +112,19 @@ def _watershed_tuple(seeds: np.ndarray, priority: np.ndarray) -> np.ndarray:
     return lab
 
 
-def segmentation(maxi: np.ndarray, dem_nl: np.ndarray) -> np.ndarray:
+def segmentation(maxi: np.ndarray, dem_nl: np.ndarray,
+                 need: np.ndarray | None = None) -> np.ndarray:
     """Seeded watershed; seed ids = row-major order of maxima (deterministic
     replacement for the reference's `sample()` ids, tree_detection.R:631-639 —
-    label comparisons are permutation-invariant by design)."""
+    label comparisons are permutation-invariant by design). `need` is passed
+    to watershed: pixels outside it may be left at 0."""
     m = np.asarray(maxi, dtype=np.float64)
     seeds = np.zeros(m.shape, dtype=np.int64)
     ys, xs = np.nonzero(m > 0)
     seeds[ys, xs] = np.arange(1, len(ys) + 1)
     if len(ys) == 0:
         return seeds
-    return watershed(seeds, dem_nl)
+    return watershed(seeds, dem_nl, need)
 
 
 def raster_zonal_stats(segms: np.ndarray, dem_nl: np.ndarray, fun=np.max) -> np.ndarray:
@@ -188,7 +204,12 @@ def tree_segmentation(
     chm = dem_nl - t
     maxi = maxima_selection(maxi, chm, hmin=0.0, dmin=dmin, dprop=dprop)
 
-    dem_w = segmentation(maxi, dem_nl)
+    # Flood only until every pixel seg_adjust's `nl < min_value` rule keeps
+    # (NaN included) has its label. The pixels left at 0 all have a CHM below
+    # min_value, so that rule zeroes them anyway, and they cannot raise the
+    # zonal max of a segment that holds a kept pixel (its max is at least
+    # min_value); a segment with no kept pixel is zeroed whole.
+    dem_w = segmentation(maxi, dem_nl, need=~(chm < min_value))
     dem_wh = raster_zonal_stats(dem_w, chm, fun=np.max)
     dem_w = seg_adjust(dem_w, dem_wh, chm, prop=prop, min_value=min_value,
                        min_maxvalue=hmin)

@@ -324,6 +324,16 @@ def test_watershed_packed_equals_tuple_formulation():
         fast = watershed(seeds, f["non_linear_image"])
         ref = _watershed_tuple(seeds, f["non_linear_image"])
         assert (fast == ref).all()
+    # A 1 x 349,600 strip pads to 1,048,806 px, so 3 * nbits = 63: the
+    # packed Python-int key outgrows int64 and must still order exactly.
+    n = 349_600
+    assert 3 * ((1 + 2) * (n + 2)).bit_length() > 62
+    rng = np.random.default_rng(12)
+    pri = rng.integers(0, 50, (1, n)).astype(np.float64)
+    seeds = np.zeros((1, n), np.int64)
+    at = rng.choice(n, 40, replace=False)
+    seeds[0, at] = np.arange(1, 41)
+    assert (watershed(seeds, pri) == _watershed_tuple(seeds, pri)).all()
 
 
 def test_binary_disk_morphology_matches_grey():

@@ -12,7 +12,19 @@ from lidartree_spark.kernels.morphology import (
     binary_dilate_disk,
     binary_erode_disk,
 )
-from lidartree_spark.kernels.segmentation import label_components, watershed
+from lidartree_spark.kernels.detection import (
+    dem_filtering,
+    maxima_detection,
+    maxima_selection,
+)
+from lidartree_spark.kernels.segmentation import (
+    label_components,
+    raster_zonal_stats,
+    seg_adjust,
+    segmentation,
+    tree_segmentation,
+    watershed,
+)
 from lidartree_spark.kernels.stats import gini, quantile_type7
 
 _small_mask = arrays(np.bool_, (12, 16), elements=st.booleans())
@@ -73,6 +85,26 @@ def test_watershed_covers_and_preserves_seeds(pri, n_seeds):
     assert (lab > 0).all()
 
 
+@settings(max_examples=60, deadline=None)
+@given(arrays(np.float64, (9, 11),
+              elements=st.sampled_from([0.0, 1.0, 2.0, 3.0, 7.5, np.nan])),
+       arrays(np.bool_, (9, 11), elements=st.booleans()),
+       st.integers(1, 5), st.integers(0, 2**31 - 1))
+def test_watershed_need_stops_early_with_full_flood_labels(pri, need, n_seeds,
+                                                           seed):
+    """With a `need` mask every needed pixel is labelled, and every labelled
+    pixel carries the full flood's label."""
+    rng = np.random.default_rng(seed)
+    seeds = np.zeros(pri.shape, np.int64)
+    at = rng.choice(pri.size, n_seeds, replace=False)
+    seeds.ravel()[at] = np.arange(1, n_seeds + 1)
+    full = watershed(seeds, pri)
+    part = watershed(seeds, pri, need)
+    assert (part[need] > 0).all()
+    done = part > 0
+    assert (part[done] == full[done]).all()
+
+
 @settings(max_examples=40, deadline=None)
 @given(st.integers(1, 8), st.integers(1, 8), st.integers(0, 2**31 - 1))
 def test_tree_matching_is_one_to_one_and_within_radius(nr, nd, seed):
@@ -109,3 +141,109 @@ def test_gini_and_quantile_bounds(vals):
     assert q[0] == x.min() and q[-1] == x.max()
     assert (np.diff(q) >= -1e-12).all()
 
+
+_LAYERS = ("local_maxima", "segments_id", "filled_dem", "smoothed_dem")
+
+
+def _full_flood_tree_segmentation(dem, dtm=None, res=1.0, nl_filter="Closing",
+                                  nl_size=5, sigma=0.3, max_width=11.0,
+                                  hmin=5.0, dmin=0.0, dprop=0.05, prop=0.3,
+                                  min_value=2.0):
+    """tree_segmentation composed from the public kernels, with the public
+    segmentation's full flood (the composition perfbench's replay times).
+    Also returns the seeds, before the maxima clear."""
+    a = np.asarray(dem, dtype=np.float64).copy()
+    if dtm is not None:
+        t = np.asarray(dtm, dtype=np.float64)
+        a[np.isnan(a)] = t[np.isnan(a)]
+    else:
+        t = 0.0
+        a = np.nan_to_num(a, nan=0.0)
+    f = dem_filtering(a, nl_filter=nl_filter, nl_size=nl_size, sigma=sigma,
+                      res=res)
+    nl, gs = f["non_linear_image"], f["smoothed_image"]
+    chm = nl - t
+    seeds = maxima_selection(maxima_detection(gs, res=res, max_width=max_width),
+                             chm, hmin=0.0, dmin=dmin, dprop=dprop)
+    dem_w = segmentation(seeds, nl)
+    dem_wh = raster_zonal_stats(dem_w, chm, fun=np.max)
+    dem_w = seg_adjust(dem_w, dem_wh, chm, prop=prop, min_value=min_value,
+                       min_maxvalue=hmin)
+    maxi = seeds.copy()
+    maxi[dem_w == 0] = 0.0
+    return {"local_maxima": maxi, "segments_id": dem_w, "filled_dem": nl,
+            "smoothed_dem": gs}, seeds
+
+
+def _assert_same_layers(dem, dtm=None, **kw):
+    with np.errstate(invalid="ignore"):  # NaN CHM pixels in the zonal max
+        got = tree_segmentation(dem, dtm=dtm, **kw)
+        want, seeds = _full_flood_tree_segmentation(dem, dtm=dtm, **kw)
+    for k in _LAYERS:
+        assert got[k].dtype == want[k].dtype, k
+        assert np.array_equal(got[k], want[k], equal_nan=True), k
+    return got, seeds
+
+
+@st.composite
+def _tiles(draw):
+    """(dem, dtm or None): canopy heights with plateaus exactly at the 2 m
+    min_value, ground, NaN holes in the DEM and (when present) the DTM."""
+    h, w = draw(st.integers(4, 18)), draw(st.integers(4, 18))
+    height = draw(arrays(np.float64, (h, w), elements=st.one_of(
+        st.sampled_from([0.0, 0.5, 2.0, 2.0, 6.0]),
+        st.floats(0, 30, allow_nan=False, allow_infinity=False))))
+    holes = draw(arrays(np.bool_, (h, w),
+                        elements=st.sampled_from([False] * 9 + [True])))
+    dtm = None
+    if draw(st.booleans()):
+        dtm = draw(arrays(np.float64, (h, w), elements=st.one_of(
+            st.sampled_from([0.0, 1.0]), st.just(np.nan),
+            st.floats(0, 5, allow_nan=False, allow_infinity=False))))
+    dem = height + (0.0 if dtm is None else np.nan_to_num(dtm))
+    dem[holes] = np.nan
+    return dem, dtm
+
+
+@settings(max_examples=150, deadline=None)
+@given(_tiles(), st.sampled_from(["Closing", "None"]),
+       st.sampled_from([0.5, 1.0]))
+def test_tree_segmentation_equals_full_flood_composition(tile, nl_filter, res):
+    """tree_segmentation floods only until every pixel seg_adjust keeps has
+    its label; its four layers must equal those of the full flood composed
+    from the public kernels, bit for bit."""
+    dem, dtm = tile
+    _assert_same_layers(dem, dtm, res=res, nl_filter=nl_filter)
+
+
+def test_tree_segmentation_parity_edge_tiles():
+    """Zero seeds, all ground, all canopy (with and without a DTM)."""
+    ground = np.full((10, 12), 0.5)
+    ground[2:5, 3:6] = 1.9
+    canopy = np.full((10, 12), 8.0)
+    canopy[2:5, 3:6] = 15.0
+    canopy[6, 7] = np.nan
+    _, seeds = _assert_same_layers(np.full((10, 12), 5.0), dmin=100.0)
+    assert not (seeds > 0).any()
+    _assert_same_layers(ground)
+    _assert_same_layers(ground + 1.0, dtm=np.ones_like(ground))
+    got, _ = _assert_same_layers(canopy)
+    assert (got["segments_id"] > 0).all()
+    dtm = np.full(canopy.shape, 1.0)
+    dtm[0, 0] = np.nan
+    _assert_same_layers(canopy + 1.0, dtm=dtm)
+
+
+def test_tree_segmentation_parity_ringed_canopy_pixel():
+    """A 6 m pixel ringed by ground with no seed of its own is reached only
+    through ground, so the flood must run past the first ground pop to
+    label it; it keeps the label the full flood gives it."""
+    yy, xx = np.mgrid[:16, :16]
+    r = np.hypot(yy - 4, xx - 4)
+    dem = 20 * np.exp(-r ** 2 / 6.0) * (r <= 3)
+    dem[10, 4] = 6.0
+    got, seeds = _assert_same_layers(dem, res=1.0, nl_filter="None",
+                                     dmin=5.0, dprop=0.0)
+    assert seeds[10, 4] == 0
+    assert (dem[[9, 11, 10, 10], [4, 4, 3, 5]] < 2.0).all()
+    assert got["segments_id"][10, 4] > 0

@@ -3,12 +3,13 @@ dem_filtering -> maxima -> watershed -> extraction) run under raw
 `multiprocessing` — NO Spark — at a ladder of process counts.
 
 Purpose: the north rule's N -> 4N efficiency gate needs a parallelism pair
-the HARDWARE can express. This VM advertises 32 vCPUs but is ~16 physical
-cores + SMT sharing memory bandwidth; this control measures the ceiling the
-box itself imposes on embarrassingly parallel per-tile work. If raw
-multiprocessing cannot hold 0.8 efficiency from 8 -> 32 processes, no
-engine measured on that pair can either — which is why bench.py's recorded
-scaling pair is local[1] -> local[4] (see BASELINE.md and BENCH/BASELINE.md).
+the HARDWARE can express. This control measures the ceiling the box itself
+imposes on embarrassingly parallel per-tile work. The host the engine is
+benchmarked on has 4 vCPUs, so only the 1 -> 4 pair can show hardware
+scaling there; the 8, 16 and 32 levels oversubscribe it and time-slice the
+same 4 vCPUs, so their 8 -> 32 efficiency measures time-slicing, not
+hardware scaling. That is why bench.py's recorded scaling pair is local[1] ->
+local[4] (see BASELINE.md and BENCH/BASELINE.md).
 
 Usage: python tools/mp_control.py [tiles_per_proc_at_p1] ; prints one JSON
 line with per-level throughput and the 1->4 and 8->32 efficiencies.
