@@ -1,9 +1,11 @@
 """Distributed tree matching: grid-bucketed candidate pruning + per-group
 greedy assignment, plus confusion counts and height regression aggregates.
 
-Scale design (SURVEY.md §2.6): the greedy assignment is inherently sequential
-per group but groups are small (one tile/plot: ~10 trees), so the engine
-shuffles once on the group key and runs the exact reference loop in numpy.
+Scale design (SURVEY.md §2.6): the greedy assignment is sequential per group
+but groups are small (one tile/plot: ~10 trees), so the engine shuffles once
+on the group key and matches every group of an Arrow batch in one pass
+(kernels.matching.match_groups: all candidate pairs at once, one sort, one
+scan that makes the reference loop's picks in its order).
 match_trees: one hash shuffle, rows sorted by (key, side) within partitions,
 then the batched grouped map of `whole_groups`; the group key is the skew
 unit and AQE covers hot spots.
@@ -56,44 +58,39 @@ def match_trees(ref: DataFrame, det: DataFrame,
     semantics incl. tie-break; see kernels.matching). `ref` needs columns
     (key, tree_id, x, y, h); `det` needs (key, id, x, y, h).
     Output r/d are the 1-based within-group indices in input order (sorted by
-    tree_id / id for determinism), matching the reference's row indices."""
+    tree_id / id for determinism), matching the reference's row indices.
+    A NaN pair cost fails the job with a ValueError naming the group."""
 
     # whole_groups, not a cogroup: the cogroup path paid ~2-4 ms of Arrow
     # conversion per group, dominating matching time at ~10 trees/group.
-    r = ref.select(F.col(key).alias("k"), F.lit(0).alias("side"),
-                   F.col("tree_id").cast("long").alias("oid"), "x", "y", "h")
-    d = det.select(F.col(key).alias("k"), F.lit(1).alias("side"),
-                   F.col("id").cast("long").alias("oid"), "x", "y", "h")
+    r = ref.selectExpr(f"`{key}` AS k", "0 AS side",
+                       "CAST(tree_id AS BIGINT) AS oid", "x", "y", "h")
+    d = det.selectExpr(f"`{key}` AS k", "1 AS side",
+                       "CAST(id AS BIGINT) AS oid", "x", "y", "h")
     u = (r.unionByName(d)
          .repartition("k")
          .sortWithinPartitions("k", "side", "oid"))
 
     def run(batches):
-        from lidartree_spark.kernels.matching import tree_matching
-        cols = ["image_id", "r", "d", "h_diff", "plan_diff"]
+        from lidartree_spark.kernels.matching import match_groups
         for pdf, starts in whole_groups(batches, "k"):
             keys = pdf["k"].to_numpy()
-            side = pdf["side"].to_numpy()
-            xyz = pdf[["x", "y", "h"]].to_numpy()
-            out_k, out_r, out_d, out_hd, out_pd = [], [], [], [], []
-            for a, b in zip(starts[:-1], starts[1:]):
-                s = side[a:b]
-                n_ref = int((s == 0).sum())
-                if n_ref == 0 or n_ref == b - a:
-                    continue  # one side empty -> no matches (cogroup parity)
-                lr = xyz[a:a + n_ref]
-                ld = xyz[a + n_ref:b]
-                for p in tree_matching(lr, ld, delta_ground=delta_ground,
-                                       h_prec=h_prec):
-                    out_k.append(keys[a])
-                    out_r.append(int(p["r"]))
-                    out_d.append(int(p["d"]))
-                    out_hd.append(p["h_diff"])
-                    out_pd.append(p["plan_diff"])
-            if out_k:
-                yield pd.DataFrame({"image_id": out_k, "r": out_r,
-                                    "d": out_d, "h_diff": out_hd,
-                                    "plan_diff": out_pd}, columns=cols)
+            xyz = pdf[["x", "y", "h"]].to_numpy(dtype=np.float64)
+            a = starts[:-1]
+            # rows are sorted by side within a group: refs (side 0) first
+            n_ref = np.add.reduceat(
+                (pdf["side"].to_numpy() == 0).astype(np.int64), a)
+            g, ri, di = match_groups(xyz, starts, n_ref,
+                                     delta_ground=delta_ground,
+                                     h_prec=h_prec, keys=keys[a])
+            if len(g):
+                yield pd.DataFrame({
+                    "image_id": keys[ri],
+                    "r": ri - a[g] + 1,
+                    "d": di - a[g] - n_ref[g] + 1,
+                    "h_diff": xyz[di, 2] - xyz[ri, 2],
+                    "plan_diff": np.hypot(xyz[di, 0] - xyz[ri, 0],
+                                          xyz[di, 1] - xyz[ri, 1])})
 
     return u.mapInPandas(run, schema=MATCH_SCHEMA)
 

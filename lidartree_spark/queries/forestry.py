@@ -510,8 +510,8 @@ def _flagship_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Greedy tree matching (tree_match.R:47-103) with a REAL DuckDB oracle:
 # point sets are derived from `events` by identical integer/double
 # arithmetic in both engines (planted near-duplicates + spurious extras);
-# Spark runs the actual kernel (kernels/matching.tree_matching — iterative
-# global argmin with the reference's exact cost and tie-break), DuckDB
+# Spark runs the actual kernel (kernels/matching.tree_matching — the
+# reference's greedy picks with its exact cost and tie-break), DuckDB
 # re-derives the same pairing with a recursive CTE whose LATERAL step picks
 # the global minimum-cost unmatched pair each round. The constants below
 # are inlined into BOTH sides so the cost doubles are bit-identical.

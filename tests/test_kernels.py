@@ -180,6 +180,27 @@ def test_tree_matching_tiebreak():
     assert [(p["r"], p["d"]) for p in m] == [(1, 1)]
 
 
+@pytest.mark.parametrize("side, col", [(0, 2), (1, 0)])
+def test_match_groups_nan_cost_names_group(side, col):
+    """A NaN pair cost (here a NaN ref height or det x) raises ValueError
+    naming the group; R's loop stops on NA too. A group with one empty side
+    is skipped, NaN or not."""
+    from lidartree_spark.kernels.matching import match_groups
+    xyz = np.array([[0, 0, 10], [1, 0, 10],      # "a": 1 ref, 1 det
+                    [np.nan, 0, 10],             # "b": 1 ref, no det
+                    [0, 0, 10], [1, 0, 10]],     # "c": 1 ref, 1 det
+                   dtype=float)
+    starts, n_ref = [0, 2, 3, 5], [1, 1, 1]
+    keys = np.array(["a", "b", "c"], dtype=object)
+    g, ri, di = match_groups(xyz, starts, n_ref, keys=keys)
+    assert (g.tolist(), ri.tolist(), di.tolist()) == ([0, 2], [0, 3], [1, 4])
+    xyz[3 + side, col] = np.nan
+    with pytest.raises(ValueError, match="group 'c'"):
+        match_groups(xyz, starts, n_ref, keys=keys)
+    with pytest.raises(ValueError, match="NaN"):
+        tree_matching(xyz[3:4], xyz[4:5])
+
+
 def test_quantile_type7_matches_r():
     x = np.array([1.0, 2.0, 3.0, 4.0])
     # R: quantile(1:4, .75, type=7) = 3.25

@@ -6,7 +6,11 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
-from lidartree_spark.kernels.matching import tree_matching
+from lidartree_spark.kernels.matching import (
+    _tree_matching_loop,
+    match_groups,
+    tree_matching,
+)
 from lidartree_spark.kernels.morphology import (
     binary_closing_disk,
     binary_dilate_disk,
@@ -128,6 +132,52 @@ def test_tree_matching_is_one_to_one_and_within_radius(nr, nd, seed):
         d3 = ((lr[r, 0] - ld[d, 0]) ** 2 + (lr[r, 1] - ld[d, 1]) ** 2
               + (lr[r, 2] - ld[d, 2]) ** 2)
         assert d3 / rmax2 < 1.0 + 1e-9
+
+
+@st.composite
+def _match_batches(draw):
+    """A sorted batch of 1-5 groups, each 0-7 refs then 0-7 dets (empty
+    sides and single trees included). Integer-grid coordinates make costs
+    tie; uniform ones do not."""
+    grid = draw(st.booleans())
+    rng = np.random.default_rng(draw(st.integers(0, 2**31 - 1)))
+    groups = []
+    for _ in range(draw(st.integers(1, 5))):
+        nr, nd = draw(st.integers(0, 7)), draw(st.integers(0, 7))
+        if grid:
+            xy = rng.integers(0, 4, (nr + nd, 2)).astype(np.float64)
+            h = rng.integers(5, 8, nr + nd).astype(np.float64)
+        else:
+            xy = rng.uniform(0, 8, (nr + nd, 2))
+            h = rng.uniform(2, 30, nr + nd)
+        groups.append((np.column_stack([xy, h]), nr))
+    return groups
+
+
+@settings(max_examples=150, deadline=None)
+@given(_match_batches(),
+       st.sampled_from([(2.1, 0.14), (2.0, 0.0), (1.0, 0.3), (3.5, 0.05)]))
+def test_match_groups_equals_reference_loop(groups, params):
+    """match_groups over a whole batch, and tree_matching per group, make
+    the reference loop's picks in its order with bit-identical floats."""
+    dg, hp = params
+    xyz = np.concatenate([g for g, _ in groups])
+    starts = np.cumsum([0] + [len(g) for g, _ in groups])
+    n_ref = np.array([nr for _, nr in groups])
+    g, ri, di = match_groups(xyz, starts, n_ref, delta_ground=dg, h_prec=hp)
+    got = list(zip(g.tolist(), (ri - starts[g] + 1).tolist(),
+                   (di - starts[g] - n_ref[g] + 1).tolist(),
+                   (xyz[di, 2] - xyz[ri, 2]).tolist(),
+                   np.hypot(xyz[di, 0] - xyz[ri, 0],
+                            xyz[di, 1] - xyz[ri, 1]).tolist()))
+    exp = []
+    for k, (pts, nr) in enumerate(groups):
+        loop = _tree_matching_loop(pts[:nr], pts[nr:], dg, hp)
+        one = tree_matching(pts[:nr], pts[nr:], delta_ground=dg, h_prec=hp)
+        assert [(m["r"], m["d"], m["h_diff"], m["plan_diff"])
+                for m in one] == loop
+        exp += [(k,) + m for m in loop]
+    assert got == exp
 
 
 @settings(max_examples=60, deadline=None)

@@ -119,6 +119,66 @@ def test_match_trees_matches_oracle(spark):
             assert set(by_tile.get(image_id, [])) == exp, image_id
 
 
+def _match_inputs(n_groups=40, seed=11):
+    """Shuffled ref/det frames of small groups (0-6 trees a side, one side
+    empty in some) on a 1 m grid, so that pair costs tie."""
+    import pandas as pd
+    rng = np.random.default_rng(seed)
+    sides = {"ref": [], "det": []}
+    for k in range(n_groups):
+        for name in sides:
+            for _ in range(rng.integers(0, 7)):
+                x, y = rng.integers(0, 5, 2).astype(float)
+                sides[name].append((f"g{k:03d}", len(sides[name]), x, y,
+                                    float(rng.integers(5, 9))))
+    ref = pd.DataFrame(sides["ref"], columns=["image_id", "tree_id", "x",
+                                              "y", "h"])
+    det = pd.DataFrame(sides["det"], columns=["image_id", "id", "x", "y",
+                                              "h"])
+    return ref.sample(frac=1, random_state=seed), det.sample(
+        frac=1, random_state=seed + 1)
+
+
+def test_match_trees_groups_split_across_batches(spark):
+    """3- and 7-row Arrow batches split groups across batches; the rows and
+    their order equal the default batch size's, and each group's rows
+    equal tree_matching on that group."""
+    ref, det = _match_inputs()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    runs = []
+    try:
+        for batch_rows in (None, "3", "7"):
+            spark.conf.set(key, batch_rows or old)
+            runs.append(match_trees(spark.createDataFrame(ref),
+                                    spark.createDataFrame(det)).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert runs[1] == runs[0] and runs[2] == runs[0]
+    got = {}
+    for r in runs[0]:
+        got.setdefault(r.image_id, []).append(
+            (r.r, r.d, r.h_diff, r.plan_diff))
+    exp = {}
+    for k, rg in ref.sort_values("tree_id").groupby("image_id"):
+        dg = det[det.image_id == k].sort_values("id")
+        ms = tree_matching(rg[["x", "y", "h"]].to_numpy(),
+                           dg[["x", "y", "h"]].to_numpy())
+        if ms:
+            exp[k] = [(m["r"], m["d"], m["h_diff"], m["plan_diff"])
+                      for m in ms]
+    assert got == exp
+
+
+def test_match_trees_nan_cost_names_group(spark):
+    ref, det = _match_inputs()
+    k = sorted(set(ref.image_id) & set(det.image_id))[3]
+    ref.loc[ref.image_id == k, "h"] = np.nan
+    with pytest.raises(Exception, match=f"NaN pair cost in group '{k}'"):
+        match_trees(spark.createDataFrame(ref),
+                    spark.createDataFrame(det)).collect()
+
+
 def test_detection_counts_and_regression(spark):
     tiles = synthetic_tiles(spark, 2, 2)
     det = detect_trees(tiles)
